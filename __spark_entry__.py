@@ -1530,13 +1530,14 @@ def q_dsir_select(spark, sf):
 def q_multimodal_features(spark, sf):
     """Media feature extraction over synthesized binary blobs.
     Rows-only: the input is binary media generated in-session (not a
-    pre-registered view) and decoding is a pandas-UDF; the header-parse
-    algebra on real bytes is hash-oracled separately as image_audit."""
+    pre-registered view) and the hash-derived placeholder features come
+    from a pandas-UDF; the header-parse algebra on real bytes is
+    hash-oracled separately as image_audit."""
     from validr_spark.operators.multimodal import (extract_features,
                                                    make_fake_media)
 
     media = make_fake_media(spark, 200)
-    feats = extract_features(media, decoder="fake")
+    feats = extract_features(media)
     return (feats.groupBy("kind")
             .agg(F.count(F.lit(1)).alias("n"),
                  F.round(F.avg("n_bytes"), 2).alias("avg_bytes"))
@@ -2039,14 +2040,15 @@ def q_json_props_validate(spark, sf):
     scale the input has enough splits and the exchange is unnecessary —
     a 100k-row shuffle here is the honest small-file fix, not a crutch
     the real plan needs."""
+    from validr_spark.operators._barrier import once
+
     ev = _load(spark, sf, "events")
     par = spark.sparkContext.defaultParallelism * 2
-    # nondeterministic guard (PERF.md Finding 4): without it
-    # CollapseProject inlines the from_json into EVERY rule reference of
-    # k in the compiled projection and Jackson parses each row ~6 times
-    # (measured, with the repartition spread: 4.5 s → 0.67 s at sf0.1)
-    p_once = F.when(F.monotonically_increasing_id() >= 0,
-                    F.from_json("props", "k string"))
+    # barrier (PERF.md Finding 4): without it CollapseProject inlines
+    # the from_json into EVERY rule reference of k in the compiled
+    # projection and Jackson parses each row ~6 times (measured, with the
+    # repartition spread: 4.5 s → 0.67 s at sf0.1)
+    p_once = once(F.from_json("props", "k string"))
     df = (ev.repartition(par)
           .select("event_id", p_once.alias("_p"))
           .select(F.col("event_id").alias("_id"),
@@ -2275,16 +2277,14 @@ def q_knn_join(spark, sf):
 
 
 def q_sequences_oracle(spark, sf):
-    """Hash-checked CORRECTNESS row for the NORTH-STAR operator
-    (operators/sequences.sequence_violations — the two-pass codegen fast
-    path): sequences derived deterministically from documents with
-    injected defects (out-of-range token %13, negative token %17,
+    """Hash-checked CORRECTNESS row for the NORTH-STAR schema, run
+    through the generic compiler (the path the CLI, manifest runs and
+    streaming use): sequences derived deterministically from documents
+    with injected defects (out-of-range token %13, negative token %17,
     over-long list %19 — including the %247 overlap that exercises the
     fail-fast 'element error beats tokens.maxlen' rule — n_tok=0 %23,
     plus the naturally-present src18/src19 enum violations).  The DuckDB
     twin re-derives the same arrays and violation algebra in SQL."""
-    from validr_spark.operators.sequences import sequence_violations
-
     df = _load(spark, sf, "documents").filter(
         F.col("doc_id").isNotNull() & F.col("n_chars").isNotNull())
     d = F.col("doc_id")
@@ -2307,9 +2307,12 @@ def q_sequences_oracle(spark, sf):
         F.when(d % 23 == 0, F.lit(0)).otherwise(F.size(toks))
          .cast("int").alias("n_tok"),
         F.col("source"))
-    v = sequence_violations(seq, vocab=1000, maxlen=4,
-                            sources=DOC_SOURCES, id_col="doc_id",
-                            max_id_len=64, max_n_tok=4)
+    schema = T.dict(doc_id=T.str.minlen(1).maxlen(64),
+                    tokens=T.list(T.int.min(0).max(999)).minlen(1).maxlen(4),
+                    n_tok=T.int.min(1).max(4),
+                    source=T.enum(" ".join(DOC_SOURCES)))
+    v = SparkCompiler().compile(schema).apply(
+        seq, id_cols=["doc_id"]).violations()
     return v.orderBy("doc_id", "rule_id")
 
 
@@ -5724,7 +5727,7 @@ def _pipeline_oracles() -> dict[str, str]:
         "contamination": """
             WITH w AS (
               SELECT doc_id,
-                     string_split_regex(lower(trim(text)), '\s+') AS ws
+                     string_split_regex(lower(trim(text)), '\\s+') AS ws
               FROM documents),
             grams AS (
               SELECT doc_id, unnest(list_transform(

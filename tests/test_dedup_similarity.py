@@ -223,15 +223,7 @@ def test_sample_frames_counts_and_determinism(spark):
         ts, fb = again[(r["media_id"], r["frame_idx"])]
         assert ts == r["ts_ms"] == r["frame_idx"] * 1000
         assert fb == bytes(r["frame"]) and len(fb) == 32
-
-
-def test_sample_frames_real_decoder_is_documented_stub(spark):
-    import pytest as _pytest
-    df = multimodal.make_fake_media(spark, n_rows=3)
-    frames = multimodal.sample_frames(df, decoder="real")
-    with _pytest.raises(Exception, match="ffmpeg|NotImplemented"):
-        frames.collect()
-    with _pytest.raises(ValueError):
+    with pytest.raises(ValueError):
         multimodal.sample_frames(df, every_ms=0)
 
 

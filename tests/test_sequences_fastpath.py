@@ -1,36 +1,25 @@
-"""Explode-based sequence fast path ≡ generic compiler, row for row."""
+"""Sequence-table checks: element rules through the generic compiler,
+the verdict report, and the per-position / n-gram profiles."""
 
 from pyspark.sql import functions as F
 
+from validr_spark import T
 from validr_spark.compiler import SparkCompiler
 from validr_spark.datagen import (SOURCES, VOCAB, make_sequences,
-                                  make_sources_dim, sequences_schema)
+                                  make_sources_dim)
 from validr_spark.operators import sequences as seqops
 
 
-def _norm(df, id_col):
-    return sorted(
-        tuple(r) for r in
-        df.select(id_col, "rule_id", "position", "message", "value")
-        .collect())
+def _token_schema(maxlen):
+    return T.dict(
+        doc_id=T.str.minlen(1).maxlen(64),
+        tokens=T.list(T.int.min(0).max(VOCAB - 1)).minlen(1).maxlen(maxlen),
+        n_tok=T.int.min(1).max(maxlen),
+        source=T.enum(" ".join(SOURCES)),
+    )
 
 
-def test_fastpath_matches_generic_engine(spark):
-    df = make_sequences(spark, 4000, maxlen=64).withColumn(
-        "_rid", F.monotonically_increasing_id())
-
-    generic = SparkCompiler().compile(sequences_schema()).apply(
-        df, id_cols=["_rid"]).violations()
-    fast = seqops.sequence_violations(
-        df, vocab=VOCAB, maxlen=8192, sources=SOURCES, id_col="_rid",
-        max_n_tok=8192)
-
-    g, f = _norm(generic, "_rid"), _norm(fast, "_rid")
-    assert len(g) > 0
-    assert g == f
-
-
-def test_fastpath_maxlen_suppression(spark):
+def test_element_error_beats_maxlen(spark):
     # bad element at idx < maxlen suppresses the list maxlen violation;
     # bad element only at idx >= maxlen lets maxlen win
     rows = [
@@ -43,27 +32,40 @@ def test_fastpath_maxlen_suppression(spark):
         .withColumn("doc_id", F.concat(F.lit("d-"), F.col("_rid"))) \
         .withColumn("n_tok", F.lit(1)) \
         .withColumn("source", F.lit("web"))
-
-    from validr_spark import T
-    schema = T.dict(
-        doc_id=T.str.minlen(1).maxlen(64),
-        tokens=T.list(T.int.min(0).max(50256)).minlen(1).maxlen(16),
-        n_tok=T.int.min(1).max(16),
-        source=T.enum(" ".join(SOURCES)),
-    )
-    generic = SparkCompiler().compile(schema).apply(
+    v = SparkCompiler().compile(_token_schema(16)).apply(
         df, id_cols=["_rid"]).violations()
-    fast = seqops.sequence_violations(
-        df, vocab=50257, maxlen=16, sources=SOURCES, id_col="_rid",
-        max_n_tok=16)
-    assert _norm(generic, "_rid") == _norm(fast, "_rid")
     by_rid = {}
-    for r in _norm(fast, "_rid"):
+    for r in sorted(v.select("_rid", "rule_id").collect()):
         by_rid.setdefault(r[0], []).append(r[1])
-    assert by_rid[0] == ["tokens[].min"]
-    assert by_rid[1] == ["tokens.maxlen"]
-    assert by_rid[2] == ["tokens[].max"]
-    assert by_rid[3] == ["tokens.maxlen"]
+    assert by_rid == {0: ["tokens[].min"], 1: ["tokens.maxlen"],
+                      2: ["tokens[].max"], 3: ["tokens.maxlen"]}
+
+
+def test_element_violations_per_row_with_shared_and_null_ids(spark):
+    # violations are per row, not per id: two rows sharing an id, and two
+    # rows with a NULL id, each keep their own token violation
+    rows = [
+        ("d", [5, -1]),
+        ("d", [VOCAB + 1]),
+        (None, [-3]),
+        (None, [1, VOCAB]),
+        ("e", [1, 2]),
+    ]
+    df = spark.createDataFrame(rows, "doc_id string, tokens array<int>") \
+        .withColumn("n_tok", F.size("tokens")) \
+        .withColumn("source", F.lit("web"))
+    v = SparkCompiler().compile(_token_schema(16)).apply(
+        df, id_cols=["doc_id"]).violations()
+    got = sorted((tuple(r) for r in
+                  v.filter(F.col("rule_id").startswith("tokens[]"))
+                  .select("doc_id", "rule_id", "position").collect()),
+                 key=repr)
+    assert got == sorted([
+        ("d", "tokens[].min", "tokens[1]"),
+        ("d", "tokens[].max", "tokens[0]"),
+        (None, "tokens[].min", "tokens[0]"),
+        (None, "tokens[].max", "tokens[1]"),
+    ], key=repr)
 
 
 def test_sequence_report_counts(spark):

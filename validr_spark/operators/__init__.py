@@ -22,8 +22,8 @@ from .dsir import dsir_select, dsir_weights, importance_sample
 from .embedding import dim_moments, embedding_drift, embedding_hygiene
 from .encoding import (clean_text, encoding_report, encoding_scan,
                        is_nfc, nfc_audit, nfc_normalize_text)
-from .graph import (connected_components, connected_components_star,
-                    dedup_by_components, dedup_clusters)
+from .graph import (connected_components, dedup_by_components,
+                    dedup_clusters)
 from .incremental import (build_fingerprint_bloom, incremental_dedup,
                           incremental_new_rows)
 from .paradedup import dedup_paragraphs, paragraph_stats
@@ -64,8 +64,7 @@ __all__ = [
     "table_diff", "diff_summary",
     "dialog_violations", "dialog_stats",
     "preference_violations", "preference_stats", "render_dialogs",
-    "connected_components", "connected_components_star",
-    "dedup_clusters", "dedup_by_components",
+    "connected_components", "dedup_clusters", "dedup_by_components",
     "build_fingerprint_bloom", "incremental_dedup", "incremental_new_rows",
     "heavy_hitters", "key_skew_report", "suggest_salt", "salted_join",
     "bpe_pieces", "hash_tokens", "tokenize_documents",

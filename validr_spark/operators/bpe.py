@@ -57,6 +57,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as st
 
+from ._barrier import once
+
 __all__ = ["WORD_REGEX", "learn_bpe", "learn_bpe_from_counts",
            "bpe_vocab", "bpe_encode_word", "apply_bpe",
            "tokens_match_tokenizer", "mismatch_violations",
@@ -288,16 +290,14 @@ def apply_bpe(df: DataFrame, merges: list[tuple[str, str]],
     Zero shuffle — a pure map-side projection, so it composes with any
     downstream agg without moving data.  NULL text → NULL tokens.
 
-    The output column carries the nondeterministic-guarded barrier
-    (house pattern, PERF.md Finding 4): a downstream generator's
-    implicit ``size(tokens) > 0`` pruning filter — or any other second
-    reference — would otherwise make Catalyst extract the pandas UDF
-    TWICE (once for the filter, once for the projection), doubling the
-    Python work per row.
+    The output column carries the ``_barrier.once`` guard (PERF.md
+    Finding 18): a downstream generator's implicit ``size(tokens) > 0``
+    pruning filter — or any other second reference — would otherwise
+    make Catalyst extract the pandas UDF TWICE (once for the filter,
+    once for the projection), doubling the Python work per row.
     """
     toks = _tokens_expr(df.sparkSession, merges, text_col, vocab, unk_id)
-    return df.withColumn(
-        out_col, F.when(F.monotonically_increasing_id() >= 0, toks))
+    return df.withColumn(out_col, once(toks))
 
 
 def tokens_match_tokenizer(df: DataFrame,
@@ -336,14 +336,12 @@ def mismatch_violations(df: DataFrame, expected, tokens_col: str,
     :func:`unigram.tokens_match_unigram`.  The message reads
     ``tokens != <label>: expected N tokens, got M``; ``value`` is the
     0-based first-divergence index."""
-    # nondeterministic-guarded barrier (house pattern, PERF.md Finding
-    # 4): "_exp" is referenced several times below; without the guard
+    # barrier: "_exp" is referenced several times below; without it
     # CollapseProject would inline the pandas_udf call per reference
     pre = df.select(
         F.col(id_col).alias("id"),
         F.col(tokens_col).alias("_got"),
-        F.when(F.monotonically_increasing_id() >= 0, expected)
-        .alias("_exp"))
+        once(expected).alias("_exp"))
     got, exp = F.col("_got"), F.col("_exp")
     # zip_with pads the shorter side with NULLs, so a length mismatch
     # surfaces as a NULL-vs-token diff at the first extra position

@@ -34,6 +34,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from validr_spark.operators._barrier import once
 from validr_spark.operators.textstats import words_of
 
 __all__ = ["ngram_hashes", "contamination_scan", "contamination_pairs",
@@ -48,9 +49,8 @@ def ngram_hashes(df: DataFrame, text_col: str = "text",
     than n words produce no rows.  Pure codegen: split → slice/zip →
     explode → hash."""
     c = F.col(text_col)
-    # materialize words once behind a CollapseProject barrier so the
-    # split doesn't re-run per slice (same trick as textstats)
-    w_once = F.when(F.monotonically_increasing_id() >= 0, words_of(c))
+    # barrier: the split regex runs once per row, not once per slice
+    w_once = once(words_of(c))
     pre = df.select(F.col(id_col).alias("_cid"), w_once.alias("_w"))
     wcol = F.col("_w")
     sz = F.size(wcol)

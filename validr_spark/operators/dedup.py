@@ -21,6 +21,8 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
+from ._barrier import once
+
 
 def normalize_text(col):
     """Lowercase, collapse whitespace — the canonical form for dedup."""
@@ -184,12 +186,8 @@ def minhash_signatures(df: DataFrame, text_col: str = "text",
     seeds = [seed * 1000003 + i for i in range(num_hashes)]
     k = shingle_k
     s = normalize_text(F.col(text_col))
-    # optimizer barrier: without it, CollapseProject inlines the
-    # regexp_replace normalization into the post-explode substr — i.e. one
-    # regexp evaluation PER SHINGLE instead of per row (~300× the work;
-    # measured 22s → 4s at sf0.1).  A nondeterministic-guarded `when`
-    # cannot be collapsed/duplicated, so `_s` materializes once per row.
-    s_once = F.when(F.monotonically_increasing_id() >= 0, s)
+    # barrier: one normalization regexp per row, not per shingle
+    s_once = once(s)
     pre = (df.select(F.col(id_col).alias("doc"), s_once.alias("_s"))
            .filter(F.col("_s").isNotNull() & (F.char_length("_s") > 0)))
     n = F.char_length(F.col("_s"))
@@ -356,9 +354,8 @@ def minhash_signatures_portable(df: DataFrame, text_col: str = "text",
     params = portable_hash_params(num_hashes, seed)
     k = shingle_k
     s = normalize_text(F.col(text_col))
-    # optimizer barrier — see minhash_signatures: without it the
-    # normalization regex re-evaluates per shingle instead of per row.
-    s_once = F.when(F.monotonically_increasing_id() >= 0, s)
+    # barrier: one normalization regexp per row, not per shingle
+    s_once = once(s)
     pre = (df.select(F.col(id_col).alias("doc"), s_once.alias("_s"))
            .filter(F.col("_s").isNotNull() & (F.char_length("_s") > 0)))
     n = F.char_length(F.col("_s"))

@@ -3,24 +3,18 @@ turns pairwise near-dup hits (minhash/simhash/embedding buckets) into
 deduplication GROUPS, so "keep one per group" is well-defined even when
 duplicates chain (A~B, B~C but A!~C).
 
-Two algorithms:
+Algorithm: iterative min-label propagation.  Every node starts
+labelled with itself; each round, a node adopts the minimum label among
+itself and its neighbours; stop when no label changes.  Rounds = graph
+diameter — near-dup clusters are star/clique-shaped (tiny diameter), so
+2-4 rounds in practice, and each round is the cheapest possible (one
+join + one groupBy-min).  A chain-shaped graph needs ``max_iter``
+above its length; with fewer rounds the call raises instead of
+returning partial labels.  Differentially verified against a union-find oracle
+on random graphs (tests/test_graph_skew.py).
 
-* ``connected_components`` — iterative min-label propagation.  Every
-  node starts labelled with itself; each round, a node adopts the
-  minimum label among itself and its neighbours; stop when no label
-  changes.  Rounds = graph diameter — near-dup clusters are
-  star/clique-shaped (tiny diameter), so 2-4 rounds in practice, and
-  each round is the cheapest possible (one join + one groupBy-min).
-* ``connected_components_star`` — alternating large-star/small-star
-  (Kiveris et al., "Connected Components in MapReduce and Beyond",
-  SoCC'14): O(log n) rounds regardless of diameter — the scale path
-  for chain-shaped or adversarial graphs.  Differentially verified
-  against a union-find oracle on random graphs
-  (tests/test_graph_skew.py).
-
-Both checkpoint per round (`localCheckpoint` truncates the plan so
-lineage doesn't grow O(iterations)); `dedup_clusters` /
-`dedup_by_components` select via ``algorithm="label"|"star"``.
+Each round checkpoints (`localCheckpoint` truncates the plan so lineage
+doesn't grow O(iterations)).
 
 Scale: state per round is one (node, label) row per node and the edge
 list — both partitioned by node id, never collected to the driver.  The
@@ -35,94 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-__all__ = ["connected_components", "connected_components_star",
-           "dedup_clusters", "dedup_by_components"]
-
-
-def _sym(e: DataFrame) -> DataFrame:
-    """Symmetric, self-loop-free, deduped edge view (u, v)."""
-    return (e.unionByName(e.select(F.col("v").alias("u"),
-                                   F.col("u").alias("v")))
-            .filter(F.col("u") != F.col("v"))
-            .distinct())
-
-
-def connected_components_star(edges: DataFrame, src: str = "id_a",
-                              dst: str = "id_b",
-                              nodes: DataFrame | None = None,
-                              max_iter: int = 40) -> DataFrame:
-    """(id, component) via alternating large-star / small-star rounds
-    (Kiveris et al., "Connected Components in MapReduce and Beyond",
-    SoCC'14) — O(log n) rounds regardless of graph diameter, so this is
-    the scale path for chain-shaped or adversarial graphs where
-    min-label propagation (`connected_components`) would need
-    diameter-many rounds.
-
-    Each round is two grouped-min + join passes over the current edge
-    set; the edge set only shrinks toward a forest of stars (every node
-    directly attached to its component's min).  Convergence is detected
-    by an (count, hash-sum) fingerprint of the edge set.
-    """
-    e = (edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-         .filter(F.col("u") != F.col("v"))
-         .distinct().localCheckpoint(eager=True))
-
-    def star_round(e: DataFrame) -> DataFrame:
-        s = _sym(e)
-        m = (s.groupBy("u")
-             .agg(F.min("v").alias("_mn"))
-             .select("u", F.least(F.col("u"), F.col("_mn")).alias("m")))
-        j = s.join(m, "u")
-        # large-star: larger neighbours attach to the min
-        large = (j.filter(F.col("v") > F.col("u"))
-                 .select(F.col("v").alias("u"), F.col("m").alias("v")))
-        # small-star: smaller-or-equal neighbours (and u itself) attach
-        s2 = _sym(large)
-        m2 = (s2.groupBy("u")
-              .agg(F.min("v").alias("_mn"))
-              .select("u", F.least(F.col("u"), F.col("_mn")).alias("m")))
-        j2 = s2.join(m2, "u")
-        small = (j2.filter((F.col("v") <= F.col("u"))
-                           & (F.col("v") != F.col("m")))
-                 .select(F.col("v").alias("u"), F.col("m").alias("v"))
-                 .unionByName(m2.filter(F.col("u") != F.col("m"))
-                              .select("u", F.col("m").alias("v"))))
-        return (small.filter(F.col("u") != F.col("v"))
-                .distinct().localCheckpoint(eager=True))
-
-    def fingerprint(e: DataFrame):
-        r = e.agg(F.count(F.lit(1)).alias("n"),
-                  F.sum(F.xxhash64("u", "v").cast("decimal(38,0)"))
-                  .alias("h")).first()
-        return (r["n"], r["h"])
-
-    fp = fingerprint(e)
-    for _ in range(max_iter):
-        e = star_round(e)
-        nfp = fingerprint(e)
-        if nfp == fp:
-            break
-        fp = nfp
-    else:
-        raise RuntimeError(
-            f"connected_components_star did not converge in {max_iter} "
-            "rounds")
-
-    # e is now a forest of stars pointing at component minima
-    labels = (_sym(e).groupBy("u")
-              .agg(F.min("v").alias("_mn"))
-              .select(F.col("u").alias("id"),
-                      F.least(F.col("u"), F.col("_mn")).alias("component")))
-    # roots label themselves via least(); add isolated nodes
-    all_nodes = edges.select(F.col(src).alias("id")).unionByName(
-        edges.select(F.col(dst).alias("id")))
-    if nodes is not None:
-        all_nodes = all_nodes.unionByName(
-            nodes.select(F.col(nodes.columns[0]).alias("id")))
-    missing = (all_nodes.distinct()
-               .join(labels, "id", "left_anti")
-               .select("id", F.col("id").alias("component")))
-    return labels.unionByName(missing)
+__all__ = ["connected_components", "dedup_clusters", "dedup_by_components"]
 
 
 def connected_components(edges: DataFrame, src: str = "id_a",
@@ -173,16 +80,13 @@ def connected_components(edges: DataFrame, src: str = "id_a",
 
 
 def dedup_clusters(pairs: DataFrame, src: str = "id_a", dst: str = "id_b",
-                   max_iter: int = 25,
-                   algorithm: str = "label") -> DataFrame:
+                   max_iter: int = 25) -> DataFrame:
     """Duplicate groups from a near-dup pair list: (component, n_members,
     member_ids ≤16 sample).  Only nodes that appear in some pair are
     returned (isolated docs are by definition not duplicates)."""
     from pyspark.sql import Window
 
-    _cc = (connected_components_star if algorithm == "star"
-           else connected_components)
-    cc = _cc(pairs, src, dst, max_iter=max_iter)
+    cc = connected_components(pairs, src, dst, max_iter=max_iter)
     # bound the sample BEFORE aggregating: a hot component (boilerplate /
     # empty docs — exactly what dedup finds) would otherwise collect its
     # entire id set into one reducer buffer before the slice (same fix
@@ -201,7 +105,6 @@ def dedup_by_components(df: DataFrame, pairs: DataFrame,
                         id_col: str = "doc_id",
                         src: str = "id_a", dst: str = "id_b",
                         max_iter: int = 25,
-                        algorithm: str = "label",
                         keep_by=None) -> DataFrame:
     """Keep one row per duplicate component, all non-duplicate rows
     untouched.
@@ -219,9 +122,7 @@ def dedup_by_components(df: DataFrame, pairs: DataFrame,
     window partitions are tiny."""
     from pyspark.sql import Window
 
-    _cc = (connected_components_star if algorithm == "star"
-           else connected_components)
-    cc = _cc(pairs, src, dst, max_iter=max_iter)
+    cc = connected_components(pairs, src, dst, max_iter=max_iter)
     if keep_by is None:
         keep = cc.select(F.col("id").alias("_cc_id"),
                          (F.col("id") == F.col("component")).alias("_keep"))

@@ -1,11 +1,12 @@
 """Multimodal columns: image/audio/video as opaque binary + typed metadata.
 
 The Spark-side plumbing — schema, Arrow batch shape, mapInPandas signatures,
-size-aware repartitioning — is real and tested.  The actual decoders are
-STUBS: this container has no image/audio libraries, so ``decoder='fake'``
-produces deterministic hash-derived features (stable across runs/executors)
-and ``decoder='real'`` raises NotImplementedError with the integration point
-documented.
+size-aware repartitioning — is real and tested, and so is the codegen
+header parse (``image_dimensions`` / ``image_audit``).  No media is
+decoded: this package ships no image/audio/video codec, so the features
+of ``extract_features`` and the frames of ``sample_frames`` are
+deterministic hash-derived placeholders (stable across runs/executors),
+not decoded content.
 """
 
 from __future__ import annotations
@@ -49,24 +50,18 @@ def _fake_feature(buf: bytes, dim: int = FEATURE_DIM) -> np.ndarray:
     return v / n if n else v
 
 
-def extract_features(df: DataFrame, decoder: str = "fake",
-                     batch_target_bytes: int = 64 << 20) -> DataFrame:
-    """Decode/feature-extract media rows via mapInPandas (Arrow batches).
+def extract_features(df: DataFrame) -> DataFrame:
+    """Per-row feature vectors via mapInPandas (Arrow batches).
 
+    The features are hash-derived placeholders (``_fake_feature``: blake2b
+    of the payload as a unit vector), not a decoded-media embedding.
     Binary payloads skew partition sizes; callers should repartition by a
     size-aware key first (see ``repartition_by_size``) so one huge video
     doesn't stall a task.
     """
-    if decoder not in ("fake", "real"):
-        raise ValueError("decoder must be 'fake' or 'real'")
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            if decoder == "real":
-                raise NotImplementedError(
-                    "real decoders (PIL/ffmpeg/torchaudio) are not available "
-                    "in this environment; integrate here: decode "
-                    "pdf['content'] per row, then batch the model forward")
             feats = [
                 _fake_feature(buf).tolist() if buf is not None else None
                 for buf in pdf["content"]
@@ -143,35 +138,26 @@ _FRAMES_SCHEMA = (
 
 
 def sample_frames(df: DataFrame, every_ms: int = 1000,
-                  max_frames: int = 64, decoder: str = "fake") -> DataFrame:
+                  max_frames: int = 64) -> DataFrame:
     """Frame-sampling plumbing for video rows: one OUTPUT row per sampled
     frame at ``every_ms`` intervals (capped at ``max_frames`` per video —
     never let one long video explode a task's output).
 
     The Spark shape is the real thing — row-expanding mapInPandas whose
     Arrow output batch is larger than its input batch, frame timestamps
-    from the typed metadata, deterministic per-(media_id, frame_idx)
-    bytes.  The decode itself is a STUB (no ffmpeg in this container):
-    ``decoder='fake'`` emits hash-derived bytes; ``decoder='real'``
-    raises with the integration point documented.
+    from the typed metadata.  The frame bytes are hash-derived
+    placeholders (blake2b of ``media_id/frame_idx``), not decoded video.
 
     Non-video rows and NULL/zero durations produce no frames (a sampler
     must not invent frames for stills).
     """
     if every_ms <= 0:
         raise ValueError("every_ms must be positive")
-    if decoder not in ("fake", "real"):
-        raise ValueError("decoder must be 'fake' or 'real'")
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import hashlib
 
         for pdf in batches:
-            if decoder == "real":
-                raise NotImplementedError(
-                    "real frame extraction (ffmpeg/pyav) is unavailable in "
-                    "this environment; integrate here: seek pdf['content'] "
-                    "to ts_ms per row and decode one frame")
             ids, idxs, tss, frames = [], [], [], []
             for mid, kind, dur in zip(pdf["media_id"], pdf["kind"],
                                       pdf["meta"].map(
@@ -228,11 +214,11 @@ def image_dimensions(df: DataFrame, content_col: str = "content"):
       (height's sign bit = top-down flag, abs() taken).
 
     JPEG dimensions live in a variable-position SOF marker — detected
-    (``format='jpeg'``) but not parsed here; route JPEGs to the decoder
-    UDF if their dimensions gate the pipeline.  Unknown magic or a
-    header shorter than the needed offsets yields NULLs — feed that into
-    the violations path (an "image" whose bytes have no image magic is a
-    corrupt row, and this is how it surfaces).
+    (``format='jpeg'``) but not parsed here; :func:`jpeg_dimensions`
+    scans for it.  Unknown magic or a header shorter than the needed
+    offsets yields NULLs — feed that into the violations path (an
+    "image" whose bytes have no image magic is a corrupt row, and this
+    is how it surfaces).
     """
     c = F.col(content_col)
     n = F.octet_length(c)
@@ -321,7 +307,7 @@ def wav_properties(df: DataFrame, content_col: str = "content"):
     """struct<sample_rate, channels, bits_per_sample, duration_ms> parsed
     from a CANONICAL WAV header (RIFF/WAVE with the fmt chunk first at
     byte 13 — how virtually every encoder writes it); non-canonical
-    chunk orders yield NULLs and belong to the decoder path.  Same
+    chunk orders yield NULLs (they need a full RIFF chunk walk).  Same
     codegen hex/conv arithmetic as :func:`image_dimensions`; duration
     comes from the data-chunk size at byte 41 over the byte rate.
     """

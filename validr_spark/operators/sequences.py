@@ -1,26 +1,23 @@
-"""Scale-tuned validation pipeline for the tokenized-sequence table
+"""Sequence-table operators for the tokenized-sequence table
 (doc_id, tokens:array<int>, n_tok, source) — the north-star workload.
 
-Why this exists: the generic compiler validates array elements with
-Catalyst lambda HOFs (`transform`/`exists`), which evaluate *interpreted*
-(CodegenFallback) at ~20 µs/element — 10-30× slower than whole-stage
-codegen.  For 10^12 sequences × 10^2..10^4 tokens that is the difference
-between hours and weeks.  This module expresses the SAME checks as two
-fully-codegen'd passes:
+Per-row violations come from the generic compiler:
+``SparkCompiler().compile(T.dict(..., tokens=T.list(T.int.min(0)
+.max(vocab - 1)).maxlen(maxlen), ...)).apply(df, id_cols=[...])``.  Its
+``_list_core`` screens each whole array with codegen'd ``array_min`` /
+``array_max`` first, so the interpreted per-element lambda (PERF.md
+Finding 1) runs only on the rows the screen flags.
 
-1. **row-level pass** — the compiled plan for the scalar fields plus the
-   list *length* rules (``T.list.minlen/maxlen`` without an element schema
-   compiles to plain CASE expressions: no HOF anywhere);
-2. **token-level pass** — ``posexplode`` → ``filter(bad)`` →
-   ``groupBy(id).min(struct(idx, …))``: whole-stage codegen end to end,
-   and only the ~violation-rate fraction of tokens reaches the shuffle
-   (map-side partial min).
+This module adds what the compiler does not cover:
 
-The union reproduces the generic engine's violations EXACTLY (same
-rule_id / position / message / value strings, same fail-fast-per-field
-choice, including the "element error at index < maxlen beats the maxlen
-violation" rule) — asserted by tests/test_sequences_fastpath.py against
-``SparkCompiler().compile(schema).apply(df)``.
+* ``rowlevel_schema`` + ``build_report_queries`` / ``sequence_report`` —
+  the aggregate verdict (per-source rows, tokens, violations, orphans,
+  n_tok consistency, key duplication) from two codegen scans and one
+  uniqueness shuffle, counting bad tokens with an explode pipeline
+  instead of per-row violation structs;
+* ``frame_violations`` — BOS/EOS/padding framing checks;
+* ``position_token_stats`` / ``token_ngram_stats`` — template and
+  degenerate-repetition profiles.
 """
 
 from __future__ import annotations
@@ -42,61 +39,6 @@ def rowlevel_schema(vocab: int, maxlen: int, sources: list[str],
         n_tok=T.int.min(1).max(max_n_tok if max_n_tok is not None else maxlen),
         source=T.enum(" ".join(sources)),
     )
-
-
-def token_range_violations(df: DataFrame, id_col: str, vocab: int,
-                           maxlen: int,
-                           tokens_col: str = "tokens") -> DataFrame:
-    """First out-of-range/null token per row, as a violations row with the
-    generic engine's exact formatting (rule ids ``tokens[].required/min/
-    max``, position ``tokens[i]``).
-
-    Only tokens at index < maxlen are considered: the generic chain lets
-    the list's own maxlen violation win for later indices.
-    """
-    x, i = F.col("_x"), F.col("_i")
-    bad = (df.select(F.col(id_col),
-                     F.posexplode(tokens_col).alias("_i", "_x"))
-           .filter((i < maxlen)
-                   & (x.isNull() | (x < 0) | (x >= vocab))))
-    first = bad.groupBy(id_col).agg(
-        F.min(F.struct(F.col("_i"), F.col("_x"))).alias("_f"))
-    fi = F.col("_f._i")
-    fx = F.col("_f._x")
-    hi = vocab - 1
-    return first.select(
-        F.col(id_col),
-        F.when(fx.isNull(), F.lit("tokens[].required"))
-         .when(fx < 0, F.lit("tokens[].min"))
-         .otherwise(F.lit("tokens[].max")).alias("rule_id"),
-        F.concat(F.lit("tokens["), fi.cast("string"), F.lit("]"))
-         .alias("position"),
-        F.when(fx.isNull(), F.lit("required"))
-         .when(fx < 0, F.lit("value must >= 0"))
-         .otherwise(F.lit(f"value must <= {hi}")).alias("message"),
-        fx.cast("string").alias("value"),
-    )
-
-
-def sequence_violations(df: DataFrame, *, vocab: int, maxlen: int = 8192,
-                        sources: list[str], id_col: str,
-                        max_id_len: int = 64,
-                        max_n_tok: int | None = None) -> DataFrame:
-    """All violations for the sequence schema, two codegen passes, exact
-    parity with ``SparkCompiler().compile(full_schema).apply(df)``."""
-    plan = SparkCompiler().compile(
-        rowlevel_schema(vocab, maxlen, sources, max_id_len, max_n_tok))
-    row_v = plan.apply(df, id_cols=[id_col]).violations()
-    tok_v = token_range_violations(df, id_col, vocab, maxlen)
-
-    # fail-fast parity: when an element error (idx < maxlen) exists, the
-    # generic chain SUPPRESSES the tokens.maxlen violation for that row.
-    # Both sides of this anti-join are violation rows (~violation-rate),
-    # not data rows.
-    row_keep = row_v.filter(F.col("rule_id") != "tokens.maxlen")
-    row_maxlen = (row_v.filter(F.col("rule_id") == "tokens.maxlen")
-                  .join(tok_v.select(id_col), on=id_col, how="left_anti"))
-    return row_keep.unionByName(row_maxlen).unionByName(tok_v)
 
 
 def build_report_queries(df: DataFrame, dim: DataFrame, *, vocab: int,
@@ -228,8 +170,7 @@ def frame_violations(df: DataFrame, *, id_col: str = "doc_id",
     """Token-frame integrity checks for pre-tokenized sequences: BOS/EOS
     placement, trailing-only padding, and non-empty content — the framing
     invariants a tokenizer + packer must leave behind, which plain
-    range/length rules (rowlevel_schema / token_range_violations) cannot
-    see.
+    range/length rules cannot see.
 
     Checks (each emitted as one violation row, engine formatting —
     ``(id, rule_id, position, message, value)``):
@@ -264,9 +205,8 @@ def frame_violations(df: DataFrame, *, id_col: str = "doc_id",
     adversarial interior-pad corpus (PERF.md Finding 11).
 
     Null ELEMENTS are skipped by the slow path's ``concat_ws`` rendering
-    and force the row onto that path — run this alongside
-    ``token_range_violations``, which reports them as
-    ``tokens[].required``.  Positions are indices in the null-skipped
+    and force the row onto that path — run this alongside the compiled
+    schema's element rule, which reports them as ``tokens[].required``.  Positions are indices in the null-skipped
     rendering (identical to array indices when no element is null).
     Rows with a NULL array are skipped entirely (that is the schema's
     ``required`` rule).

@@ -32,6 +32,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from validr_spark.operators._barrier import once
 from validr_spark.operators.textstats import words_of
 
 __all__ = ["positioned_ngrams", "duplicate_spans", "cut_duplicate_spans",
@@ -45,9 +46,8 @@ def positioned_ngrams(df: DataFrame, text_col: str = "text",
     lowercased word window.  Docs shorter than n words produce no rows.
     Pure codegen: split → slice/zip → posexplode → hash."""
     c = F.col(text_col)
-    # materialize words once behind a CollapseProject barrier so the split
-    # regex doesn't re-run per slice (same trick as textstats/contamination)
-    w_once = F.when(F.monotonically_increasing_id() >= 0, words_of(c))
+    # barrier: the split regex runs once per row, not once per slice
+    w_once = once(words_of(c))
     pre = df.select(F.col(id_col).alias("_sid"), w_once.alias("_w"))
     wcol = F.col("_w")
     sz = F.size(wcol)

@@ -10,6 +10,8 @@ import re
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ._barrier import once
+
 # minimal stopword profiles (n-gram heuristic): enough to separate the
 # testdata languages; extend per-deployment.
 STOPWORDS = {
@@ -152,7 +154,7 @@ def quality_filter(df: DataFrame, text_col: str = "text",
     Returns (id, keep, reasons) — join back on id_col (or re-apply; it's
     deterministic) to carry the text."""
     c = F.col(text_col)
-    w_once = F.when(F.monotonically_increasing_id() >= 0, words_of(c))
+    w_once = once(words_of(c))
     pre = df.select(F.col(id_col), c.alias("_t"), w_once.alias("_w"))
     reasons = _quality_reasons(
         F.col("_t"), F.col("_w"), min_words=min_words, max_words=max_words,
@@ -208,7 +210,7 @@ def quality_annotate(df: DataFrame, text_col: str = "text", *,
     every NULL-id row (NULL never equi-joins) and multiplies duplicated
     ids; this form needs no id at all and adds zero shuffle."""
     c = F.col(text_col)
-    w_once = F.when(F.monotonically_increasing_id() >= 0, words_of(c))
+    w_once = once(words_of(c))
     pre = df.withColumn("_w", w_once)
     reasons = _quality_reasons(
         c, F.col("_w"), min_words=min_words, max_words=max_words,
@@ -237,7 +239,7 @@ def text_profile(df: DataFrame, text_col: str = "text",
     CollapseProject inlines the split regex into every downstream field
     and it executes ~10× per row)."""
     c = F.col(text_col)
-    w_once = F.when(F.monotonically_increasing_id() >= 0, words_of(c))
+    w_once = once(words_of(c))
     pre = df.select(F.col(id_col), c.alias("_t"), w_once.alias("_w"))
     t, w = F.col("_t"), F.col("_w")
     return pre.select(
@@ -481,7 +483,7 @@ def top_ngram_stats(df: DataFrame, text_col: str = "text",
     carry = list(carry_cols or [])
     c = F.col(text_col)
     # words materialized once (CollapseProject barrier — see text_profile)
-    w_once = F.when(F.monotonically_increasing_id() >= 0, words_of(c))
+    w_once = once(words_of(c))
     pre = df.select(F.col(id_col), *carry, w_once.alias("_w"))
     wcol = F.col("_w")
     sz = F.size(wcol)
@@ -523,8 +525,7 @@ def collocations(df: DataFrame, text_col: str = "text",
     """
     c = F.col(text_col)
     pre = (df.filter(c.isNotNull() & (F.trim(c) != ""))
-           .select(F.when(F.monotonically_increasing_id() >= 0,
-                          words_of(c)).alias("_w")))
+           .select(once(words_of(c)).alias("_w")))
     wcol = F.col("_w")
     sz = F.size(wcol)
     uni = (pre.select(F.explode(wcol).alias("w"))

@@ -29,6 +29,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ._barrier import once
+
 __all__ = ["PIECE_REGEX", "bpe_pieces", "hash_tokens",
            "tokenize_documents", "build_vocab", "tokenize_with_vocab",
            "vocab_coverage"]
@@ -64,11 +66,9 @@ def tokenize_documents(df: DataFrame, text_col: str = "text",
     token ids are in ``[0, vocab)``, so ``T.list(T.int.min(0).
     max(vocab-1))`` validates clean — both asserted in tests.
     """
-    # nondeterministic-guarded barrier (same pattern as textstats):
-    # without it CollapseProject inlines the transform into size() and the
-    # per-element hashing runs twice per row (PERF.md Finding 4)
-    toks_once = F.when(F.monotonically_increasing_id() >= 0,
-                       hash_tokens(F.col(text_col), vocab, seed))
+    # barrier: otherwise the transform is inlined into size() and the
+    # per-element hashing runs twice per row
+    toks_once = once(hash_tokens(F.col(text_col), vocab, seed))
     cols = [F.col(id_col).cast("string").alias("doc_id"),
             toks_once.alias("tokens")]
     if source_col is not None:
@@ -170,7 +170,7 @@ def tokenize_with_vocab(df: DataFrame, vocab_df: DataFrame,
     toks = F.transform(F.col("_sorted"), lambda s: s["_id"])
     out = assembled.select(
         "doc_id",
-        F.when(F.monotonically_increasing_id() >= 0, toks).alias("tokens"),
+        once(toks).alias("tokens"),
         *(["source"] if source_col is not None else []))
     return out.select("doc_id", "tokens",
                       F.size("tokens").alias("n_tok"),

@@ -35,6 +35,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as st
 
+from ._barrier import once
 from .bpe import WORD_REGEX
 
 __all__ = ["train_unigram_from_counts", "train_unigram",
@@ -244,8 +245,7 @@ def apply_unigram(df: DataFrame, vocab_logp: dict[str, float],
     shuffle."""
     toks = _unigram_tokens_expr(df.sparkSession, vocab_logp, text_col,
                                 max_piece_len, ids, unk_id)
-    return df.withColumn(
-        out_col, F.when(F.monotonically_increasing_id() >= 0, toks))
+    return df.withColumn(out_col, once(toks))
 
 
 def tokens_match_unigram(df: DataFrame, vocab_logp: dict[str, float],
