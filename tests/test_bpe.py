@@ -115,6 +115,19 @@ def test_merges_txt_round_trip(tmp_path):
         load_merges(str(bad))
 
 
+def test_load_merges_keeps_hash_symbol_merges(tmp_path):
+    from validr_spark.operators.bpe import load_merges, save_merges
+
+    merges = [("#", "#"), ("#", "a"), ("##", "a")]
+    p = str(tmp_path / "merges.txt")
+    save_merges(merges, p)
+    assert load_merges(p) == merges
+    # no header: a first line starting with '#' is a merge too
+    bare = tmp_path / "bare.txt"
+    bare.write_text("# #\n\n#a b\n")
+    assert load_merges(str(bare)) == [("#", "#"), ("#a", "b")]
+
+
 def test_bpe_vocab_ids_are_alphabet_then_merge_order():
     merges = [("a", "b"), ("ab", "c")]
     v = bpe_vocab(merges, ["c", "a", "b"])

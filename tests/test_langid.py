@@ -99,6 +99,21 @@ def test_scoring_pipeline_is_jvm_only(spark, model):
     assert_no_python(lang_predict(lang_scores(df, model)))
 
 
+def test_top_k_keeps_corpus_vocabulary(spark):
+    # top_k=1 keeps ab:2 (lang a) and bc:2 (lang b); V stays the 4
+    # corpus grams, tot = 2 kept grams each, denom = 2 + 4 = 6
+    df = spark.createDataFrame([("abab", "a"), ("bcbc", "b")],
+                               "text string, lang string")
+    m = train_lang_model(df, n=2, alpha=1.0, top_k=1)
+    vals = {(r["lang"], r["gram"]): r["logp"]
+            for r in m.ngrams.collect()}
+    assert set(vals) == {("a", "ab"), ("b", "bc")}
+    assert vals[("a", "ab")] == pytest.approx(math.log(3 / 6), rel=1e-12)
+    floors = {r["lang"]: r["floor_logp"] for r in m.floors.collect()}
+    assert floors == pytest.approx({"a": math.log(1 / 6),
+                                    "b": math.log(1 / 6)}, rel=1e-12)
+
+
 def test_model_round_to_pins_values(spark):
     df = spark.createDataFrame([("abab", "a"), ("bcbc", "b")],
                                "text string, lang string")

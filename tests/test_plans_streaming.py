@@ -309,6 +309,33 @@ def test_stream_violations_availablenow(spark, tmp_path):
     assert all(r["rule_id"] == "n_tok.max" for r in got)
 
 
+def test_stream_violations_pandas_udf_availablenow(spark, tmp_path):
+    """An email field puts a pandas UDF behind the view's projection
+    barrier; streaming must accept that barrier (it rejects
+    monotonically_increasing_id) and return the batch rows."""
+    from validr_spark.streaming import stream_violations
+
+    data = str(tmp_path / "in_email")
+    rows = [(f"d-{i}", "no-at-sign" if i % 10 == 0 else f"u{i}@example.com")
+            for i in range(50)] + [("d-null", None)]
+    df = spark.createDataFrame(rows, "doc_id string, email string")
+    df.write.parquet(data)
+
+    plan = SparkCompiler().compile(T.dict(email=T.email))
+    sdf = spark.readStream.schema(df.schema).parquet(data)
+    viol = stream_violations(plan, sdf, id_cols=["doc_id"])
+    q = (viol.writeStream.format("memory").queryName("viol_email_test")
+         .outputMode("append").trigger(availableNow=True).start())
+    q.awaitTermination(120)
+    assert q.exception() is None
+    got = sorted(spark.sql("SELECT * FROM viol_email_test").collect())
+    want = sorted(plan.apply(spark.read.parquet(data), id_cols=["doc_id"])
+                  .violations().collect())
+    assert len(got) == 6
+    assert got == want
+    assert {r["rule_id"] for r in got} == {"email.email", "email.required"}
+
+
 def test_windowed_verdicts_stream(spark, tmp_path):
     from validr_spark.streaming import windowed_verdicts
 

@@ -204,6 +204,39 @@ def test_network():
     assert _(T.uuid.version(4))(u) == u
 
 
+def test_email_domain_cache_matches_uncached():
+    """The memoized IDNA domain step returns what the bare function
+    returns, and an invalid domain raises the same message every call
+    (raises are not cached)."""
+    from validr_spark.pyvalidate import _email_domain_part
+
+    def outcome(fn, domain):
+        try:
+            return "ok", fn(domain)
+        except Exception as ex:
+            return type(ex).__name__, str(ex)
+
+    domains = [
+        "example.com", "EXAMPLE.COM", "Mail.Example.Org",      # ASCII case
+        "例え.テスト", "BÜCHER.de", "xn--bcher-kva.de",          # IDNA
+        "xn--fsqu00a.xn--3lr804guic", "xn--zz.com",
+        "example.com.", ".example.com", "a..b.com", ".", "",   # dots, empty
+        "a" * 63 + ".com", "a" * 64 + ".com",                  # label length
+        ".".join(["a" * 60] * 4) + ".com",                     # 249 chars
+        ".".join(["a" * 60] * 5) + ".com",                     # over 255
+        "localhost", "example.123", "exa mple.com", "-a.com",
+    ]
+    bare = _email_domain_part.__wrapped__
+    seen = set()
+    for d in domains:
+        want = outcome(bare, d)
+        seen.add(want[0] == "ok")
+        assert outcome(_email_domain_part, d) == want, d
+        assert outcome(_email_domain_part, d) == want, d   # repeat call
+    assert seen == {True, False}
+    assert _email_domain_part.cache_info().maxsize is not None
+
+
 def test_regex_validators():
     assert _(T.phone)("13387654321") == "13387654321"
     assert _(T.phone)("+8613387654321") == "+8613387654321"

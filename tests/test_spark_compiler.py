@@ -307,6 +307,44 @@ def test_verdicts(spark):
     assert verd["p2"]["verdict"] == "pass"
 
 
+def test_result_views_one_python_pass(spark):
+    """violations / clean / bad_rows each run the pandas UDFs once per
+    row, and return the rows of their unguarded forms, which filter
+    below the projection and so run the UDFs a second time."""
+    from validr_spark.testing import physical_plan, python_passes
+
+    rows = [(0, 0, "a@example.com", "2016-07-09T00:00:00.123Z"),
+            (1, 1, "Bob@EXAMPLE.ORG", "2016-07-09T00:00:00.000000Z"),
+            (2, 2, "not-an-email", "2016-07-09T00:00:00.000000Z"),
+            (3, 3, "x@b.com", "2016-13-09T00:00:00.000000Z"),
+            (4, -4, None, None),
+            (5, 5, "", "07-09"),
+            (6, None, "中文@例え.テスト", "2016-07-09T00:00:00Z"),
+            (7, 7, "a@b..com", ""),
+            (8, 8, "c@xn--fsqu00a.xn--3lr804guic", "2016-07-09T00:00:00Z")]
+    df = spark.createDataFrame(
+        rows, "rid int, uid int, email string, ts string")
+    res = (SparkCompiler()
+           .compile(T.dict(uid=T.int.min(0), email=T.email, ts=T.datetime))
+           .apply(df, id_cols=["rid"]))
+    vc = F.col("_violations")
+    bad = res.df.filter(F.size(vc) > 0)
+    unguarded = {
+        "violations": bad.select("rid", F.explode(vc).alias("v"))
+                         .select("rid", "v.*"),
+        "clean": res.df.filter(F.size(vc) == 0).drop("_violations"),
+        "bad_rows": bad.withColumn("n_violations", F.size(vc))
+                       .drop("_violations"),
+    }
+    for name, want in unguarded.items():
+        got = getattr(res, name)()
+        assert python_passes(got) == 1, physical_plan(got)
+        assert python_passes(want) == 2, physical_plan(want)
+        got_rows = sorted(got.collect(), key=str)
+        assert got_rows and got_rows == sorted(want.collect(), key=str)
+        assert got.columns == want.columns
+
+
 def test_int_list_over_boolean_array(spark):
     """Regression: the whole-array int fast path must compile for
     array<boolean> input (BooleanType is integral-accepted); previously

@@ -429,8 +429,10 @@ class SparkCompiler:
                     F.transform(col, lambda x: inner.invalid(x)),
                     F.lit(True))                      # 1-based, 0 = none
                 if inner.array_invalid is not None:
-                    # cheap whole-array screen first: the interpreted
-                    # per-element HOF runs only on flagged (~bad-rate) rows
+                    # whole-array screen first: the per-element HOF runs
+                    # only on flagged (~bad-rate) rows.  The screen's
+                    # array_compact null check is itself an interpreted
+                    # lambda on every element (PERF.md Finding 1).
                     pos1 = F.when(inner.array_invalid(col), hof_pos1) \
                         .otherwise(F.lit(0))
                 else:
@@ -778,9 +780,17 @@ class ValidationResult:
         self.id_cols = id_cols
         self._vc = violation_col
 
+    def _checked(self) -> DataFrame:
+        """``df`` with ``_violations`` behind the projection barrier, so
+        a filter on it stays above the projection that computes it and
+        the pandas UDFs inside run once per row (PERF.md Finding 19)."""
+        from .operators._barrier import once
+
+        return self.df.withColumn(self._vc, once(F.col(self._vc)))
+
     def clean(self) -> DataFrame:
         """Rows that passed every check, with coerced columns."""
-        return (self.df.filter(F.size(F.col(self._vc)) == 0)
+        return (self._checked().filter(F.size(F.col(self._vc)) == 0)
                 .drop(self._vc))
 
     def bad_rows(self) -> DataFrame:
@@ -790,17 +800,18 @@ class ValidationResult:
         re-scanning the full input for its failures.  Complement of
         :meth:`clean`; same single-projection plan, only the filter
         predicate flips."""
-        return (self.df.filter(F.size(F.col(self._vc)) > 0)
+        return (self._checked().filter(F.size(F.col(self._vc)) > 0)
                 .withColumn("n_violations", F.size(F.col(self._vc)))
                 .drop(self._vc))
 
     def violations(self) -> DataFrame:
         """One row per violation: (id..., rule_id, position, message, value).
 
-        Filters before exploding so the explode touches only failing rows
-        (~violation-rate × data, not the full table).
+        Every row's violations are computed in one projection; the
+        ``size > 0`` filter above it keeps passing rows out of the
+        explode.
         """
-        v = (self.df.filter(F.size(F.col(self._vc)) > 0)
+        v = (self._checked().filter(F.size(F.col(self._vc)) > 0)
              .select(*self.id_cols, F.explode(F.col(self._vc)).alias("v")))
         return v.select(*self.id_cols, "v.rule_id", "v.position",
                         "v.message", "v.value")

@@ -1,4 +1,4 @@
-"""The projection barrier the operators share (PERF.md Findings 4, 18)."""
+"""The projection barrier the operators share (PERF.md Findings 4, 18, 19)."""
 
 from __future__ import annotations
 
@@ -16,9 +16,18 @@ def once(col) -> Column:
     shingle, 22 s → 4 s at sf0.1 with this guard), and a pandas UDF that
     feeds a generator is extracted a second time for the generator's
     implicit ``size > 0`` filter (Finding 18: two ``ArrowEvalPython``
-    passes).  Branching on a nondeterministic expression blocks both,
-    because the optimizer never duplicates nondeterministic expressions.
-    The branch is always taken; the only cost is losing projection
-    collapse for this one column.
+    passes).  PushDownPredicates likewise copies a filter on a
+    UDF-derived column below the projection that computes it (Finding
+    19: ``ValidationResult.violations()`` ran the pandas UDFs twice).
+    Branching on a nondeterministic expression blocks all three, because
+    the optimizer neither duplicates nondeterministic expressions nor
+    pushes a filter through a projection that holds one.  The branch is
+    always taken; the only cost is losing projection collapse for this
+    one column.
+
+    The branch reads ``spark_partition_id()``, not
+    ``monotonically_increasing_id()``: streaming queries reject the
+    latter, and the result views of a streaming validation go through
+    this barrier too.
     """
-    return F.when(F.monotonically_increasing_id() >= 0, col)
+    return F.when(F.spark_partition_id() >= 0, col)

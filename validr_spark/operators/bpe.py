@@ -174,13 +174,14 @@ def load_merges(path: str) -> list[tuple[str, str]]:
     """Read a GPT-2/huggingface-format ``merges.txt`` merge table —
     the interop point for validating corpora against a REAL pretrained
     tokenizer's merges (``apply_bpe(df, load_merges("merges.txt"))``).
-    ``#``-prefixed header lines and blank lines are skipped; each
-    remaining line must be exactly two space-separated symbols."""
+    A first-line ``#version`` header and blank lines are skipped; each
+    remaining line must be exactly two space-separated symbols, so a
+    merge whose left symbol is ``#`` is kept."""
     merges: list[tuple[str, str]] = []
     with open(path, encoding="utf-8") as f:
         for lineno, line in enumerate(f, 1):
             line = line.rstrip("\n")
-            if not line or line.startswith("#"):
+            if not line or (lineno == 1 and line.startswith("#version")):
                 continue
             parts = line.split(" ")
             if len(parts) != 2 or not parts[0] or not parts[1]:

@@ -84,7 +84,8 @@ def train_lang_model(df: DataFrame, text_col: str = "text",
     shared smoothing vocabulary, so floors are comparable across
     languages).  ``top_k`` keeps only each language's most frequent
     grams (ties break on the gram, so truncation is deterministic);
-    dropped grams fall back to the floor like unseen ones.
+    dropped grams fall back to the floor like unseen ones.  ``V`` is
+    counted before that truncation; ``tot_lang`` sums the kept grams.
     ``round_to`` rounds the stored logp values — use it when the model
     must be replayed bit-identically by another engine (a pinned-model
     oracle)."""
@@ -94,11 +95,11 @@ def train_lang_model(df: DataFrame, text_col: str = "text",
     g = _grams(labeled, "_txt", "lang", n, lowercase) \
         .select(F.col("id").alias("lang"), "gram")
     counts = g.groupBy("lang", "gram").agg(F.count(F.lit(1)).alias("c"))
+    vocab_size = counts.select("gram").distinct().count()
     if top_k is not None:
         w = Window.partitionBy("lang").orderBy(F.desc("c"), "gram")
         counts = (counts.withColumn("_rn", F.row_number().over(w))
                   .filter(F.col("_rn") <= top_k).drop("_rn"))
-    vocab_size = counts.select("gram").distinct().count()
     totals = counts.groupBy("lang").agg(F.sum("c").alias("tot"))
     denom = F.col("tot") + F.lit(alpha) * F.lit(float(vocab_size))
     logp = F.log((F.col("c") + F.lit(alpha)) / denom)

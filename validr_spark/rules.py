@@ -201,6 +201,9 @@ def build_int(sc, schema, input_type, path):
     if fast:
         # whole-array screen: null elements via array_compact size drop
         # (array_min/max SKIP nulls), bounds via array_min/array_max.
+        # array_min/max are native loops; array_compact is not: Spark
+        # 4.1 plans it as filter(x -> isnotnull(x)), an interpreted
+        # lambda per element that doubles the screen (PERF.md Finding 1).
         def array_invalid(arr):
             # boolean arrays must compare on array<long> (boolean min/max
             # vs a long literal is a plan-time DATATYPE_MISMATCH); numeric

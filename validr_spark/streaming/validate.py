@@ -1,12 +1,15 @@
 """Validate Structured Streaming sources with the same compiled plans.
 
 The row-validation pass (`ValidationPlan.apply`) is one stateless
-projection — Catalyst expressions only — so it applies to a streaming
-DataFrame unchanged: micro-batches flow through the identical
-whole-stage-codegen pipeline the batch engine uses.  What streaming adds:
+projection — Catalyst expressions, plus one Arrow pass when the schema
+has pandas-UDF validators (email, datetime, ...) — so it applies to a
+streaming DataFrame unchanged: micro-batches flow through the same plan
+the batch engine uses.  What streaming adds:
 
-* ``stream_violations`` — a violations *stream* (filter → explode, still
-  stateless, so it runs in append mode with exactly-once file sinks).
+* ``stream_violations`` — a violations *stream*: the projection behind
+  the ``spark_partition_id`` barrier (``operators/_barrier.once``, which
+  streaming accepts), then ``size > 0`` filter → explode.  Still
+  stateless, so it runs in append mode with exactly-once file sinks.
 * ``windowed_verdicts`` — per-(event-time window × partition) pass/fail
   with a watermark so late rows are folded in until the watermark passes
   and state is dropped (bounded state at any scale).

@@ -23,7 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 __all__ = ["physical_plan", "assert_plan", "assert_no_python",
-           "assert_no_shuffle", "count_exchanges"]
+           "assert_no_shuffle", "count_exchanges", "python_passes"]
 
 #: markers of Python evaluation nodes.  Spark grows new node kinds per
 #: release (ArrowAggregatePython appeared for grouped-agg pandas UDFs,
@@ -60,6 +60,19 @@ def assert_no_python(df: DataFrame) -> str:
     ``myPythonCol`` could false-positive; rename it or use
     :func:`assert_plan` with exact node names in that corner."""
     return assert_plan(df, absent=list(PYTHON_NODES))
+
+
+def python_passes(df: DataFrame) -> int:
+    """Number of Python evaluation nodes in the executed plan — how many
+    times each row crosses into a Python worker.  Only the operator name
+    of each plan line is matched against :data:`PYTHON_NODES`, so UDF
+    and column names in its arguments do not count."""
+    n = 0
+    for line in physical_plan(df).splitlines():
+        words = line.lstrip(" :+-*()0123456789").split(maxsplit=1)
+        if words and any(m in words[0] for m in PYTHON_NODES):
+            n += 1
+    return n
 
 
 def count_exchanges(df: DataFrame) -> int:
