@@ -1,5 +1,7 @@
 """End-to-end prepare_training_data pipeline (validr_spark/pipeline.py)."""
 
+import sys
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -40,11 +42,25 @@ def _schema():
                   lang=T.enum(["en", "de"]))
 
 
-def test_pipeline_stages_and_survivors(spark, docs):
+def test_pipeline_stages_and_survivors(spark, docs, monkeypatch):
+    # each stage's rows_in is the previous stage's rows_out: one stats
+    # count per stage plus the first stage's input, not two per stage
+    # (operators' own counts, e.g. label propagation's, are not stats)
+    counts = []
+    frame = type(docs)
+    count = frame.count
+
+    def spy_count(self):
+        counts.append(sys._getframe(1).f_globals["__name__"])
+        return count(self)
+
+    monkeypatch.setattr(frame, "count", spy_count)
     res = prepare_training_data(
         docs, _schema(), max_tokens=256,
         jaccard_threshold=0.6,
         minhash_kwargs={"num_hashes": 64, "bands": 32, "shingle_k": 4})
+    monkeypatch.undo()
+    assert counts.count("validr_spark.pipeline") == 6
     by = {s["stage"]: (s["rows_in"], s["rows_out"]) for s in res.stats}
     assert by["validate"] == (24, 23)          # doc 103 dropped (lang enum)
     assert by["exact_dedup"] == (23, 22)       # doc 100 == doc 3

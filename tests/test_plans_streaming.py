@@ -62,9 +62,9 @@ def test_resumable_run_and_skip(spark, seq_df, tmp_path):
 def test_pre_provenance_violation_files_do_not_false_pass(
         spark, seq_df, tmp_path):
     """A violations sink holding files written before provenance tagging
-    (no _lineage/_run_id columns) must neither crash the read-back nor —
-    worse — get swallowed into n_violations=0/verdict=pass for
-    partitions that really had violations."""
+    (no _lineage/_run_id columns) must neither crash the run nor —
+    worse — turn into n_violations=0/verdict=pass for partitions that
+    really had violations."""
     vio = str(tmp_path / "violations")
     legacy = (spark.createDataFrame(
         [("legacy-1", "n_tok.max", "999")],
@@ -809,3 +809,212 @@ def test_parts_from_layout_typed_inference(spark, tmp_path):
     one.write.parquet(str(tmp_path / "badtyped" / "src=abc" / "x"))
     # listing sees 'abc'; cast to int nulls it -> canon returns None
     assert rv2._canon_layout_keys(typed, ["abc", "1"]) is None
+
+
+# ------------------------------------- manifest counters on the write scan
+
+def _verdict_rows(plan, df, part_col, id_cols=()):
+    """Per-part (n_rows, n_violations, n_bad_rows, verdict) from
+    ``verdicts()`` over the same keyed input a manifest run validates."""
+    keyed = df.withColumn("_part", F.col(part_col).cast("string"))
+    res = plan.apply(keyed, id_cols=["_part", *id_cols])
+    return {r["_part"]: (r["n_rows"], r["n_violations"], r["n_bad_rows"],
+                         r["verdict"])
+            for r in res.verdicts("_part").collect()}
+
+
+def _manifest_rows(spark, path):
+    return {r["part"]: (r["n_rows"], r["n_violations"], r["n_bad_rows"],
+                        r["verdict"])
+            for r in ManifestStore(spark, path).read().collect()}
+
+
+@pytest.mark.parametrize("output_partitions", [None, 8])
+def test_manifest_counters_run_no_job_of_their_own(
+        spark, tmp_path, monkeypatch, output_partitions):
+    """The manifest rows come from counters observed by the violations
+    write itself: no Spark job runs between that write returning and the
+    manifest append, and the rows equal ``verdicts()``."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    rows = [(None if i % 37 == 0 else f"d{i % 450}",
+             999 if i % 11 == 0 else (i % 90) + 1, "pqrst"[i % 5])
+            for i in range(500)]
+    df = spark.createDataFrame(
+        rows, "doc_id string, n_tok int, source string").repartition(5)
+    plan = SparkCompiler().compile(
+        T.dict(doc_id=T.str, n_tok=T.int.min(1).max(100), source=T.str))
+    vio = str(tmp_path / "v")
+    sc = spark.sparkContext
+    group = f"manifest-counters-{output_partitions}"
+    n_jobs = {}
+
+    def jobs():
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    parquet = DataFrameWriter.parquet
+
+    def spy_parquet(self, path, *a, **kw):
+        parquet(self, path, *a, **kw)
+        if path == vio:
+            n_jobs["write_returned"] = jobs()
+
+    append = ManifestStore.append
+
+    def spy_append(self, rows):
+        n_jobs["append"] = jobs()
+        append(self, rows)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", spy_parquet)
+    monkeypatch.setattr(ManifestStore, "append", spy_append)
+    rv = ResumableValidation(plan, part_col="source",
+                             manifest_path=str(tmp_path / "m"),
+                             violations_path=vio,
+                             output_partitions=output_partitions)
+    sc.setJobGroup(group, group)
+    try:
+        rep = rv.run(spark, df, id_cols=["doc_id"])
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert n_jobs["write_returned"] > 0
+    assert n_jobs["append"] == n_jobs["write_returned"]
+    assert "metrics" not in rep["phase_seconds"]
+    monkeypatch.undo()
+    assert _manifest_rows(spark, str(tmp_path / "m")) == \
+        _verdict_rows(plan, df, "source", ["doc_id"])
+    want_v = sum(v[1] for v in _verdict_rows(plan, df, "source").values())
+    assert spark.read.parquet(vio).count() == want_v
+
+
+def test_manifest_counters_batch_of_64_parts(spark, tmp_path):
+    """A full batch of 64 parts carries 3 × 64 counters on one write."""
+    rows = [(f"s{p:02d}-{i}", 999 if (p + i) % 4 == 0 else 5, f"s{p:02d}")
+            for p in range(64) for i in range(3)]
+    df = spark.createDataFrame(rows, "doc_id string, n_tok int, source string")
+    plan = SparkCompiler().compile(
+        T.dict(doc_id=T.str, n_tok=T.int.min(1).max(100), source=T.str))
+    rv = ResumableValidation(plan, part_col="source",
+                             manifest_path=str(tmp_path / "m"),
+                             violations_path=str(tmp_path / "v"),
+                             batch_parts=64)
+    rep = rv.run(spark, df, id_cols=["doc_id"])
+    assert rep["n_parts_processed"] == 64
+    got = _manifest_rows(spark, str(tmp_path / "m"))
+    assert len(got) == 64
+    assert got == _verdict_rows(plan, df, "source", ["doc_id"])
+
+
+def test_manifest_counters_empty_partition_dir(spark, tmp_path):
+    """A batch whose part has a directory but no rows reads nothing; its
+    counters still arrive and record an empty, passing part."""
+    data = str(tmp_path / "in")
+    spark.createDataFrame([("a-1", 5, "a"), ("b-1", 999, "b")],
+                          "doc_id string, n_tok int, source string") \
+        .write.partitionBy("source").parquet(data)
+    os.makedirs(os.path.join(data, "source=z"))
+    plan = SparkCompiler().compile(
+        T.dict(doc_id=T.str, n_tok=T.int.min(1).max(100)))
+    rv = ResumableValidation(plan, part_col="source",
+                             manifest_path=str(tmp_path / "m"),
+                             violations_path=str(tmp_path / "v"),
+                             batch_parts=1, input_path=data)
+    rep = rv.run(spark, spark.read.parquet(data), id_cols=["doc_id"])
+    assert rep["parts"] == ["a", "b", "z"]
+    assert _manifest_rows(spark, str(tmp_path / "m")) == {
+        "a": (1, 0, 0, "pass"), "b": (1, 1, 1, "fail"),
+        "z": (0, 0, 0, "pass")}
+
+
+_RETRY_CHILD = '''
+import json
+import sys
+
+from pyspark import TaskContext
+from pyspark.sql import SparkSession
+
+from validr_spark import Invalid, SparkCompiler, T, validator
+from validr_spark.plans import ResumableValidation
+
+
+@validator(accept=str, output=str)
+def flaky(compiler):
+    def validate(value):
+        ctx = TaskContext.get()
+        if ctx.partitionId() == 0 and ctx.attemptNumber() == 0:
+            raise RuntimeError("injected first-attempt failure")
+        if int(value) % 7 == 0:
+            raise Invalid("multiple of 7")
+        return value
+    return validate
+
+
+spark = (SparkSession.builder.master("local[2,2]")
+         .config("spark.ui.enabled", "false")
+         .config("spark.sql.shuffle.partitions", "4").getOrCreate())
+spark.sparkContext.setLogLevel("OFF")
+sc = spark.sparkContext
+tmp = sys.argv[1]
+df = spark.createDataFrame(
+    [(i, str(i), i, "abcd"[i % 4]) for i in range(400)],
+    "id long, v string, w long, source string")
+plan = SparkCompiler(py_validators={"flaky": flaky}).compile(
+    T.dict(v=T.flaky, w=T.int.max(300)))
+out = {}
+for op in (None, 8):
+    tag = f"op{op}"
+    sc.setJobGroup(tag, tag)
+    ResumableValidation(plan, part_col="source",
+                        manifest_path=f"{tmp}/{tag}/m",
+                        violations_path=f"{tmp}/{tag}/v",
+                        output_partitions=op).run(spark, df, id_cols=["id"])
+    st = sc.statusTracker()
+    stages = [st.getStageInfo(s) for j in st.getJobIdsForGroup(tag)
+              for s in st.getJobInfo(j).stageIds]
+    out[tag] = {
+        "failed_tasks": sum(s.numFailedTasks for s in stages if s),
+        "manifest": [r.asDict() for r in spark.read.parquet(f"{tmp}/{tag}/m")
+                     .select("part", "n_rows", "n_violations", "n_bad_rows")
+                     .collect()],
+        "sink": [[r["id"], r["rule_id"]] for r in
+                 spark.read.parquet(f"{tmp}/{tag}/v").collect()]}
+print(json.dumps(out))
+spark.stop()
+'''
+
+
+@pytest.mark.slow
+def test_manifest_counters_exactly_once_under_task_retry(tmp_path):
+    """A validation task that fails its first attempt and succeeds on
+    retry is counted once, whether the counters sit in the result stage
+    (``output_partitions=None``) or in the shuffle-map stage below the
+    write's repartition (``8``).  The test session allows no retries, so
+    a child process runs its own ``local[2,2]`` session."""
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    script = tmp_path / "child.py"
+    script.write_text(_RETRY_CHILD)
+    env = dict(os.environ, PYTHONPATH=repo)
+    env.pop("PYSPARK_GATEWAY_PORT", None)
+    env.pop("PYSPARK_GATEWAY_SECRET", None)
+    proc = subprocess.run(
+        [sys.executable, str(script), str(tmp_path / "out")],
+        capture_output=True, text=True, timeout=600, env=env)
+    assert proc.returncode == 0, proc.stderr[-4000:]
+    out = json.loads(proc.stdout.strip().splitlines()[-1])
+
+    truth, sink = {}, []
+    for i in range(400):
+        bad = [r for r, hit in (("v.flaky", i % 7 == 0),
+                                ("w.max", i > 300)) if hit]
+        n, v, b = truth.get("abcd"[i % 4], (0, 0, 0))
+        truth["abcd"[i % 4]] = (n + 1, v + len(bad), b + bool(bad))
+        sink += [[i, r] for r in bad]
+    for tag in ("opNone", "op8"):
+        run = out[tag]
+        assert run["failed_tasks"] >= 1, tag
+        got = {r["part"]: (r["n_rows"], r["n_violations"], r["n_bad_rows"])
+               for r in run["manifest"]}
+        assert got == truth, tag
+        assert sorted(run["sink"]) == sorted(sink), tag

@@ -201,7 +201,10 @@ def test_running_verdicts_numeric_key(spark, tmp_path):
 
 # ---------------------------------------------------- manifest n_bad_rows
 
-def test_manifest_n_bad_rows_null_without_id_cols(spark, tmp_path):
+def test_manifest_n_bad_rows_exact(spark, tmp_path):
+    """n_bad_rows is the number of rows with at least one violation, with
+    or without id columns — bad rows sharing an id or with a NULL id
+    count once each."""
     from validr_spark.plans import ResumableValidation
 
     schema = T.dict(doc_id=T.str, n_tok=T.int.min(1).max(100),
@@ -209,17 +212,35 @@ def test_manifest_n_bad_rows_null_without_id_cols(spark, tmp_path):
     rows = [(f"{s}-{i}", 999 if i < 2 else 5, s)
             for s in ("a", "b") for i in range(10)]
     rows += [(f"c-{i}", 5, "c") for i in range(10)]
+    # two bad rows sharing a doc_id, one bad row with a NULL doc_id
+    rows += [("d-0", 999, "d"), ("d-0", 0, "d"), (None, 999, "d"),
+             ("d-1", 5, "d")]
     df = spark.createDataFrame(rows, "doc_id string, n_tok int, source string")
     plan = SparkCompiler().compile(schema)
-    rv = ResumableValidation(plan, part_col="source",
-                             manifest_path=str(tmp_path / "m"),
-                             violations_path=str(tmp_path / "v"))
-    rv.run(spark, df)  # NO id_cols
-    m = {r["part"]: r for r in
-         spark.read.parquet(str(tmp_path / "m")).collect()}
-    # violating partitions: bad-row count is unknowable without ids →
-    # NULL, never the distinct-rule-count proxy (which would say 1)
-    assert m["a"]["n_violations"] == 2 and m["a"]["n_bad_rows"] is None
-    assert m["b"]["n_bad_rows"] is None
+
+    def manifest(name, **kw):
+        rv = ResumableValidation(plan, part_col="source",
+                                 manifest_path=str(tmp_path / name / "m"),
+                                 violations_path=str(tmp_path / name / "v"))
+        rv.run(spark, df, **kw)
+        return {r["part"]: r for r in
+                spark.read.parquet(str(tmp_path / name / "m")).collect()}
+
+    m = manifest("no_ids")  # NO id_cols
+    assert m["a"]["n_violations"] == 2 and m["a"]["n_bad_rows"] == 2
+    assert m["b"]["n_bad_rows"] == 2
     # clean partition: zero violations pins zero bad rows
     assert m["c"]["n_violations"] == 0 and m["c"]["n_bad_rows"] == 0
+    assert m["d"]["n_bad_rows"] == 3
+
+    m = manifest("ids", id_cols=["doc_id"])
+    keyed = df.withColumn("_part", F.col("source"))
+    want = {r["_part"]: (r["n_rows"], r["n_violations"], r["n_bad_rows"],
+                         r["verdict"])
+            for r in plan.apply(keyed, id_cols=["_part", "doc_id"])
+            .verdicts("_part").collect()}
+    got = {p: (r["n_rows"], r["n_violations"], r["n_bad_rows"],
+               r["verdict"]) for p, r in m.items()}
+    assert got == want
+    # the NULL doc_id is itself a violation (doc_id is required)
+    assert want["d"] == (4, 4, 3, "fail")

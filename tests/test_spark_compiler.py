@@ -324,9 +324,9 @@ def test_result_views_one_python_pass(spark):
             (8, 8, "c@xn--fsqu00a.xn--3lr804guic", "2016-07-09T00:00:00Z")]
     df = spark.createDataFrame(
         rows, "rid int, uid int, email string, ts string")
-    res = (SparkCompiler()
-           .compile(T.dict(uid=T.int.min(0), email=T.email, ts=T.datetime))
-           .apply(df, id_cols=["rid"]))
+    plan = SparkCompiler().compile(
+        T.dict(uid=T.int.min(0), email=T.email, ts=T.datetime))
+    res = plan.apply(df, id_cols=["rid"])
     vc = F.col("_violations")
     bad = res.df.filter(F.size(vc) > 0)
     unguarded = {
@@ -343,6 +343,15 @@ def test_result_views_one_python_pass(spark):
         got_rows = sorted(got.collect(), key=str)
         assert got_rows and got_rows == sorted(want.collect(), key=str)
         assert got.columns == want.columns
+    # pipeline.py's validate stage filters plan.flag unguarded, yet plans
+    # one pass: the filter keeps no other use of the projected column,
+    # so ColumnPruning drops it and the UDFs run only under the filter
+    kept = (plan.flag(df, "_pipe_violations")
+            .filter(F.size("_pipe_violations") == 0)
+            .drop("_pipe_violations"))
+    assert python_passes(kept) == 1, physical_plan(kept)
+    assert sorted(r["rid"] for r in kept.collect()) == \
+        sorted(r["rid"] for r in res.clean().collect())
 
 
 def test_int_list_over_boolean_array(spark):

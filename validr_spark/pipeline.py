@@ -26,6 +26,7 @@ validate stage IS the reference's semantics applied at table scale.
 from __future__ import annotations
 
 from dataclasses import dataclass, field
+from functools import partial
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -45,6 +46,22 @@ class PipelineResult:
         return spark.createDataFrame(
             [(s["stage"], s["rows_in"], s["rows_out"]) for s in self.stats],
             "stage string, rows_in long, rows_out long")
+
+
+def _step(stats: list[dict], name: str, before: DataFrame, after: DataFrame,
+          *, collect_stats: bool, checkpoint: bool) -> DataFrame:
+    """Record one stage's row counts in ``stats`` and return its output.
+
+    A stage's input is the previous stage's output, so ``rows_in`` is the
+    previous entry's ``rows_out``; only the first stage counts its input.
+    """
+    if collect_stats:
+        rows_in = stats[-1]["rows_out"] if stats else before.count()
+        stats.append({"stage": name, "rows_in": rows_in,
+                      "rows_out": after.count()})
+    else:
+        stats.append({"stage": name, "rows_in": None, "rows_out": None})
+    return after.localCheckpoint(eager=False) if checkpoint else after
 
 
 def prepare_training_data(
@@ -80,14 +97,8 @@ def prepare_training_data(
                                                   token_count)
 
     stats: list[dict] = []
-
-    def step(name, before: DataFrame, after: DataFrame) -> DataFrame:
-        if collect_stats:
-            stats.append({"stage": name, "rows_in": before.count(),
-                          "rows_out": after.count()})
-        else:
-            stats.append({"stage": name, "rows_in": None, "rows_out": None})
-        return after.localCheckpoint(eager=False) if checkpoint else after
+    step = partial(_step, stats, collect_stats=collect_stats,
+                   checkpoint=checkpoint)
 
     cur = df
 
@@ -143,13 +154,7 @@ def prepare_training_data(
         else:
             src, lcol = cur, len_col
         packed = pack_greedy(src, max_tokens, id_col=id_col, len_col=lcol)
-        if collect_stats:
-            stats.append({"stage": "pack",
-                          "rows_in": stats[-1]["rows_out"],
-                          "rows_out": packed.count()})
-        else:
-            stats.append({"stage": "pack", "rows_in": None,
-                          "rows_out": None})
+        step("pack", cur, packed, checkpoint=False)
 
     return PipelineResult(kept=cur, packed=packed, stats=stats)
 
@@ -215,14 +220,8 @@ def prepare_sequences(
     from validr_spark.operators.packing import pack_greedy, take_token_budget
 
     stats: list[dict] = []
-
-    def step(name, before: DataFrame, after: DataFrame) -> DataFrame:
-        if collect_stats:
-            stats.append({"stage": name, "rows_in": before.count(),
-                          "rows_out": after.count()})
-        else:
-            stats.append({"stage": name, "rows_in": None, "rows_out": None})
-        return after.localCheckpoint(eager=False) if checkpoint else after
+    step = partial(_step, stats, collect_stats=collect_stats,
+                   checkpoint=checkpoint)
 
     cur = df
     if schema is not None:
@@ -264,13 +263,6 @@ def prepare_sequences(
     if pack:
         packed = pack_greedy(cur, max_tokens, id_col=id_col,
                              len_col=n_tok_col)
-        if collect_stats:
-            stats.append({"stage": "pack",
-                          "rows_in": stats[-1]["rows_out"]
-                          if stats else None,
-                          "rows_out": packed.count()})
-        else:
-            stats.append({"stage": "pack", "rows_in": None,
-                          "rows_out": None})
+        step("pack", cur, packed, checkpoint=False)
 
     return PipelineResult(kept=cur, packed=packed, stats=stats)

@@ -17,8 +17,8 @@ this module is engine-original design, built for the 10^12-row case:
   partition-overwrite alone cannot do this: it only replaces partitions
   present in the written data, so a clean partition would keep stale rows
   from an earlier lineage).  Violation rows additionally carry
-  ``_lineage`` and ``_run_id`` columns so the read-back (and any external
-  consumer) can filter to the current rule-set provenance.
+  ``_lineage`` and ``_run_id`` columns so an external consumer can filter
+  to the current rule-set provenance.
 * The manifest row for a partition is appended **only after** that batch's
   violations write succeeded; a killed run leaves no manifest row for
   unfinished partitions and they are re-picked next time.
@@ -29,10 +29,9 @@ this module is engine-original design, built for the 10^12-row case:
 * Driver memory: only distinct partition keys are ever collected
   (table-partition cardinality, thousands — never row-shaped data).
 
-Per-partition verdict metrics are computed without a second full
-validate pass: ``n_rows`` comes from a count-only aggregation (columnar
-scan of nothing but the partition column), and violation counts are read
-back from the just-written (small) violations output.
+Per-partition verdict metrics cost no job of their own: three counters
+per part (rows, violations, rows with a violation) are observed on the
+validation projection and filled in by the violations write's tasks.
 """
 
 from __future__ import annotations
@@ -41,9 +40,11 @@ import hashlib
 import time
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as st
+
+from ..compiler import ValidationResult
 
 ENGINE_VERSION = "1"
 
@@ -90,7 +91,7 @@ class ManifestStore:
 
     def _exists(self) -> bool:
         # Hadoop-FS existence probe (any scheme) — avoids a JVM-logged
-        # AnalysisException stack on the very first run of a pipeline.
+        # path-not-found stack on the very first run of a pipeline.
         jvm = self.spark._jvm
         p = jvm.org.apache.hadoop.fs.Path(self.path)
         fs = p.getFileSystem(self.spark._jsc.hadoopConfiguration())
@@ -252,8 +253,7 @@ class ResumableValidation:
             id_cols: list[str] | None = None) -> dict:
         store = ManifestStore(spark, self.manifest_path)
         phases = {"parts_scan": 0.0, "manifest_read": 0.0,
-                  "validate_write": 0.0, "metrics": 0.0,
-                  "manifest_commit": 0.0}
+                  "validate_write": 0.0, "manifest_commit": 0.0}
         t0 = time.time()
         all_parts = self.all_parts(df)       # ONE distinct scan per run
         phases["parts_scan"] = time.time() - t0
@@ -285,9 +285,8 @@ class ResumableValidation:
         Needed because dynamic partition-overwrite only replaces partitions
         PRESENT in the written data — a re-validated partition with zero
         violations would otherwise keep stale rows from an older lineage
-        on disk and in the verdict read-back.  Dir names use Hive
-        `%XX`-escaping of special chars, which `urllib.parse.unquote`
-        reverses.
+        on disk.  Dir names use Hive `%XX`-escaping of special chars,
+        which `urllib.parse.unquote` reverses.
         """
         import urllib.parse
 
@@ -313,6 +312,20 @@ class ResumableValidation:
         keyed = df.withColumn("_part", self._part_key())
         batch_df = keyed.filter(F.col("_part").isin(parts))
         res = self.plan.apply(batch_df, id_cols=["_part", *id_cols])
+        # Three counters per part, computed on the validation projection
+        # by the violations write's own tasks: no job of their own, and
+        # Spark merges only successful task attempts, so a retried task
+        # counts once.  ``batch_parts`` bounds their number.
+        n_viol = F.size(F.col("_violations"))
+        counters = []
+        for i, p in enumerate(parts):
+            here = F.col("_part") == p
+            counters += [F.count_if(here).alias(f"n{i}"),
+                         F.sum(F.when(here, n_viol)).alias(f"v{i}"),
+                         F.count_if(here & (n_viol > 0)).alias(f"b{i}")]
+        obs = Observation()
+        observed = ValidationResult(res.df.observe(obs, *counters),
+                                    res.id_cols)
 
         def _shape(out):
             # Bound the files-per-batch: without this, partitionBy from an
@@ -354,7 +367,7 @@ class ResumableValidation:
         #    rows on disk), then append fresh rows tagged with provenance.
         t0 = time.time()
         self._delete_part_dirs(spark, parts)
-        (_shape(res.violations()
+        (_shape(observed.violations()
                 .withColumn("_lineage", F.lit(self.lineage))
                 .withColumn("_run_id", F.lit(run_id)))
             .write.mode("append")
@@ -381,73 +394,19 @@ class ResumableValidation:
             phases["quarantine_write"] = (phases.get("quarantine_write", 0.0)
                                           + time.time() - t0)
 
-        # 2. verdict metrics: cheap count-only scan (reads just part_col
-        #    thanks to column pruning) + the small violations we just wrote.
-        t0 = time.time()
-        counts = (batch_df.groupBy("_part")
-                  .agg(F.count(F.lit(1)).alias("n_rows")))
-        # Only a genuinely-absent/empty sink may fall back to "zero
-        # violations"; any OTHER read failure must propagate — swallowing
-        # it would record verdict=pass for partitions that really had
-        # violations, and the manifest commit would then never re-validate
-        # them.  mergeSchema covers sinks with pre-provenance files whose
-        # sampled footer lacks the _lineage/_run_id columns.
-        from pyspark.errors import AnalysisException
-
-        written = None
-        try:
-            written = (spark.read.option("mergeSchema", "true")
-                       .parquet(self.violations_path))
-        except AnalysisException as e:
-            s = str(e)
-            if not ("PATH_NOT_FOUND" in s
-                    or "UNABLE_TO_INFER_SCHEMA" in s):
-                raise
-        if written is None:
-            # zero violations anywhere yet → sink dir has no partitions
-            merged = {r["_part"]: {"n_rows": r["n_rows"], "n_violations": 0,
-                                   "n_bad_rows": 0}
-                      for r in counts.collect()}
-        else:
-            for c in ("_lineage", "_run_id"):
-                if c not in written.columns:
-                    written = written.withColumn(
-                        c, F.lit(None).cast("string"))
-            written = written.filter(
-                F.col("_part").isin(parts)
-                & (F.col("_lineage") == self.lineage)
-                & (F.col("_run_id") == run_id))
-            # without id columns the violation rows carry no row identity,
-            # so the distinct-bad-row count is UNKNOWABLE from the sink —
-            # record NULL rather than a proxy (countDistinct(rule_id)
-            # would report "number of distinct rules that fired", off by
-            # orders of magnitude from the real bad-row count)
-            vstats = (written.groupBy("_part")
-                      .agg(F.count(F.lit(1)).alias("n_violations"),
-                           (F.countDistinct(*id_cols) if id_cols
-                            else F.lit(None).cast("long"))
-                           .alias("n_bad_rows")))
-            merged = {r["_part"]: r for r in
-                      counts.join(vstats, "_part", "left").collect()}
-
+        # 2. verdict metrics: the counters the violations write filled in.
+        m = obs.get
         now = time.time()
         rows = []
-        for p in parts:
-            r = merged.get(p)
-            n_rows = r["n_rows"] if r else 0
-            n_viol = (r["n_violations"] or 0) if r else 0
-            n_bad = r["n_bad_rows"] if r else 0
-            if n_viol == 0:
-                n_bad = 0          # no violations → zero bad rows, id or not
+        for i, p in enumerate(parts):
+            n_viol = m[f"v{i}"] or 0       # sum over no rows is NULL
             rows.append({
                 "lineage": self.lineage, "part": p, "status": "done",
-                "run_id": run_id, "n_rows": int(n_rows),
-                "n_bad_rows": int(n_bad) if n_bad is not None else None,
-                "n_violations": int(n_viol),
+                "run_id": run_id, "n_rows": m[f"n{i}"],
+                "n_bad_rows": m[f"b{i}"], "n_violations": n_viol,
                 "verdict": "pass" if n_viol == 0 else "fail",
                 "finished_at": now,
             })
-        phases["metrics"] = (phases.get("metrics", 0.0) + time.time() - t0)
         # 3. manifest append LAST — the commit point for this batch.
         t0 = time.time()
         store.append(rows)
