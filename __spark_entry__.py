@@ -550,13 +550,15 @@ def q_minhash_pairs(spark, sf):
 
 def q_minhash_oracle(spark, sf):
     """Portable-family minhash LSH candidate pairs (operators/dedup.py
-    minhash_candidates_portable): md5-derived integer shingle hashes,
-    affine-mod-p signature family, value-string band buckets — every
-    step reproducible by an independent SQL engine, so DuckDB rebuilds
-    the EXACT candidate-pair set.  This differentially proves the whole
-    banding pipeline (shingle -> signature -> band -> bucket self-join
-    -> pair agg); the xxhash64 production family in minhash_pairs has no
-    DuckDB twin and stays rows-only."""
+    minhash_candidates_portable): md5-derived integer shingle hashes and
+    an affine-mod-p signature family — every step reproducible by an
+    independent SQL engine, so DuckDB rebuilds the candidate-pair set,
+    bucketing on the comma-joined band values where Spark buckets on
+    their xxhash64 (equal unless two band slices collide in 64 bits).
+    This differentially proves the whole banding pipeline (shingle ->
+    signature -> band -> bucket self-join -> pair agg), which the
+    xxhash64 production family in minhash_pairs shares; that family has
+    no DuckDB twin and stays rows-only."""
     df = _load(spark, sf, "documents")
     return (dedup.minhash_candidates_portable(df, num_hashes=32, bands=8)
             .filter(F.col("n_bands_matched") >= 2)
@@ -851,20 +853,20 @@ def q_manifest_run(spark, sf):
 
 
 def q_ngram_jaccard(spark, sf):
-    """End-to-end near-dup pipeline: LSH candidates → exact word-3-gram
-    Jaccard verify (dedup.ngram_jaccard_pairs).  HASH-ORACLED since
-    round 5 (upgraded from rows-only via the r4 pinnable-override
-    pattern): ``portable=True`` generates candidates with the
-    md5/affine family whose banding DuckDB replays exactly
-    (minhash_oracle proved that half), and the twin chains the same
-    band CTE into the distinct-gram Jaccard algebra jaccard_exact
-    proved — so the composed candidates→verify pipeline is now
-    value-verified, not just its halves.  The xxhash64 production
-    family stays covered rows-only by minhash_pairs."""
+    """End-to-end near-dup pipeline: portable-family LSH candidates
+    (dedup.minhash_candidates_portable) → exact word-3-gram Jaccard
+    verify (dedup.jaccard_verify).  Hash-oracled: DuckDB replays the
+    md5/affine signatures and banding on comma-joined band strings
+    (minhash_oracle checks that half; Spark buckets on their xxhash64,
+    so the pair sets are equal unless two band slices collide in 64
+    bits) and chains them into the distinct-gram Jaccard algebra
+    jaccard_exact checks.  dedup.ngram_jaccard_pairs, the same pipeline
+    over the xxhash64 family, has no DuckDB twin; minhash_pairs covers
+    that family rows-only."""
     df = _load(spark, sf, "documents")
-    return (dedup.ngram_jaccard_pairs(df, ngram=3, threshold=0.4,
-                                      portable=True, num_hashes=32,
-                                      bands=8)
+    cand = dedup.minhash_candidates_portable(df, num_hashes=32, bands=8)
+    return (dedup.jaccard_verify(df, cand.select("id_a", "id_b"),
+                                 ngram=3, threshold=0.4)
             .select("id_a", "id_b", F.round("jaccard", 6).alias("jaccard"))
             .orderBy("id_a", "id_b"))
 

@@ -22,14 +22,44 @@ def embs(spark):
 
 # --- minhash: codegen signatures ≡ HOF reference ---------------------------
 
+def shingles(col, k: int = 5):
+    """Character k-shingle hash set of a normalized text column
+    (array<long>, distinct), built with a ``transform`` lambda."""
+    s = dedup.normalize_text(col)
+    n = F.char_length(s)
+    idx = F.sequence(F.lit(1), F.greatest(n - (k - 1), F.lit(1)))
+    return F.array_distinct(
+        F.transform(idx, lambda i: F.xxhash64(s.substr(i, F.lit(k)))))
+
+
+def minhash_signature(shingle_col, num_hashes: int = 64, seed: int = 42):
+    """Per-row minhash via array HOFs (``aggregate`` + ``zip_with``): the
+    independent reference for ``dedup.minhash_signatures``.  Catalyst
+    lambda HOFs are CodegenFallback (interpreted, ~20 µs/element —
+    PERF.md Finding 1), 10-30× slower than the codegen path.
+
+    Hash family i is ``xxhash64(shingle, seed*1000003 + i)``.  One fold
+    over the shingle set evaluates the shingle expression ONCE per row (a
+    per-hash array_min(transform(...)) would re-inline it num_hashes
+    times)."""
+    seeds = [seed * 1000003 + i for i in range(num_hashes)]
+    init = F.array(*[F.lit((1 << 63) - 1) for _ in seeds])
+
+    def step(acc, x):
+        hashes = F.array(*[F.xxhash64(x, F.lit(s)) for s in seeds])
+        return F.zip_with(acc, hashes, lambda a, h: F.least(a, h))
+
+    return F.aggregate(shingle_col, init, step)
+
+
 def test_minhash_codegen_equals_hof(spark, docs):
     """The explode+groupBy-min signature path must be byte-identical to the
     interpreted aggregate/zip_with reference implementation."""
     num_hashes, k, seed = 32, 5, 42
     hof = docs.select(
         F.col("doc_id").alias("doc"),
-        dedup.minhash_signature(
-            dedup.shingles(F.col("text"), k), num_hashes, seed).alias("sig"))
+        minhash_signature(shingles(F.col("text"), k), num_hashes,
+                          seed).alias("sig"))
     fast = dedup.minhash_signatures(docs, "text", "doc_id", num_hashes,
                                     k, seed)
     h = {r["doc"]: r["sig"] for r in hof.collect()}
@@ -66,6 +96,26 @@ def test_minhash_candidates_find_exact_dups(spark):
     got = {(r["id_a"], r["id_b"]) for r in pairs}
     assert ("a", "b") in got
     assert all(p == ("a", "b") for p in got)
+
+
+def test_jaccard_verify_drops_docs_shorter_than_ngram(spark):
+    """A doc with fewer than n words has no word n-gram, as in
+    contamination.ngram_hashes and the ngram_jaccard DuckDB twin.  So a
+    candidate pair of two identical 2-word docs has no Jaccard and is
+    absent: not 1.0 from one partial gram each, and not a 0/0 division
+    (which raises under ANSI)."""
+    df = spark.createDataFrame(
+        [(1, "hello world"), (2, "Hello  world"), (3, "a b c d"),
+         (4, "a b c d"), (5, None)], "doc_id int, text string")
+    grams = {r["doc_id"]: r["g"] for r in df.select(
+        "doc_id", dedup.word_ngrams(F.col("text"), 3).alias("g")).collect()}
+    assert grams[1] == grams[2] == grams[5] == []
+    assert len(grams[3]) == 2
+    cand = spark.createDataFrame([(1, 2), (3, 4), (1, 3)],
+                                 "id_a int, id_b int")
+    got = {(r["id_a"], r["id_b"]): r["jaccard"] for r in
+           dedup.jaccard_verify(df, cand, ngram=3, threshold=0.0).collect()}
+    assert got == {(3, 4): 1.0, (1, 3): 0.0}
 
 
 def test_lsh_candidate_recall_vs_exact_jaccard(spark, docs):

@@ -1,11 +1,14 @@
 """Portable (engine-neutral) minhash family: md5-derived gram integers +
-affine-mod-p signature, value-string band buckets — the variant whose LSH
-candidate-pair OUTPUT an independent SQL engine can reproduce exactly
-(__spark_entry__.py minhash_oracle / _minhash_oracle_sql).
+affine-mod-p signature — the variant whose LSH candidate-pair OUTPUT an
+independent SQL engine can reproduce (__spark_entry__.py minhash_oracle /
+_minhash_oracle_sql).  Spark buckets each band on the xxhash64 of its
+comma-joined values, like the other minhash families; the oracles bucket
+on the comma-joined string itself, which yields the same pairs unless two
+different band slices collide in 64 bits.
 
 Here: byte-equality of Spark signatures vs a pure-Python reference, and
 exact pair-set equality of the banding pipeline vs a brute-force Python
-banding over the same signatures.
+banding (value-tuple buckets) over the same signatures.
 """
 import hashlib
 import re

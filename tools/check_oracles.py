@@ -74,9 +74,11 @@ def main():
     qs = entrymod.queries()
     oracles = entrymod.oracle_sql()
     failed = []
+    n_run = n_hashed = n_rows_only = 0
     for name, fn in qs.items():
         if ONLY and name not in ONLY:
             continue
+        n_run += 1
         t0 = time.time()
         try:
             sdf = fn(spark, SF)
@@ -89,6 +91,7 @@ def main():
         dt = time.time() - t0
         if name not in oracles:
             print(f"ok   {name}: rows-only ({len(srows)} rows, {dt:.1f}s)")
+            n_rows_only += 1
             continue
         try:
             rel = con.sql(oracles[name])
@@ -130,6 +133,7 @@ def main():
             failed.append(name)
             continue
         print(f"ok   {name}: {len(a)} rows match ({dt:.1f}s)")
+        n_hashed += 1
 
     print("\nentry() smoke:", end=" ")
     try:
@@ -139,6 +143,8 @@ def main():
         print(f"FAIL: {ex}")
         failed.append("entry")
     print("FAILED:" if failed else "ALL GREEN", failed or "")
+    print(f"{n_run} queries run: {n_hashed} hash-matched, "
+          f"{n_rows_only} rows-only, {n_run - n_hashed - n_rows_only} failed")
     sys.exit(1 if failed else 0)
 
 

@@ -5,13 +5,14 @@ importable from one place.
     from validr_spark import functions as VF
     df.select(VF.token_count("text"), VF.fingerprint("text"))
 
-All of these return Catalyst Column expressions (JVM-side, codegen'd) —
-none are Python UDFs.  DataFrame-level operators (joins, aggs) stay in
+All of these return Catalyst Column expressions (JVM-side) — none are
+Python UDFs.  `word_ngrams` and `cosine` are built on lambda HOFs, which
+Catalyst evaluates interpreted (PERF.md Finding 1).  DataFrame-level
+operators (joins, aggs, the minhash signatures) stay in
 `validr_spark.operators.*`.
 """
 
-from ..operators.dedup import (minhash_signature, normalize_text, shingles,
-                               word_ngrams)
+from ..operators.dedup import normalize_text, word_ngrams
 from ..operators.similarity import cosine, lsh_bucket_col
 from ..operators.textstats import (bpe_ish_token_count, cjk_ratio,
                                    detect_language, fingerprint,
@@ -24,7 +25,7 @@ __all__ = [
     "language_scores", "detect_language", "quality_features",
     "quality_score", "fingerprint",
     # dedup building blocks
-    "normalize_text", "shingles", "word_ngrams", "minhash_signature",
+    "normalize_text", "word_ngrams",
     # vector math
     "cosine", "lsh_bucket_col",
 ]

@@ -34,6 +34,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ._barrier import once
 from .sampling import hash_sample
 
 __all__ = ["sampled_violation_rates", "wilson_bounds"]
@@ -145,11 +146,11 @@ def violation_triage(violations: DataFrame, k: int = 5,
           .agg(F.count(F.lit(1)).alias("n"),
                F.grouping("rule_id").alias("_gr"),
                F.grouping("value").alias("_gv")))
-    # nondeterministic barrier: without it Catalyst pushes each branch's
-    # grouping-id filter BELOW the Expand, splitting the shared rollup
-    # into two independent scans of the violations — the barrier keeps
-    # the filters above the aggregate so the exchange is reused
-    ga = ga.filter(F.monotonically_increasing_id() >= 0)
+    # barrier: without it Catalyst pushes each branch's grouping-id
+    # filter BELOW the Expand, splitting the shared rollup into two
+    # independent scans of the violations — the barrier keeps the
+    # filters above the aggregate so the exchange is reused
+    ga = ga.withColumn("_gr", once(F.col("_gr")))
     counts = (ga.filter((F.col("_gr") == 0) & (F.col("_gv") == 0))
               .select("rule_id", "value", "n"))
     # per-rule totals BEFORE any pruning (share denominator) — tiny

@@ -29,8 +29,6 @@ No counterpart in guyskk/validr (single-value validation only).
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -276,33 +274,13 @@ def ngram_novelty(df: DataFrame, ref: DataFrame,
     rg = ngram_hashes(ref, ref_text, id_col, n).select("gram").distinct()
 
     if use_bloom:
-        from pyspark.sql.functions import pandas_udf
-
-        from .incremental import BloomFilter
+        from .incremental import bloom_from_keys, might_contain_udf
 
         if expected_grams is None:
             expected_grams = rg.count()
-        m_bits, k = BloomFilter.params(expected_grams, fpp)
-
-        def partition_bloom(rows):
-            bf = BloomFilter(m_bits, k)
-            bf.add(np.fromiter((r[0] for r in rows), dtype=np.int64))
-            yield bf.bits
-
-        bits = (rg.rdd.mapPartitions(partition_bloom)
-                .treeReduce(np.bitwise_or, depth=2))
-        b = df.sparkSession.sparkContext.broadcast((m_bits, k, bits))
-
-        @pandas_udf("boolean")
-        def _maybe(g: pd.Series) -> pd.Series:
-            mb, kk, bb = b.value
-            bf = BloomFilter(mb, kk, bb)
-            return pd.Series(bf.might_contain(g.to_numpy(dtype=np.int64)))
-
-        # deterministic in fact; flag only stops Catalyst cloning the
-        # UDF predicate across the join (incremental.py precedent)
-        _maybe = _maybe.asNondeterministic()
-        tagged = dg.withColumn("_mb", _maybe(F.col("gram")))
+        maybe = might_contain_udf(df.sparkSession,
+                                  bloom_from_keys(rg, expected_grams, fpp))
+        tagged = dg.withColumn("_mb", maybe(F.col("gram")))
         # bloom-negative grams are PROVABLY unseen: count map-side
         neg = (tagged.filter(~F.col("_mb"))
                .groupBy(id_col)

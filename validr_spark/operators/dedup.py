@@ -110,70 +110,29 @@ def dedup_sequences(df: DataFrame, tokens_col: str = "tokens",
     return kept.unionByName(passthrough)
 
 
-def shingles(col, k: int = 5):
-    """Character k-shingle hash set of a normalized text column
-    (array<long>, distinct)."""
-    s = normalize_text(col)
-    n = F.char_length(s)
-    idx = F.sequence(F.lit(1), F.greatest(n - (k - 1), F.lit(1)))
-    return F.array_distinct(
-        F.transform(idx, lambda i: F.xxhash64(s.substr(i, F.lit(k)))))
-
-
 def word_ngrams(col, n: int = 3):
-    """Word n-gram hash set (array<long>, distinct)."""
+    """Word n-gram hash set (array<long>, distinct).  Empty for a text of
+    fewer than ``n`` words (and for NULL), like
+    ``contamination.ngram_hashes``: a short doc has no n-gram, not one
+    partial gram."""
     words = F.split(normalize_text(col), " ")
     cnt = F.size(words)
-    idx = F.sequence(F.lit(0), F.greatest(cnt - n, F.lit(0)))
-    return F.array_distinct(F.transform(
-        idx, lambda i: F.xxhash64(F.concat_ws(
-            " ", F.slice(words, i + 1, n)))))
+    grams = F.array_distinct(F.transform(
+        F.sequence(F.lit(0), cnt - n),
+        lambda i: F.xxhash64(F.concat_ws(" ", F.slice(words, i + 1, n)))))
+    return F.when(cnt >= n, grams).otherwise(F.array().cast("array<bigint>"))
 
 
-def minhash_signature(shingle_col, num_hashes: int = 64, seed: int = 42):
-    """Per-row minhash via array HOFs (``aggregate`` + ``zip_with``).
+def _shingle_rows(df: DataFrame, text_col: str, id_col: str,
+                  k: int) -> DataFrame:
+    """(doc, _g): one row per character ``k``-shingle of the normalized
+    text — the front both minhash families share.
 
-    REFERENCE/ORACLE PATH ONLY: Catalyst lambda HOFs are CodegenFallback
-    (interpreted, ~20 µs/element — PERF.md Finding 1), so this is 10-30×
-    slower than :func:`minhash_signatures`.  It is kept as the independent
-    twin the equivalence test checks the codegen path against.
-
-    Hash family i is ``xxhash64(shingle, seed*1000003 + i)`` — JVM-side,
-    overflow-free (unlike (a·x+b) mod p in 64-bit ANSI arithmetic), and
-    deterministic across runs/parallelism.
-    """
-    seeds = [seed * 1000003 + i for i in range(num_hashes)]
-    init = F.array(*[F.lit((1 << 63) - 1) for _ in seeds])
-
-    def step(acc, x):
-        hashes = F.array(*[F.xxhash64(x, F.lit(s)) for s in seeds])
-        return F.zip_with(acc, hashes, lambda a, h: F.least(a, h))
-
-    # one fold over the shingle set: the shingle expression is evaluated
-    # ONCE per row (a per-hash array_min(transform(...)) would re-inline
-    # and re-evaluate the shingle construction num_hashes times)
-    return F.aggregate(shingle_col, init, step)
-
-
-def minhash_signatures(df: DataFrame, text_col: str = "text",
-                       id_col: str = "doc_id", num_hashes: int = 64,
-                       shingle_k: int = 5, seed: int = 42) -> DataFrame:
-    """(doc, sig:array<long>) minhash signatures, whole-stage codegen.
-
-    ``posexplode``-free shape: explode the shingle set, then one
-    ``groupBy(doc)`` with ``num_hashes`` ``min(xxhash64(shingle, seed_i))``
-    aggregates — map-side partial aggregation means only num_hashes longs
-    per doc reach the shuffle, and every expression (shingle hash + the
-    mins) runs inside WholeStageCodegen.  Same hash family and therefore
-    byte-identical signatures to :func:`minhash_signature` (asserted by
-    tests/test_dedup_similarity.py).
-
-    The shingle set itself is also built WITHOUT a lambda HOF (the
-    ``transform`` in :func:`shingles` is interpreted too): explode the
-    index range, then ``substr`` + ``xxhash64`` on the exploded rows —
-    generate → project → partial-agg pipeline in one codegen stage, rows
-    never materialize.  min() is duplicate-invariant, so skipping the
-    reference path's ``array_distinct`` changes nothing.
+    Built WITHOUT a lambda HOF (Catalyst lambdas evaluate interpreted,
+    PERF.md Finding 1): explode the index range, then ``substr`` on the
+    exploded rows, so generate → project → partial-agg stays one codegen
+    stage and the rows never materialize.  Shingles are not deduplicated;
+    min() is duplicate-invariant.
 
     Rows whose text is NULL (or normalizes to the empty string) are
     filtered out before the explode, so they are absent from the output.
@@ -183,24 +142,50 @@ def minhash_signatures(df: DataFrame, text_col: str = "text",
     docs are exact duplicates; ``exact_duplicates`` is the right tool
     for them, not near-dup candidates.
     """
-    seeds = [seed * 1000003 + i for i in range(num_hashes)]
-    k = shingle_k
-    s = normalize_text(F.col(text_col))
     # barrier: one normalization regexp per row, not per shingle
-    s_once = once(s)
+    s_once = once(normalize_text(F.col(text_col)))
     pre = (df.select(F.col(id_col).alias("doc"), s_once.alias("_s"))
            .filter(F.col("_s").isNotNull() & (F.char_length("_s") > 0)))
     n = F.char_length(F.col("_s"))
     idx = F.sequence(F.lit(1), F.greatest(n - (k - 1), F.lit(1)))
     exploded = pre.select("doc", "_s", F.explode(idx).alias("_i"))
-    sh = F.xxhash64(F.col("_s").substr(F.col("_i"), F.lit(k)))
-    hashed = exploded.select("doc", sh.alias("_sh"))
-    aggs = [F.min(F.xxhash64(F.col("_sh"), F.lit(sd))).alias(f"_h{i}")
-            for i, sd in enumerate(seeds)]
-    return (hashed.groupBy("doc").agg(*aggs)
+    return exploded.select(
+        "doc", F.col("_s").substr(F.col("_i"), F.lit(k)).alias("_g"))
+
+
+def _min_signature(rows: DataFrame, hashes: list) -> DataFrame:
+    """(doc, sig:array<long>): one ``groupBy(doc)`` with a ``min`` of each
+    per-row hash expression in ``hashes`` — the tail every minhash family
+    shares.  Map-side partial aggregation means only ``len(hashes)``
+    longs per doc reach the shuffle."""
+    aggs = [F.min(h).alias(f"_h{i}") for i, h in enumerate(hashes)]
+    return (rows.groupBy("doc").agg(*aggs)
             .select("doc", F.array(*[F.col(f"_h{i}")
-                                     for i in range(num_hashes)])
+                                     for i in range(len(hashes))])
                     .alias("sig")))
+
+
+def minhash_signatures(df: DataFrame, text_col: str = "text",
+                       id_col: str = "doc_id", num_hashes: int = 64,
+                       shingle_k: int = 5, seed: int = 42) -> DataFrame:
+    """(doc, sig:array<long>) minhash signatures, whole-stage codegen.
+
+    ``posexplode``-free shape: explode the shingle set
+    (:func:`_shingle_rows`), then one ``groupBy(doc)`` with
+    ``num_hashes`` ``min(xxhash64(shingle, seed_i))`` aggregates — every
+    expression (shingle hash + the mins) runs inside WholeStageCodegen.
+    Hash family i is ``xxhash64(xxhash64(shingle), seed*1000003 + i)`` —
+    JVM-side, overflow-free (unlike (a·x+b) mod p in 64-bit ANSI
+    arithmetic), and deterministic across runs/parallelism.  The
+    interpreted ``aggregate``/``zip_with`` fold in
+    tests/test_dedup_similarity.py is the reference these signatures
+    are checked against byte for byte.
+    """
+    seeds = [seed * 1000003 + i for i in range(num_hashes)]
+    hashed = _shingle_rows(df, text_col, id_col, shingle_k).select(
+        "doc", F.xxhash64(F.col("_g")).alias("_sh"))
+    return _min_signature(hashed, [F.xxhash64(F.col("_sh"), F.lit(sd))
+                                   for sd in seeds])
 
 
 def minhash_candidates(df: DataFrame, text_col: str = "text",
@@ -231,14 +216,14 @@ def minhash_candidates(df: DataFrame, text_col: str = "text",
 def band_pairs_from_signatures(sigs: DataFrame, num_hashes: int,
                                bands: int) -> DataFrame:
     """LSH banding + self-join over precomputed ``(doc, sig)`` signatures
-    — the shared back half of :func:`minhash_candidates` and
-    :func:`minhash_candidates_tokens`."""
+    — the one back half of :func:`minhash_candidates`,
+    :func:`minhash_candidates_tokens` and
+    :func:`minhash_candidates_portable`."""
     rows = num_hashes // bands
     # band structs unrolled as plain expressions (no lambda HOFs: they
     # evaluate interpreted AND their LambdaVariables defeat plan
     # canonicalization, which blocks ReusedExchange on the self-join).
-    # bucket = xxhash64 of the comma-joined band slice — identical values
-    # to the previous transform/slice formulation.
+    # bucket = xxhash64 of the comma-joined band slice.
     band_structs = []
     for b in range(bands):
         elems = [F.get(F.col("sig"), b * rows + j).cast("string")
@@ -273,7 +258,7 @@ def minhash_signatures_tokens(df: DataFrame, tokens_col: str = "tokens",
     the PRE-TOKENIZED sequence shape (no text, no detokenization): the
     gram set comes from ``contamination.token_ngram_hashes`` (codegen
     slice/zip + xxhash64 of the n-int struct) and the signature is the
-    same explode → groupBy-min shape as :func:`minhash_signatures`, so
+    same groupBy-min tail as :func:`minhash_signatures`, so
     the Jaccard being estimated is over the sequence's distinct token
     n-gram set.  Sequences with fewer than ``n`` tokens are absent
     (no grams — and their absence keeps the degenerate empty-identity
@@ -284,12 +269,8 @@ def minhash_signatures_tokens(df: DataFrame, tokens_col: str = "tokens",
     seeds = [seed * 1000003 + i for i in range(num_hashes)]
     hashed = token_ngram_hashes(df, tokens_col, id_col, n) \
         .select(F.col(id_col).alias("doc"), F.col("gram").alias("_sh"))
-    aggs = [F.min(F.xxhash64(F.col("_sh"), F.lit(sd))).alias(f"_h{i}")
-            for i, sd in enumerate(seeds)]
-    return (hashed.groupBy("doc").agg(*aggs)
-            .select("doc", F.array(*[F.col(f"_h{i}")
-                                     for i in range(num_hashes)])
-                    .alias("sig")))
+    return _min_signature(hashed, [F.xxhash64(F.col("_sh"), F.lit(sd))
+                                   for sd in seeds])
 
 
 def minhash_candidates_tokens(df: DataFrame, tokens_col: str = "tokens",
@@ -335,42 +316,29 @@ def minhash_signatures_portable(df: DataFrame, text_col: str = "text",
                                 seed: int = 42) -> DataFrame:
     """Cross-engine-reproducible minhash signatures.
 
-    Same explode -> groupBy-min whole-stage-codegen shape (and the same
-    CollapseProject barrier) as :func:`minhash_signatures`, but the hash
-    family is engine-neutral instead of Spark's xxhash64: shingle ->
-    ``md5`` hex -> first 12 hex digits as an integer ``m`` (48 bits) ->
-    ``h_i = (a_i * (m % p) + b_i) % p`` with ``p = 2^31-1`` and literal
-    ``(a_i, b_i)`` from :func:`portable_hash_params`.  Every step is
-    integer arithmetic over the md5 of UTF-8 bytes, so ANY engine with
-    md5 + int64 arithmetic (DuckDB, Trino, Python) reproduces the exact
+    Same shingle front and groupBy-min tail as :func:`minhash_signatures`,
+    but the hash family is engine-neutral instead of Spark's xxhash64:
+    shingle -> ``md5`` hex -> first 12 hex digits as an integer ``m``
+    (48 bits) -> ``h_i = (a_i * (m % p) + b_i) % p`` with ``p = 2^31-1``
+    and literal ``(a_i, b_i)`` from :func:`portable_hash_params`.  Every
+    step is integer arithmetic over the md5 of UTF-8 bytes, so ANY engine
+    with md5 + int64 arithmetic (DuckDB, Trino, Python) reproduces the exact
     signature — this is what lets the LSH candidate-pair OUTPUT be
     differentially verified against an independent SQL engine, not just
     row-counted (the xxhash64 family has no DuckDB twin).
 
     Use the xxhash64 :func:`minhash_signatures` in production hot paths
-    (one hash vs md5 + division chain ≈ 2-3x cheaper per shingle); use
-    this for oracles, audits, and engine-migration equality checks.
+    (one hash vs md5 + division chain: ~1.6x fewer CPU-s, ROADMAP item
+    3(c)); use this for oracles, audits, and engine-migration checks.
     """
     params = portable_hash_params(num_hashes, seed)
-    k = shingle_k
-    s = normalize_text(F.col(text_col))
-    # barrier: one normalization regexp per row, not per shingle
-    s_once = once(s)
-    pre = (df.select(F.col(id_col).alias("doc"), s_once.alias("_s"))
-           .filter(F.col("_s").isNotNull() & (F.char_length("_s") > 0)))
-    n = F.char_length(F.col("_s"))
-    idx = F.sequence(F.lit(1), F.greatest(n - (k - 1), F.lit(1)))
-    exploded = pre.select("doc", "_s", F.explode(idx).alias("_i"))
-    gram = F.col("_s").substr(F.col("_i"), F.lit(k))
-    m = (F.conv(F.substring(F.md5(gram), 1, 12), 16, 10).cast("long")
-         % F.lit(MERSENNE31))
-    hashed = exploded.select("doc", m.alias("_m"))
-    aggs = [F.min((F.lit(a) * F.col("_m") + F.lit(b)) % F.lit(MERSENNE31))
-            .alias(f"_h{i}") for i, (a, b) in enumerate(params)]
-    return (hashed.groupBy("doc").agg(*aggs)
-            .select("doc", F.array(*[F.col(f"_h{i}")
-                                     for i in range(num_hashes)])
-                    .alias("sig")))
+    m = (F.conv(F.substring(F.md5(F.col("_g")), 1, 12), 16, 10)
+         .cast("long") % F.lit(MERSENNE31))
+    hashed = _shingle_rows(df, text_col, id_col, shingle_k).select(
+        "doc", m.alias("_m"))
+    return _min_signature(
+        hashed, [(F.lit(a) * F.col("_m") + F.lit(b)) % F.lit(MERSENNE31)
+                 for a, b in params])
 
 
 def minhash_candidates_portable(df: DataFrame, text_col: str = "text",
@@ -380,68 +348,50 @@ def minhash_candidates_portable(df: DataFrame, text_col: str = "text",
                                 seed: int = 42) -> DataFrame:
     """LSH candidate pairs over the PORTABLE signature family
     (:func:`minhash_signatures_portable`): (id_a < id_b,
-    n_bands_matched).  Identical banding plan to
-    :func:`minhash_candidates` — merge-hinted self-join so ReusedExchange
-    computes the signature pipeline once — but the band bucket is the
-    comma-joined slice VALUES (a string), not an xxhash64 of them, so an
-    independent engine reproduces the buckets and therefore the exact
-    pair set."""
-    rows = num_hashes // bands
+    n_bands_matched), banded by :func:`band_pairs_from_signatures` like
+    every minhash family here, so the band bucket is the xxhash64 of the
+    comma-joined slice values.  An independent engine reproduces the
+    signatures and buckets on the comma-joined string itself; the pair
+    sets are equal unless two different band slices collide in 64 bits.
+    """
     sigs = minhash_signatures_portable(df, text_col, id_col, num_hashes,
                                        shingle_k, seed)
-    band_structs = []
-    for b in range(bands):
-        elems = [F.get(F.col("sig"), b * rows + j).cast("string")
-                 for j in range(rows)]
-        band_structs.append(F.struct(
-            F.lit(b).alias("band"),
-            F.concat_ws(",", *elems).alias("bucket")))
-    banded = sigs.select(
-        "doc", F.explode(F.array(*band_structs)).alias("bb")
-    ).select("doc", "bb.band", "bb.bucket").hint("merge")
-    left = banded.alias("l")
-    right = banded.alias("r")
-    return (left.join(right,
-                      (F.col("l.band") == F.col("r.band"))
-                      & (F.col("l.bucket") == F.col("r.bucket"))
-                      & (F.col("l.doc") < F.col("r.doc")))
-            .groupBy(F.col("l.doc").alias("id_a"),
-                     F.col("r.doc").alias("id_b"))
-            .agg(F.count(F.lit(1)).alias("n_bands_matched")))
+    return band_pairs_from_signatures(sigs, num_hashes, bands)
+
+
+def _pair_grams(df: DataFrame, candidates: DataFrame, text_col: str,
+                id_col: str, ngram: int) -> DataFrame:
+    """``candidates`` with both sides' word-n-gram sets (set verifiers)."""
+    grams = df.select(F.col(id_col).alias("doc"),
+                      word_ngrams(F.col(text_col), ngram).alias("grams"))
+    return (candidates
+            .join(grams.withColumnRenamed("doc", "id_a")
+                  .withColumnRenamed("grams", "grams_a"), "id_a")
+            .join(grams.withColumnRenamed("doc", "id_b")
+                  .withColumnRenamed("grams", "grams_b"), "id_b"))
 
 
 def jaccard_verify(df: DataFrame, candidates: DataFrame,
                    text_col: str = "text", id_col: str = "doc_id",
                    ngram: int = 3, threshold: float = 0.8) -> DataFrame:
     """Exact word-ngram Jaccard on candidate pairs (joins the corpus twice,
-    but only candidate rows flow into the similarity compute)."""
-    grams = df.select(F.col(id_col).alias("doc"),
-                      word_ngrams(F.col(text_col), ngram).alias("grams"))
-    out = (candidates
-           .join(grams.withColumnRenamed("doc", "id_a")
-                 .withColumnRenamed("grams", "grams_a"), "id_a")
-           .join(grams.withColumnRenamed("doc", "id_b")
-                 .withColumnRenamed("grams", "grams_b"), "id_b"))
+    but only candidate rows flow into the similarity compute).  A pair
+    whose gram sets are both empty (two docs shorter than ``ngram``
+    words) has no Jaccard and is dropped."""
+    out = _pair_grams(df, candidates, text_col, id_col, ngram)
     inter = F.size(F.array_intersect("grams_a", "grams_b"))
     union = F.size(F.array_union("grams_a", "grams_b"))
     return (out.select("id_a", "id_b",
-                       (inter / union).alias("jaccard"))
+                       F.when(union > 0, inter / union).alias("jaccard"))
             .filter(F.col("jaccard") >= threshold))
 
 
 def ngram_jaccard_pairs(df: DataFrame, text_col: str = "text",
                         id_col: str = "doc_id", ngram: int = 3,
-                        threshold: float = 0.8, portable: bool = False,
-                        **lsh_kwargs) -> DataFrame:
-    """End-to-end near-dup detection: LSH candidates → exact
-    verification.  ``portable=True`` generates candidates with the
-    md5/affine-mod-p family (:func:`minhash_candidates_portable`) whose
-    every step an independent SQL engine reproduces — the mode that
-    lets the WHOLE candidates→verify pipeline be hash-oracled; the
-    default xxhash64 family is ~2-3× cheaper per shingle and stays the
-    production path (rows-only in the driver contract)."""
-    gen = minhash_candidates_portable if portable else minhash_candidates
-    cand = gen(df, text_col, id_col, **lsh_kwargs)
+                        threshold: float = 0.8, **lsh_kwargs) -> DataFrame:
+    """End-to-end near-dup detection: LSH candidates
+    (:func:`minhash_candidates`) → exact verification."""
+    cand = minhash_candidates(df, text_col, id_col, **lsh_kwargs)
     return jaccard_verify(df, cand.select("id_a", "id_b"),
                           text_col, id_col, ngram, threshold)
 
@@ -528,11 +478,15 @@ def simhash(df: DataFrame, text_col: str = "text",
     return df.select(F.col(id_col), _simhash(F.col(text_col)).alias("simhash"))
 
 
-def simhash_near_dups(df: DataFrame, text_col: str = "text",
-                      id_col: str = "doc_id", max_hamming: int = 3,
-                      blocks: int = 4) -> DataFrame:
-    """Near-dup pairs by SimHash: block-permuted bucketing (pigeonhole: two
-    hashes within hamming distance < blocks share at least one identical
+def _simhash_pairs(df: DataFrame, text_col: str, id_col: str, fingerprint,
+                   nbits: int, max_hamming: int, blocks: int) -> DataFrame:
+    """(id_a < id_b, hamming) pairs within ``max_hamming`` — the block
+    self-join both SimHash fingerprints share.  ``fingerprint`` is
+    :func:`simhash` or :func:`simhash_portable`: it maps the non-empty
+    rows of ``df`` to ``(id, simhash)`` with ``nbits``-bit fingerprints.
+
+    Block-permuted bucketing (pigeonhole: two hashes within hamming
+    distance < blocks share at least one identical ``nbits // blocks``-bit
     block), then exact hamming check via bit_count(xor).
 
     NULL / whitespace-only documents are filtered out first — same
@@ -545,8 +499,8 @@ def simhash_near_dups(df: DataFrame, text_col: str = "text",
     """
     nonempty = df.filter(F.col(text_col).isNotNull()
                          & (F.trim(F.col(text_col)) != ""))
-    sh = simhash(nonempty, text_col, id_col)
-    width = 64 // blocks
+    sh = fingerprint(nonempty, text_col, id_col)
+    width = nbits // blocks
     mask = (1 << width) - 1
     block_structs = [
         F.struct(F.lit(b).alias("block"),
@@ -555,11 +509,11 @@ def simhash_near_dups(df: DataFrame, text_col: str = "text",
         for b in range(blocks)
     ]
     blocked = sh.select(
-        F.col(id_col).alias("doc"), "simhash",
+        F.col(sh.columns[0]).alias("doc"), "simhash",
         F.explode(F.array(*block_structs)).alias("bb"),
     ).select("doc", "simhash", "bb.block", "bb.key")
     # sort-merge self-join → identical shuffles on both sides hit
-    # ReusedExchange, so the simhash UDF pipeline runs ONCE (a broadcast
+    # ReusedExchange, so the fingerprint pipeline runs ONCE (a broadcast
     # build side would recompute it per side; same fix as minhash).
     blocked = blocked.hint("merge")
     l, r = blocked.alias("l"), blocked.alias("r")
@@ -572,6 +526,16 @@ def simhash_near_dups(df: DataFrame, text_col: str = "text",
                          F.col("r.simhash"))).alias("hamming"))
              .distinct())
     return pairs.filter(F.col("hamming") <= max_hamming)
+
+
+def simhash_near_dups(df: DataFrame, text_col: str = "text",
+                      id_col: str = "doc_id", max_hamming: int = 3,
+                      blocks: int = 4) -> DataFrame:
+    """Near-dup pairs over the 64-bit :func:`simhash`, by the block
+    self-join of :func:`_simhash_pairs` (16-bit blocks at the default
+    4).  NULL / whitespace-only documents are absent."""
+    return _simhash_pairs(df, text_col, id_col, simhash, 64, max_hamming,
+                          blocks)
 
 
 def simhash_portable(df: DataFrame, text_col: str = "text",
@@ -618,35 +582,14 @@ def simhash_near_dups_portable(df: DataFrame, text_col: str = "text",
                                max_hamming: int = 8,
                                blocks: int = 4) -> DataFrame:
     """Near-dup pairs over the PORTABLE 48-bit SimHash
-    (:func:`simhash_portable`): same block-permuted pigeonhole bucketing
-    and merge-hinted self-join as :func:`simhash_near_dups`, 12-bit
-    blocks.  Because fingerprint, blocking, and hamming check are all
-    engine-neutral integer arithmetic, an independent SQL engine
+    (:func:`simhash_portable`), by the same block self-join as
+    :func:`simhash_near_dups` (:func:`_simhash_pairs`, 12-bit blocks at
+    the default 4).  Because fingerprint, blocking, and hamming check
+    are all engine-neutral integer arithmetic, an independent SQL engine
     reproduces the exact (id_a, id_b, hamming) output — see
     __spark_entry__.py simhash_oracle."""
-    sh = simhash_portable(df, text_col, id_col)
-    width = 48 // blocks
-    mask = (1 << width) - 1
-    block_structs = [
-        F.struct(F.lit(b).alias("block"),
-                 F.shiftrightunsigned(F.col("simhash"), b * width)
-                 .bitwiseAND(F.lit(mask)).alias("key"))
-        for b in range(blocks)
-    ]
-    blocked = sh.select(
-        "doc", "simhash",
-        F.explode(F.array(*block_structs)).alias("bb"),
-    ).select("doc", "simhash", "bb.block", "bb.key").hint("merge")
-    l, r = blocked.alias("l"), blocked.alias("r")
-    pairs = (l.join(r, (F.col("l.block") == F.col("r.block"))
-                    & (F.col("l.key") == F.col("r.key"))
-                    & (F.col("l.doc") < F.col("r.doc")))
-             .select(F.col("l.doc").alias("id_a"),
-                     F.col("r.doc").alias("id_b"),
-                     F.bit_count(F.col("l.simhash").bitwiseXOR(
-                         F.col("r.simhash"))).cast("int").alias("hamming"))
-             .distinct())
-    return pairs.filter(F.col("hamming") <= max_hamming)
+    return _simhash_pairs(df, text_col, id_col, simhash_portable, 48,
+                          max_hamming, blocks)
 
 
 def containment_verify(df: DataFrame, candidates: DataFrame,
@@ -666,13 +609,7 @@ def containment_verify(df: DataFrame, candidates: DataFrame,
     Same scale shape as :func:`jaccard_verify`: candidates-only compute,
     two distinct-gram corpus joins, all codegen set ops.
     """
-    grams = df.select(F.col(id_col).alias("doc"),
-                      word_ngrams(F.col(text_col), ngram).alias("grams"))
-    out = (candidates
-           .join(grams.withColumnRenamed("doc", "id_a")
-                 .withColumnRenamed("grams", "grams_a"), "id_a")
-           .join(grams.withColumnRenamed("doc", "id_b")
-                 .withColumnRenamed("grams", "grams_b"), "id_b"))
+    out = _pair_grams(df, candidates, text_col, id_col, ngram)
     inter = F.size(F.array_intersect("grams_a", "grams_b")).cast("double")
     ca = F.when(F.size("grams_a") > 0, inter / F.size("grams_a"))
     cb = F.when(F.size("grams_b") > 0, inter / F.size("grams_b"))

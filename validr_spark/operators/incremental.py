@@ -43,8 +43,8 @@ from pyspark.sql.functions import pandas_udf
 
 from validr_spark.operators.dedup import normalize_text
 
-__all__ = ["BloomFilter", "build_fingerprint_bloom", "incremental_dedup",
-           "incremental_new_rows"]
+__all__ = ["BloomFilter", "bloom_from_keys", "build_fingerprint_bloom",
+           "incremental_dedup", "incremental_new_rows", "might_contain_udf"]
 
 
 class BloomFilter:
@@ -125,30 +125,59 @@ def _fingerprints(df: DataFrame, text_col: str) -> DataFrame:
     return df.select(F.xxhash64(normalize_text(F.col(text_col))).alias("_fp"))
 
 
-def build_fingerprint_bloom(ref: DataFrame, text_col: str = "text", *,
-                            expected: int | None = None,
-                            fpp: float = 0.01) -> BloomFilter:
-    """One scan over the reference corpus → driver-side BloomFilter.
+def bloom_from_keys(keys: DataFrame, expected: int,
+                    fpp: float) -> BloomFilter:
+    """One scan over a single int64 column → driver-side BloomFilter sized
+    for ``expected`` keys at ``fpp``.
 
     Per-partition bitsets are OR-combined with ``treeReduce`` (depth 2),
     so the driver receives O(sqrt(P)) partials of m/8 bytes each, not P.
-    ``expected`` defaults to a cheap ``count()`` of the reference (a
-    second scan; pass the known corpus size at production scale).
     """
-    if expected is None:
-        expected = ref.count()
     m_bits, k = BloomFilter.params(expected, fpp)
-    fps = _fingerprints(ref, text_col)
 
     def partition_bloom(rows):
         bf = BloomFilter(m_bits, k)
-        keys = np.fromiter((r[0] for r in rows), dtype=np.int64)
-        bf.add(keys)
+        bf.add(np.fromiter((r[0] for r in rows), dtype=np.int64))
         yield bf.bits
 
-    bits = (fps.rdd.mapPartitions(partition_bloom)
+    bits = (keys.rdd.mapPartitions(partition_bloom)
             .treeReduce(np.bitwise_or, depth=2))
     return BloomFilter(m_bits, k, bits)
+
+
+def build_fingerprint_bloom(ref: DataFrame, text_col: str = "text", *,
+                            expected: int | None = None,
+                            fpp: float = 0.01) -> BloomFilter:
+    """One scan over the reference corpus → driver-side BloomFilter of its
+    fingerprints (:func:`bloom_from_keys`).  ``expected`` defaults to a
+    cheap ``count()`` of the reference (a second scan; pass the known
+    corpus size at production scale).
+    """
+    if expected is None:
+        expected = ref.count()
+    return bloom_from_keys(_fingerprints(ref, text_col), expected, fpp)
+
+
+def might_contain_udf(spark, bloom: BloomFilter):
+    """Broadcast ``bloom`` once and return a boolean pandas UDF over int64
+    keys: ``bloom.might_contain`` per Arrow batch (no false negatives).
+
+    Marked nondeterministic: InferFiltersFromConstraints would otherwise
+    copy a membership predicate through a join's key equality onto the
+    OTHER branch — where it is always-true by construction (the bloom was
+    built from that side) and would cost a wasted UDF pass over the whole
+    corpus.  The UDF is in fact deterministic; the flag only stops
+    Catalyst from cloning it (PERF.md Finding 7).
+    """
+    b = spark.sparkContext.broadcast((bloom.m_bits, bloom.k, bloom.bits))
+
+    @pandas_udf("boolean")
+    def _might_contain(keys: pd.Series) -> pd.Series:
+        m_bits, k, bits = b.value
+        bf = BloomFilter(m_bits, k, bits)
+        return pd.Series(bf.might_contain(keys.to_numpy(dtype=np.int64)))
+
+    return _might_contain.asNondeterministic()
 
 
 def incremental_new_rows(new: DataFrame, ref: DataFrame,
@@ -166,26 +195,10 @@ def incremental_new_rows(new: DataFrame, ref: DataFrame,
     if bloom is None:
         bloom = build_fingerprint_bloom(ref, text_col,
                                         expected=expected, fpp=fpp)
-    sc = new.sparkSession.sparkContext
-    b = sc.broadcast((bloom.m_bits, bloom.k, bloom.bits))
-
-    @pandas_udf("boolean")
-    def _might_contain(fp: pd.Series) -> pd.Series:
-        m_bits, k, bits = b.value
-        bf = BloomFilter(m_bits, k, bits)
-        return pd.Series(bf.might_contain(fp.to_numpy(dtype=np.int64)))
-
-    # nondeterministic guard: InferFiltersFromConstraints would otherwise
-    # copy the membership predicate through the anti-join's key equality
-    # onto the REFERENCE branch — where it is always-true by construction
-    # (the bloom was built from ref) and would cost a wasted UDF pass over
-    # the whole corpus.  The UDF is in fact deterministic; the flag only
-    # stops Catalyst from cloning it.
-    _might_contain = _might_contain.asNondeterministic()
-
+    maybe = might_contain_udf(new.sparkSession, bloom)
     fp = F.xxhash64(normalize_text(F.col(text_col)))
     tagged = new.withColumn("_fp", fp).withColumn(
-        "_maybe_dup", _might_contain(F.col("_fp")))
+        "_maybe_dup", maybe(F.col("_fp")))
     # bloom-negative: provably new, bypasses the join (no shuffle)
     definite = tagged.filter(~F.col("_maybe_dup"))
     # bloom-positive: exact confirmation against the reference keys
