@@ -865,6 +865,16 @@ def test_minhash_tokens_plan_no_python(spark):
     assert_no_python(minhash_signatures_tokens(df, num_hashes=8))
 
 
+def test_simhash_near_dups_one_python_pass_per_join_side(spark, docs):
+    from validr_spark.testing import python_passes
+
+    # one ArrowEvalPython per side of the block self-join; without the
+    # fingerprint barrier the join's inferred isnotnull(simhash) filter
+    # re-runs the UDF below its own projection (4 passes)
+    assert python_passes(dedup.simhash_near_dups(docs)) == 2
+    assert python_passes(dedup.simhash_near_dups_portable(docs)) == 0
+
+
 def test_knn_join_partition_prune_keeps_lowest_id_on_score_tie(spark):
     """The per-partition top-k prune must keep the LOWEST corpus id
     among equal scores — a score-only prune could keep the wrong id and

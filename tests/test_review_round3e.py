@@ -1,10 +1,8 @@
 """Regression tests for the round-3 continuation review of the tooling
-layer: schemadiff model/list/map handling, field-added-with-default
-classification, and the bench steady-state protocol inversion."""
+layer: schemadiff model/list/map handling and field-added-with-default
+classification."""
 
 import json
-
-import pytest
 
 from validr_spark import T, modelclass
 from validr_spark.schemadiff import (diff_verdict, needs_revalidation,
@@ -71,39 +69,3 @@ def test_schema_diff_field_added_with_default_is_behavioral():
     d2 = schema_diff(old, T.dict(a=T.int, b=T.int))
     assert d2[0]["severity"] == "narrowing"
 
-
-# ---------------------------------------------------- bench steady window
-
-def _mock_steady(monkeypatch, seq):
-    import bench
-
-    it = iter(seq)
-
-    def fake(_spark):
-        t = next(it)
-        return {"seconds": t, "rows": 100, "tokens": 1000,
-                "sequences_per_sec": 100 / t, "tokens_per_sec": 1000 / t}
-
-    monkeypatch.setattr(bench, "bench_sequences", fake)
-    return bench
-
-
-def test_bench_steady_stops_in_quiet_window(monkeypatch):
-    bench = _mock_steady(monkeypatch, [124.0, 3.3, 3.4, 3.2, 99.0, 99.0])
-    out = bench.bench_sequences_steady(None, measured=3, max_runs=6)
-    # warmup run is excluded by the >10%-improvement reset; the three
-    # quiet runs end the loop BEFORE the trailing contended values
-    assert out["all_seconds"] == [124.0, 3.3, 3.4, 3.2]
-    assert out["seconds"] == 3.3            # median of the quiet window
-    assert out["best_seconds"] == 3.2
-
-
-def test_bench_steady_does_not_publish_contended_window(monkeypatch):
-    # fluke best then contention: the OLD (inverted) protocol stopped
-    # after three >=10%-worse runs and published median 410 as steady
-    bench = _mock_steady(monkeypatch,
-                         [36.0, 400.0, 410.0, 420.0, 37.0, 38.0, 36.5])
-    out = bench.bench_sequences_steady(None, measured=3, max_runs=7)
-    assert len(out["all_seconds"]) == 7     # did NOT early-exit on noise
-    assert out["seconds"] == 37.0           # median of the final quiet runs
-    assert out["best_seconds"] == 36.0

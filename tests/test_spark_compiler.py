@@ -240,6 +240,34 @@ def test_union_shape_static(spark):
                  [5, -1], "long")
 
 
+def test_container_over_wrong_column_type(spark):
+    # a static type mismatch: every non-null value fails `<field>.type`
+    # and coerces to NULL; a NULL value is only `required`
+    from pyspark.sql import types as st
+
+    cases = [
+        (T.dict(x=T.int), "string", "abc", "'abc'", "must be dict",
+         st.StructType([st.StructField("x", st.NullType())])),
+        (T.list(T.int), "int", 7, "7", "not list",
+         st.ArrayType(st.NullType())),
+        (T.union(a=T.dict(n=T.int), b=T.dict(m=T.str)).by("kind"),
+         "string", "abc", "'abc'", "must be dict", st.StringType()),
+    ]
+    for schema, ddl, value, raw, message, out_type in cases:
+        df = spark.createDataFrame([(0, value), (1, None)],
+                                   f"rid int, f {ddl}")
+        res = SparkCompiler().compile(T.dict(f=schema)).apply(
+            df, id_cols=["rid"])
+        assert res.df.schema["f"].dataType == out_type
+        assert [r["f"] for r in res.df.orderBy("rid").collect()] == \
+            [None, None]
+        viols = {v["rid"]: v for v in res.violations().collect()}
+        assert (viols[0]["rule_id"], viols[0]["position"],
+                viols[0]["message"]) == ("f.type", "f", message)
+        assert viols[0]["value"] == raw
+        assert viols[1]["rule_id"] == "f.required"
+
+
 def test_value_clipping(spark):
     df = spark.createDataFrame([(0, "x" * 100)], "rid int, v string")
     plan = SparkCompiler().compile(T.dict(v=T.str.maxlen(10)))

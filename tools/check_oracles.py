@@ -9,12 +9,14 @@ import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+# the tree this script lives in, not whatever copy is installed
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 # Python-UDF workers don't inherit the driver's sys.path — they need the
 # package importable via PYTHONPATH (set BEFORE the JVM starts so the
 # worker daemons inherit it).  Without this, running the check from a
 # scratch cwd fails only the UDF-bearing queries with ModuleNotFoundError.
-os.environ["PYTHONPATH"] = "/root/repo" + (
+os.environ["PYTHONPATH"] = ROOT + (
     os.pathsep + os.environ["PYTHONPATH"]
     if os.environ.get("PYTHONPATH") else "")
 

@@ -263,21 +263,10 @@ class SparkCompiler:
                         "count input-mapping keys) — use a MapType column "
                         "for dynamic dicts, or drop the param")
         if not isinstance(input_type, st.StructType):
-            # static type mismatch: every non-null value is 'must be dict'
             out_t = st.StructType([st.StructField(k, st.NullType())
                                    for k in items]) if items else input_type
-
-            def coerce(col):
-                return F.lit(None).cast(out_t)
-
-            def error(col, pos):
-                return F.when(col.isNotNull(),
-                              mkviol(f"{path}.type", pos, "must be dict",
-                                     value_repr(col, input_type))
-                              ).otherwise(NULL_VIOLATION())
-
-            return CoreRule(out_t, coerce, error, accept_string=False,
-                            string_output=False)
+            return self._type_mismatch_core(input_type, path,
+                                            "must be dict", out_t)
 
         field_types = {f.name: f.dataType for f in input_type.fields}
         children = {}
@@ -389,19 +378,8 @@ class SparkCompiler:
         unique = bool(schema.params.get("unique", False))
         inner_schema = schema.items
         if not isinstance(input_type, st.ArrayType):
-            out_t = st.ArrayType(st.NullType())
-
-            def coerce(col):
-                return F.lit(None).cast(out_t)
-
-            def error(col, pos):
-                return F.when(col.isNotNull(),
-                              mkviol(f"{path}.type", pos, "not list",
-                                     value_repr(col, input_type))
-                              ).otherwise(NULL_VIOLATION())
-
-            return CoreRule(out_t, coerce, error, accept_string=False,
-                            string_output=False)
+            return self._type_mismatch_core(input_type, path, "not list",
+                                            st.ArrayType(st.NullType()))
 
         et = input_type.elementType
         inner: Optional[NodePlan] = None
@@ -681,9 +659,15 @@ class SparkCompiler:
         return CoreRule(out_t, coerce, error, accept_string=False,
                         string_output=False)
 
-    def _type_mismatch_core(self, input_type, path, message) -> CoreRule:
+    def _type_mismatch_core(self, input_type, path, message,
+                            out_t=None) -> CoreRule:
+        """Static type mismatch: every non-null value fails
+        ``<path>.type`` with ``message`` and coerces to a NULL of
+        ``out_t`` (default: the input type)."""
+        out_t = input_type if out_t is None else out_t
+
         def coerce(col):
-            return F.lit(None).cast(input_type)
+            return F.lit(None).cast(out_t)
 
         def error(col, pos):
             return F.when(col.isNotNull(),
@@ -691,7 +675,7 @@ class SparkCompiler:
                                  value_repr(col, input_type))
                           ).otherwise(NULL_VIOLATION())
 
-        return CoreRule(input_type, coerce, error, accept_string=False,
+        return CoreRule(out_t, coerce, error, accept_string=False,
                         string_output=False)
 
 

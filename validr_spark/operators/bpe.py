@@ -237,18 +237,27 @@ def _tokens_expr(spark, merges, text_col: str,
                  vocab: dict[str, int] | None, unk_id: int):
     """Column expression: BPE token array for ``text_col`` — pieces
     (array<string>) without a vocab, ids (array<int>) with one."""
-    sc = spark.sparkContext
-    bc = sc.broadcast((dict({tuple(m): i for i, m in enumerate(merges)}),
-                       dict(vocab) if vocab is not None else None))
+    ranks = {tuple(m): i for i, m in enumerate(merges)}
+    return _word_tokens_expr(spark, bpe_encode_word, ranks, text_col,
+                             vocab, unk_id)
 
-    if vocab is None:
-        out_type = st.ArrayType(st.StringType())
-    else:
-        out_type = st.ArrayType(st.IntegerType())
+
+def _word_tokens_expr(spark, segment, table, text_col: str,
+                      ids: dict[str, int] | None, unk_id: int):
+    """Column expression: ``text_col`` split by ``WORD_REGEX``, each
+    word cut into pieces by ``segment(word, table)``, concatenated —
+    pieces (array<string>) without ``ids``, ids (array<int>, unknown
+    pieces → ``unk_id``) with them.  The encoder shared by BPE and
+    :func:`unigram.apply_unigram`: ``table`` and ``ids`` are broadcast
+    once, and each Python worker caches pieces per distinct word."""
+    bc = spark.sparkContext.broadcast(
+        (dict(table), dict(ids) if ids is not None else None))
+    out_type = (st.ArrayType(st.IntegerType()) if ids is not None
+                else st.ArrayType(st.StringType()))
 
     @F.pandas_udf(out_type)
     def _encode(words: pd.Series) -> pd.Series:
-        ranks, voc = bc.value
+        tab, idmap = bc.value
         cache: dict[str, list] = {}
 
         def enc(ws):
@@ -258,11 +267,11 @@ def _tokens_expr(spark, merges, text_col: str,
             for w in ws:
                 toks = cache.get(w)
                 if toks is None:
-                    pieces = bpe_encode_word(w, ranks)
-                    if voc is None:
+                    pieces = segment(w, tab)
+                    if idmap is None:
                         toks = pieces
                     else:
-                        toks = [voc.get(p, unk_id) for p in pieces]
+                        toks = [idmap.get(p, unk_id) for p in pieces]
                     if len(cache) >= (1 << 18):
                         cache.clear()
                     cache[w] = toks

@@ -500,6 +500,11 @@ def _simhash_pairs(df: DataFrame, text_col: str, id_col: str, fingerprint,
     nonempty = df.filter(F.col(text_col).isNotNull()
                          & (F.trim(F.col(text_col)) != ""))
     sh = fingerprint(nonempty, text_col, id_col)
+    # once: InferFiltersFromConstraints would otherwise copy the join's
+    # isnotnull(simhash) below the pandas-UDF projection, which then
+    # runs twice per side (PERF.md Finding 19)
+    sh = sh.select(F.col(sh.columns[0]).alias("doc"),
+                   once(F.col("simhash")).alias("simhash"))
     width = nbits // blocks
     mask = (1 << width) - 1
     block_structs = [
@@ -509,7 +514,7 @@ def _simhash_pairs(df: DataFrame, text_col: str, id_col: str, fingerprint,
         for b in range(blocks)
     ]
     blocked = sh.select(
-        F.col(sh.columns[0]).alias("doc"), "simhash",
+        "doc", "simhash",
         F.explode(F.array(*block_structs)).alias("bb"),
     ).select("doc", "simhash", "bb.block", "bb.key")
     # sort-merge self-join → identical shuffles on both sides hit

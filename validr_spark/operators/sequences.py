@@ -153,8 +153,9 @@ def collect_report(queries: dict) -> dict:
 
 
 def sequence_report(df: DataFrame, dim: DataFrame, **kw) -> dict:
-    """One-shot verdict metrics for the bench / manifest pipeline:
-    per-source rows, tokens, row-level violations, token violations,
+    """One-shot verdict metrics (what the perfbench ``verdict`` workload
+    runs, as ``build_report_queries`` + ``collect_report``): per-source
+    rows, tokens, row-level violations, token violations,
     referential orphans, n_tok consistency — 2 codegen scans + 1
     uniqueness shuffle, no HOF anywhere.
 

@@ -30,13 +30,11 @@ from __future__ import annotations
 
 import math
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as st
 
 from ._barrier import once
-from .bpe import WORD_REGEX
+from .bpe import WORD_REGEX, _word_tokens_expr
 
 __all__ = ["train_unigram_from_counts", "train_unigram",
            "unigram_ids", "viterbi_segment", "apply_unigram",
@@ -192,41 +190,12 @@ def _unigram_tokens_expr(spark, vocab_logp, text_col: str,
                          ids: dict[str, int] | None, unk_id: int):
     """Column expression: Viterbi unigram token array for
     ``text_col`` — pieces without ``ids``, int ids with them."""
-    sc = spark.sparkContext
-    bc = sc.broadcast((dict(vocab_logp),
-                       dict(ids) if ids is not None else None))
-    out_type = (st.ArrayType(st.IntegerType()) if ids is not None
-                else st.ArrayType(st.StringType()))
+    def segment(w, logp):
+        seg = viterbi_segment(w, logp, max_piece_len)
+        return list(w) if seg is None else seg     # char fallback
 
-    @F.pandas_udf(out_type)
-    def _encode(words: pd.Series) -> pd.Series:
-        logp, idmap = bc.value
-        cache: dict[str, list] = {}
-
-        def enc(ws):
-            if ws is None:
-                return None
-            out = []
-            for w in ws:
-                toks = cache.get(w)
-                if toks is None:
-                    seg = viterbi_segment(w, logp, max_piece_len)
-                    if seg is None:
-                        seg = list(w)          # char fallback
-                    if idmap is None:
-                        toks = seg
-                    else:
-                        toks = [idmap.get(s, unk_id) for s in seg]
-                    if len(cache) >= (1 << 18):
-                        cache.clear()
-                    cache[w] = toks
-                out.extend(toks)
-            return out
-
-        return words.map(enc)
-
-    return _encode(F.regexp_extract_all(F.col(text_col),
-                                        F.lit(WORD_REGEX), 0))
+    return _word_tokens_expr(spark, segment, vocab_logp, text_col, ids,
+                             unk_id)
 
 
 def apply_unigram(df: DataFrame, vocab_logp: dict[str, float],
