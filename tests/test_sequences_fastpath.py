@@ -68,17 +68,44 @@ def test_element_violations_per_row_with_shared_and_null_ids(spark):
     ], key=repr)
 
 
+SEQ_DDL = "doc_id string, tokens array<int>, n_tok int, source string"
+REPORT_KW = dict(vocab=VOCAB, maxlen=8192, sources=SOURCES, max_n_tok=8192)
+
+
+def _bad_tokens_by_source(df):
+    """Reference count: explode every token, keep the NULL and
+    out-of-vocabulary ones, count them per source."""
+    x = F.col("_x")
+    return {r["source"]: r["count"] for r in
+            df.select("source", F.explode("tokens").alias("_x"))
+            .filter(x.isNull() | (x < 0) | (x >= VOCAB))
+            .groupBy("source").count().collect()}
+
+
+def _report_bad_tokens(rep):
+    return {r["source"]: r["n_token_violations"] for r in rep["per_source"]
+            if r["n_token_violations"]}
+
+
 def test_sequence_report_counts(spark):
-    df = make_sequences(spark, 20000, maxlen=64)
-    rep = seqops.sequence_report(df, make_sources_dim(spark), vocab=VOCAB,
-                                 maxlen=8192, sources=SOURCES,
-                                 max_n_tok=8192)
+    # a tenth of the rows get two more bad tokens, another tenth a NULL
+    # element and a bad token
+    k = F.pmod(F.xxhash64("doc_id"), F.lit(10))
+    df = make_sequences(spark, 20000, maxlen=64).withColumn(
+        "tokens",
+        F.when(k == 0, F.concat("tokens", F.array(F.lit(-7),
+                                                  F.lit(VOCAB + 3))))
+         .when(k == 1, F.concat("tokens", F.array(F.lit(None).cast("int"),
+                                                  F.lit(-1))))
+         .otherwise(F.col("tokens")))
+    rep = seqops.sequence_report(df, make_sources_dim(spark), **REPORT_KW)
     total_rows = sum(r["n_rows"] for r in rep["per_source"])
     assert total_rows == 20000
     assert rep["dup_keys"] > 0
     assert sum(r["n_orphans"] for r in rep["per_source"]) > 0
     assert sum(r["n_token_violations"] for r in rep["per_source"]) > 0
     assert sum(r["n_inconsistent"] for r in rep["per_source"]) > 0
+    assert _report_bad_tokens(rep) == _bad_tokens_by_source(df)
 
 
 def test_report_attributes_unknown_source_token_violations(spark):
@@ -90,16 +117,66 @@ def test_report_attributes_unknown_source_token_violations(spark):
         ("d2", [-5, 2], 2, "mystery"),         # unknown source, 1 bad token
         ("d3", [VOCAB + 7], 1, None),          # null source, 1 bad token
         ("d4", [-1, -2], 2, "mystery"),        # unknown source, 2 bad tokens
+        ("d5", [None, -1, None, VOCAB], 4, "other"),   # NULLs + 2 bad
+        ("d6", [None, 5, -2, VOCAB + 1], 4, "books"),  # NULL + 2 bad
+        ("d7", [None], 1, "books"),                    # only a NULL
     ]
-    df = spark.createDataFrame(
-        rows, "doc_id string, tokens array<int>, n_tok int, source string")
-    rep = seqops.sequence_report(df, make_sources_dim(spark), vocab=VOCAB,
-                                 maxlen=8192, sources=SOURCES,
-                                 max_n_tok=8192)
+    df = spark.createDataFrame(rows, SEQ_DDL)
+    rep = seqops.sequence_report(df, make_sources_dim(spark), **REPORT_KW)
     by_src = {r["source"]: r for r in rep["per_source"]}
     assert by_src["mystery"]["n_token_violations"] == 3
     assert by_src[None]["n_token_violations"] == 1
     assert by_src["web"]["n_token_violations"] == 0
+    assert by_src["other"]["n_token_violations"] == 4
+    assert by_src["books"]["n_token_violations"] == 4
+    assert _report_bad_tokens(rep) == _bad_tokens_by_source(df)
+
+
+def test_report_counts_bad_tokens_without_native_screen(spark):
+    # double tokens get no whole-array screen: the count still holds
+    rows = [("d1", [1.0, -1.0, None, VOCAB + 0.5], 4, "web"),
+            ("d2", [2.0, 3.0], 2, "web"), ("d3", None, 1, "code")]
+    df = spark.createDataFrame(
+        rows, "doc_id string, tokens array<double>, n_tok int, "
+              "source string")
+    rep = seqops.sequence_report(df, make_sources_dim(spark), **REPORT_KW)
+    assert _report_bad_tokens(rep) == _bad_tokens_by_source(df) == {"web": 3}
+
+
+def test_report_queries_read_tokens_once(spark, tmp_path):
+    """The bad-token count rides the row-check scan: one scan reads
+    ``tokens``, and nothing explodes it."""
+    path = str(tmp_path / "seq")
+    make_sequences(spark, 200, maxlen=16).write.parquet(path)
+    qs = seqops.build_report_queries(spark.read.parquet(path),
+                                     make_sources_dim(spark), **REPORT_KW)
+    assert qs["agg2"] is qs["agg1"]
+    plans = [q._jdf.queryExecution().executedPlan().toString()
+             for q in (qs["agg1"], qs["dup"])]
+    scans = [ln for p in plans for ln in p.splitlines()
+             if "FileScan" in ln and "tokens#" in ln]
+    assert len(scans) == 1
+    assert not any("Generate" in p for p in plans)
+
+
+def test_sequence_report_empty_table(spark):
+    from validr_spark.operators.uniqueness import duplication_report
+
+    df = spark.createDataFrame([], SEQ_DDL)
+    rep = seqops.sequence_report(df, make_sources_dim(spark), **REPORT_KW)
+    assert rep == {"per_source": [], "dup_keys": 0, "n_keys": 0}
+    assert duplication_report(df, "doc_id").first().asDict() == {
+        "n_rows": 0, "n_keys": 0, "n_dup_keys": 0, "n_surplus_rows": 0}
+
+
+def test_sequence_report_all_null_tokens(spark):
+    rows = [("a", None, 1, "web"), ("b", None, 2, "web"),
+            ("c", [1], 1, "code")]
+    rep = seqops.sequence_report(spark.createDataFrame(rows, SEQ_DDL),
+                                 make_sources_dim(spark), **REPORT_KW)
+    web = {r["source"]: r for r in rep["per_source"]}["web"]
+    assert web["n_rows"] == 2 and web["n_bad_rows"] == 2
+    assert web["n_tokens"] == 0 and web["n_token_violations"] == 0
 
 
 def test_position_token_stats_template_detection(spark):

@@ -525,3 +525,67 @@ def test_table_fingerprint_boundary_and_null_unambiguous(spark):
     d = spark.createDataFrame([(None,)], "x string")
     assert table_fingerprint(c).collect()[0]["fingerprint"] \
         != table_fingerprint(d).collect()[0]["fingerprint"]
+
+
+# -- the integer element screen's null probe --------------------------------
+
+_SPANS = {ddl: (-2 ** (b - 1), 2 ** (b - 1) - 1) for ddl, b in
+          (("tinyint", 8), ("smallint", 16), ("int", 32), ("bigint", 64))}
+
+
+def _compact_screen(arr, boolean, lo, hi):
+    """The array_compact form of the screen, which the probe replaced."""
+    larr = arr.cast("array<long>") if boolean else arr
+    cond = ((F.size(F.array_compact(arr)) < F.size(arr))
+            | (F.array_min(larr) < F.lit(lo))
+            | (F.array_max(larr) > F.lit(hi)))
+    return F.coalesce(cond, F.lit(False))
+
+
+def _screen_cases(t_lo, t_hi):
+    """(lo, hi) bounds: inside the type, and at its min and max (where only
+    one probe fits, or none)."""
+    return [(0, 9), (-3, 5), (t_lo, 4), (-2, t_hi), (t_lo, t_hi)]
+
+
+def test_array_screen_probe_equals_compact(spark):
+    import random
+
+    rnd = random.Random(7)
+    for ddl in ("tinyint", "smallint", "int", "bigint", "boolean"):
+        t_lo, t_hi = _SPANS.get(ddl, (0, 1))
+        cases = (_screen_cases(t_lo, t_hi) if ddl != "boolean"
+                 else [(0, 0), (1, 1), (0, 1)])
+        fits = lambda v: v is None or t_lo <= v <= t_hi   # noqa: E731
+        conv = bool if ddl == "boolean" else int
+        arrays = [None, [], [None]]
+        for lo, hi in cases:
+            probe = next((p for p in (lo - 1, hi + 1) if fits(p)), None)
+            mid = (lo + hi) // 2
+            arrays += [[probe], [probe, None], [lo, hi], [lo - 1], [hi + 1],
+                       [None, mid, probe], [mid, mid]]
+            pool = [lo - 1, lo, mid, hi, hi + 1, t_lo, t_hi, None]
+            arrays += [[rnd.choice(pool) for _ in range(rnd.randint(0, 5))]
+                       for _ in range(30)]
+        arrays = [a if a is None else [x if x is None else conv(x)
+                                       for x in a]
+                  for a in arrays if a is None or all(fits(x) for x in a)]
+        df = spark.createDataFrame([(i, a) for i, a in enumerate(arrays)],
+                                   f"rid int, a array<{ddl}>")
+        et = df.schema["a"].dataType.elementType
+        cols = []
+        for k, (lo, hi) in enumerate(cases):
+            node = SparkCompiler().compile_node(
+                T.int.min(lo).max(hi).__schema__, et, "a[]")
+            new = node.array_invalid(F.col("a"))
+            old = _compact_screen(F.col("a"), ddl == "boolean", lo, hi)
+            cols += [new.alias(f"n{k}"), old.alias(f"o{k}")]
+            plan = (df.select(new)._jdf.queryExecution().optimizedPlan()
+                    .toString().lower())
+            has_probe = ddl != "boolean" and (t_lo < lo or hi < t_hi)
+            assert ("lambdafunction" in plan) != has_probe, (ddl, lo, hi)
+            # the probe literal takes the element type: no per-row array cast
+            assert not has_probe or "cast(a#" not in plan, (ddl, lo, hi)
+        for r in df.select("rid", "a", *cols).collect():
+            for k, (lo, hi) in enumerate(cases):
+                assert r[f"n{k}"] == r[f"o{k}"], (ddl, lo, hi, r["a"])

@@ -64,6 +64,9 @@ def main():
              .appName("oracle-check")
              .config("spark.sql.shuffle.partitions", "16")
              .config("spark.ui.enabled", "false")
+             # no progress bars: they share lines with the "ok" results
+             # when the output goes to a file
+             .config("spark.ui.showConsoleProgress", "false")
              .config("spark.sql.session.timeZone", "UTC")
              .config("spark.driver.memory", "8g")
              .getOrCreate())

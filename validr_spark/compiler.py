@@ -408,9 +408,7 @@ class SparkCompiler:
                     F.lit(True))                      # 1-based, 0 = none
                 if inner.array_invalid is not None:
                     # whole-array screen first: the per-element HOF runs
-                    # only on flagged (~bad-rate) rows.  The screen's
-                    # array_compact null check is itself an interpreted
-                    # lambda on every element (PERF.md Finding 1).
+                    # only on flagged (~bad-rate) rows (PERF.md Finding 1).
                     pos1 = F.when(inner.array_invalid(col), hof_pos1) \
                         .otherwise(F.lit(0))
                 else:

@@ -5,16 +5,17 @@ Per-row violations come from the generic compiler:
 ``SparkCompiler().compile(T.dict(..., tokens=T.list(T.int.min(0)
 .max(vocab - 1)).maxlen(maxlen), ...)).apply(df, id_cols=[...])``.  Its
 ``_list_core`` screens each whole array with codegen'd ``array_min`` /
-``array_max`` first, so the interpreted per-element lambda (PERF.md
-Finding 1) runs only on the rows the screen flags.
+``array_max`` and an ``array_contains`` null probe first, so the
+interpreted per-element lambda (PERF.md Finding 1) runs only on the rows
+the screen flags.
 
 This module adds what the compiler does not cover:
 
 * ``rowlevel_schema`` + ``build_report_queries`` / ``sequence_report`` —
-  the aggregate verdict (per-source rows, tokens, violations, orphans,
-  n_tok consistency, key duplication) from two codegen scans and one
-  uniqueness shuffle, counting bad tokens with an explode pipeline
-  instead of per-row violation structs;
+  the aggregate verdict (per-source rows, tokens, violations, bad
+  tokens, orphans, n_tok consistency, key duplication) from one codegen
+  scan and one uniqueness shuffle; the bad-token count is gathered on
+  the row-check scan behind the same element screen;
 * ``frame_violations`` — BOS/EOS/padding framing checks;
 * ``position_token_stats`` / ``token_ngram_stats`` — template and
   degenerate-repetition profiles.
@@ -45,108 +46,76 @@ def build_report_queries(df: DataFrame, dim: DataFrame, *, vocab: int,
                          maxlen: int = 8192, sources: list[str],
                          max_id_len: int = 64,
                          max_n_tok: int | None = None) -> dict:
-    """Build (don't run) the three verdict queries; see sequence_report."""
+    """Build (don't run) the verdict queries; see sequence_report.
+
+    ``n_token_violations`` counts EVERY element that breaks the token
+    rule (NULL or outside ``[0, vocab)``), several per row if need be.  It
+    is a data-quality stat, not a violation count: the compiler's element
+    rule reports only a row's first bad token.  It rides ``agg1``'s scan;
+    the compiler's native ``array_invalid`` screen gates it, so the
+    per-element filter runs only on rows with a bad token.
+    """
     from .uniqueness import duplication_report
 
-    plan = SparkCompiler().compile(
+    sc = SparkCompiler()
+    plan = sc.compile(
         rowlevel_schema(vocab, maxlen, sources, max_id_len, max_n_tok))
+    tok = F.col("tokens")
+    elem = sc.compile_node(T.int.min(0).max(vocab - 1).__schema__,
+                           df.schema["tokens"].dataType.elementType,
+                           "tokens[]")
+    screen = elem.array_invalid or (lambda a: F.exists(a, elem.invalid))
+    n_bad_tok = F.when(screen(tok), F.size(F.filter(tok, elem.invalid))) \
+        .otherwise(0)
     dimj = F.broadcast(dim.select("source").withColumn("_in_dim", F.lit(1)))
 
-    # pass 1: row-level checks + verdict dimensions (scan-bound, codegen)
+    # one scan: row-level checks + verdict dimensions (codegen)
     res = plan.apply(
         df.withColumn("_n_tok_raw", F.col("n_tok"))
-          .withColumn("_size_raw", F.size("tokens"))
+          .withColumn("_size_raw", F.size(tok))
+          .withColumn("_bad_tok_raw", n_bad_tok)
           .withColumn("_src_raw", F.col("source")),
-        id_cols=["_n_tok_raw", "_size_raw", "_src_raw"])
+        id_cols=["_n_tok_raw", "_size_raw", "_bad_tok_raw", "_src_raw"])
     nviol = F.size("_violations")
     agg1 = (res.df
             .join(dimj, res.df["source"] == dimj["source"], "left")
             .groupBy("_src_raw")
             .agg(F.count(F.lit(1)).alias("n_rows"),
-                 F.sum("_size_raw").alias("n_tokens"),
+                 F.coalesce(F.sum("_size_raw"), F.lit(0)).alias("n_tokens"),
                  F.sum(nviol).alias("n_row_violations"),
                  F.sum(F.when(nviol > 0, 1).otherwise(0)).alias("n_bad_rows"),
+                 F.sum("_bad_tok_raw").alias("n_token_violations"),
                  F.sum(F.when(F.col("_in_dim").isNull(), 1).otherwise(0))
                   .alias("n_orphans"),
                  F.sum(F.when(F.col("_n_tok_raw") != F.col("_size_raw"), 1)
                        .otherwise(0)).alias("n_inconsistent")))
-
-    # pass 2: token-range counts per source (codegen explode pipeline;
-    # only bad tokens reach the partial agg).  The source STRING is
-    # dictionary-encoded to a tiny int BEFORE the explode — carrying a
-    # string per exploded token costs more than the range check itself.
-    # -1 = null source, -2 = source not in the configured list.  Known/null
-    # sources take the fast branch: ONLY the tiny int rides the explode —
-    # carrying a string per exploded token costs more than the range check
-    # itself (PERF.md Finding 1; measured 2.8s → 15.8s when a
-    # mostly-null string column was added here).  Unknown sources (rare:
-    # they're referential violations) take a separate pre-filtered branch
-    # that groups by the raw string so their counts are attributed, not
-    # silently dropped.
-    src_id = F.when(F.col("source").isNull(), F.lit(-1)).otherwise(F.lit(-2))
-    for k, s in enumerate(sources):
-        src_id = F.when(F.col("source") == s, F.lit(k)).otherwise(src_id)
-    x = F.col("_x")
-    known = (df.filter(F.col("source").isin(sources)
-                       | F.col("source").isNull())
-             .select(src_id.alias("_sid"), F.explode("tokens").alias("_x"))
-             .filter(x.isNull() | (x < 0) | (x >= vocab))
-             .groupBy("_sid")
-             .agg(F.count(F.lit(1)).alias("n_token_violations"))
-             .select("_sid", F.lit(None).cast("string").alias("_src_unk"),
-                     "n_token_violations"))
-    unknown = (df.filter(~F.col("source").isin(sources)
-                         & F.col("source").isNotNull())
-               .select(F.col("source").alias("_src_unk"),
-                       F.explode("tokens").alias("_x"))
-               .filter(x.isNull() | (x < 0) | (x >= vocab))
-               .groupBy("_src_unk")
-               .agg(F.count(F.lit(1)).alias("n_token_violations"))
-               .select(F.lit(-2).alias("_sid"), "_src_unk",
-                       "n_token_violations"))
-    agg2 = known.unionByName(unknown)
-    return {"agg1": agg1, "agg2": agg2,
-            "dup": duplication_report(df, "doc_id"),
-            "sources": sources}
+    # "agg2" aliases agg1 until perfbench stops planning it (ROADMAP item 1)
+    return {"agg1": agg1, "agg2": agg1,
+            "dup": duplication_report(df, "doc_id")}
 
 
 def collect_report(queries: dict) -> dict:
-    """Execute the three verdict queries (the scan/shuffle work — time
-    THIS for throughput numbers; planning is one-time at real scale).
+    """Execute the verdict queries (the scan/shuffle work — time THIS for
+    throughput numbers; planning is one-time at real scale).
 
-    The three jobs are submitted CONCURRENTLY (Spark's scheduler shares
-    executor cores between jobs): driver-side submit/collect latency
-    overlaps, and stage tails of one job fill idle cores of another —
-    the serial fraction that would otherwise cap N→4N scaling.
+    The two jobs, the row-check scan and the uniqueness shuffle, are
+    submitted CONCURRENTLY (Spark's scheduler shares executor cores
+    between jobs): driver-side submit/collect latency overlaps, and stage
+    tails of one job fill idle cores of the other — the serial fraction
+    that would otherwise cap N→4N scaling.
     """
     from concurrent.futures import ThreadPoolExecutor
 
-    sources = queries["sources"]
-    with ThreadPoolExecutor(max_workers=3) as pool:
+    with ThreadPoolExecutor(max_workers=2) as pool:
         f1 = pool.submit(queries["agg1"].collect)
-        f2 = pool.submit(queries["agg2"].collect)
-        f3 = pool.submit(queries["dup"].collect)
-        agg1_rows, agg2_rows, dup_rows = (f1.result(), f2.result(),
-                                          f3.result())
-    tokviol = {}
-    for r in agg2_rows:
-        if r["_sid"] >= 0:
-            key = sources[r["_sid"]]
-        elif r["_sid"] == -2:          # unknown non-null source: raw string
-            key = r["_src_unk"]
-        else:                          # -1: null source
-            key = None
-        tokviol[key] = tokviol.get(key, 0) + r["n_token_violations"]
-    per_source = [
-        {**r.asDict(),
-         "n_token_violations": int(tokviol.get(r["_src_raw"], 0)),
-         "source": r["_src_raw"]}
-        for r in agg1_rows
-    ]
-    for row in per_source:
-        row.pop("_src_raw", None)
+        f2 = pool.submit(queries["dup"].collect)
+        agg1_rows, dup = f1.result(), f2.result()[0]
+    per_source = []
+    for r in agg1_rows:
+        row = r.asDict()
+        row["source"] = row.pop("_src_raw")
+        per_source.append(row)
     per_source.sort(key=lambda r: (r["source"] is None, r["source"]))
-    dup = dup_rows[0]
     return {"per_source": per_source,
             "dup_keys": int(dup["n_dup_keys"]),
             "n_keys": int(dup["n_keys"])}
@@ -155,9 +124,10 @@ def collect_report(queries: dict) -> dict:
 def sequence_report(df: DataFrame, dim: DataFrame, **kw) -> dict:
     """One-shot verdict metrics (what the perfbench ``verdict`` workload
     runs, as ``build_report_queries`` + ``collect_report``): per-source
-    rows, tokens, row-level violations, token violations,
-    referential orphans, n_tok consistency — 2 codegen scans + 1
-    uniqueness shuffle, no HOF anywhere.
+    rows, tokens, row-level violations, bad tokens, referential orphans,
+    n_tok consistency — one codegen scan plus one uniqueness shuffle, in
+    two jobs.  The only lambda is the bad-token filter, which runs on the
+    rows the native screen flags.
 
     Returns {"per_source": [...rows...], "dup_keys": int, "n_keys": int}.
     """

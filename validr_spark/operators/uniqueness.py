@@ -47,15 +47,16 @@ def duplicate_keys(df: DataFrame, keys: list[str] | str,
 
 def duplication_report(df: DataFrame, keys: list[str] | str) -> DataFrame:
     """One-row summary: total rows, distinct keys, duplicated keys,
-    surplus rows (rows that would be dropped by dedup)."""
+    surplus rows (rows that would be dropped by dedup).  Every count is 0,
+    not NULL, on an empty table."""
     if isinstance(keys, str):
         keys = [keys]
     per_key = df.groupBy(*keys).agg(F.count(F.lit(1)).alias("n"))
     return per_key.agg(
-        F.sum("n").alias("n_rows"),
+        F.coalesce(F.sum("n"), F.lit(0)).alias("n_rows"),
         F.count(F.lit(1)).alias("n_keys"),
-        F.sum(F.when(F.col("n") > 1, 1).otherwise(0)).alias("n_dup_keys"),
-        F.sum(F.col("n") - 1).alias("n_surplus_rows"),
+        F.count_if(F.col("n") > 1).alias("n_dup_keys"),
+        F.coalesce(F.sum(F.col("n") - 1), F.lit(0)).alias("n_surplus_rows"),
     )
 
 

@@ -125,6 +125,10 @@ def chain(col: Column, pos: Column, input_type: st.DataType,
 
 _INT_STR_RE = r"\A\s*[+-]?\d+\s*\z"
 LONG_MIN, LONG_MAX = -(2 ** 63), 2 ** 63 - 1
+# value range of each integral Spark type, by its number of bits
+_INTEGRAL_SPAN = {t: (-(2 ** (b - 1)), 2 ** (b - 1) - 1) for t, b in (
+    (st.ByteType, 8), (st.ShortType, 16), (st.IntegerType, 32),
+    (st.LongType, 64))}
 
 
 def _num_lit(v):
@@ -199,11 +203,20 @@ def build_int(sc, schema, input_type, path):
 
     array_invalid = array_value = None
     if fast:
-        # whole-array screen: null elements via array_compact size drop
-        # (array_min/max SKIP nulls), bounds via array_min/array_max.
-        # array_min/max are native loops; array_compact is not: Spark
-        # 4.1 plans it as filter(x -> isnotnull(x)), an interpreted
-        # lambda per element that doubles the screen (PERF.md Finding 1).
+        # whole-array screen: bounds via array_min/array_max, which SKIP
+        # nulls, so null elements need their own check.  array_contains
+        # of a probe that breaks a bound is NULL exactly when the array
+        # holds a NULL and not the probe, and finding the probe is a
+        # violation anyway, so coalescing it to "array is not NULL" keeps
+        # the screen exact.  Both are native loops; array_compact, the
+        # fallback for boolean arrays and where no probe fits the element
+        # type, plans as filter(x -> isnotnull(x)), an interpreted lambda
+        # per element (PERF.md Finding 1).  The probe takes the element
+        # type: a long literal would cast an array<int> on every row.
+        t_lo, t_hi = _INTEGRAL_SPAN.get(type(input_type), (1, 0))
+        probe = next((p for p in (lo - 1, hi + 1) if t_lo <= p <= t_hi),
+                     None)
+
         def array_invalid(arr):
             # boolean arrays must compare on array<long> (boolean min/max
             # vs a long literal is a plan-time DATATYPE_MISMATCH); numeric
@@ -211,7 +224,12 @@ def build_int(sc, schema, input_type, path):
             # whole array per row for nothing.
             larr = (arr.cast("array<long>")
                     if isinstance(input_type, st.BooleanType) else arr)
-            cond = F.size(F.array_compact(arr)) < F.size(arr)
+            if probe is None:
+                cond = F.size(F.array_compact(arr)) < F.size(arr)
+            else:
+                cond = F.coalesce(
+                    F.array_contains(arr, F.lit(probe).cast(input_type)),
+                    arr.isNotNull())
             if has_lo:
                 cond = cond | (F.array_min(larr) < F.lit(lo))
             if has_hi:
