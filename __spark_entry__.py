@@ -4024,10 +4024,10 @@ def oracle_sql() -> dict[str, str]:
             FROM documents GROUP BY lang ORDER BY lang
         """,
         "unique_doc_id": """
-            SELECT CAST(sum(n) AS BIGINT) AS n_rows,
+            SELECT CAST(coalesce(sum(n), 0) AS BIGINT) AS n_rows,
                    count(*)::BIGINT AS n_keys,
-                   CAST(sum(CASE WHEN n > 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_dup_keys,
-                   CAST(sum(n - 1) AS BIGINT) AS n_surplus_rows
+                   CAST(coalesce(sum(CASE WHEN n > 1 THEN 1 ELSE 0 END), 0) AS BIGINT) AS n_dup_keys,
+                   CAST(coalesce(sum(n - 1), 0) AS BIGINT) AS n_surplus_rows
             FROM (SELECT doc_id, count(*) AS n FROM documents GROUP BY doc_id)
         """,
         "ref_orphans": """

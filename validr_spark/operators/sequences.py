@@ -49,11 +49,15 @@ def build_report_queries(df: DataFrame, dim: DataFrame, *, vocab: int,
     """Build (don't run) the verdict queries; see sequence_report.
 
     ``n_token_violations`` counts EVERY element that breaks the token
-    rule (NULL or outside ``[0, vocab)``), several per row if need be.  It
+    rule ``T.int.min(0).max(vocab - 1)``, several per row if need be.  It
     is a data-quality stat, not a violation count: the compiler's element
-    rule reports only a row's first bad token.  It rides ``agg1``'s scan;
-    the compiler's native ``array_invalid`` screen gates it, so the
-    per-element filter runs only on rows with a bad token.
+    rule reports only a row's first bad token.  An element is coerced as
+    ``T.int`` coerces it before the bounds apply: in an integral array a
+    bad token is NULL or outside ``[0, vocab)``; a float truncates toward
+    zero first (-0.5 reads 0 and is good) and NaN or infinity is bad.
+    It rides ``agg1``'s scan; the compiler's native ``array_invalid``
+    screen gates it, so the per-element filter runs only on rows with a
+    bad token.
     """
     from .uniqueness import duplication_report
 
