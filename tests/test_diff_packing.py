@@ -56,6 +56,35 @@ def test_diff_identical_tables(spark, versions):
     assert row["n_added"] == 0 and row["n_removed"] == 0
 
 
+@pytest.mark.parametrize("compare_cols", [None, []])
+def test_diff_without_value_columns(spark, versions, compare_cols):
+    """Key-only tables, or nothing to compare: no row can change, and
+    ``changed_cols`` is a typed empty array on every row."""
+    from pyspark.sql import types as st
+
+    a, b = versions
+    if compare_cols is None:
+        a, b = a.select("k"), b.select("k")
+    d = table_diff(a, b, ["k"], compare_cols=compare_cols)
+    assert d.schema["changed_cols"].dataType.elementType == st.StringType()
+    got = {r["k"]: (r["status"], list(r["changed_cols"]))
+           for r in d.collect()}
+    assert got == {1: ("removed", []), 2: ("same", []), 3: ("same", []),
+                   4: ("same", []), 5: ("added", [])}
+
+
+def test_diff_changed_cols_in_column_order(spark):
+    """Every differing column is listed, in compared-column order — the
+    ``filter(array(flags), x -> x IS NOT NULL)`` the diff used before."""
+    a = spark.createDataFrame([(1, "x", 1, 1.0), (2, "y", 2, 2.0)],
+                              "k long, s string, v long, w double")
+    b = spark.createDataFrame([(1, "x2", 1, 3.0), (2, None, 3, None)],
+                              "k long, s string, v long, w double")
+    d = {r["k"]: list(r["changed_cols"])
+         for r in table_diff(a, b, ["k"]).collect()}
+    assert d == {1: ["s", "w"], 2: ["s", "v", "w"]}
+
+
 # --- packing -----------------------------------------------------------------
 
 @pytest.fixture(scope="module")

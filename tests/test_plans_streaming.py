@@ -925,6 +925,47 @@ def test_manifest_counters_empty_partition_dir(spark, tmp_path):
         "z": (0, 0, 0, "pass")}
 
 
+def test_four_verdict_tallies_agree(spark, tmp_path):
+    """``verdicts``, ``windowed_verdicts`` over one all-covering window,
+    the manifest rows and the sequences report's ``agg1`` count the same
+    rows, violations and bad rows per part on one input."""
+    from validr_spark.operators.sequences import (build_report_queries,
+                                                  rowlevel_schema)
+    from validr_spark.streaming import windowed_verdicts
+
+    rows = [(f"d{i}", None if i % 13 == 0 else [i % 7] * (1 + i % 6),
+             99 if i % 11 == 0 else 1 + i % 6, "abqr"[i % 4])
+            for i in range(120)]
+    df = spark.createDataFrame(
+        rows, "doc_id string, tokens array<int>, n_tok int, source string")
+    plan = SparkCompiler().compile(rowlevel_schema(8, 4, ["a", "b"]))
+    want = _verdict_rows(plan, df, "source", ["doc_id"])
+    assert {p: v[3] for p, v in want.items()} == {
+        "a": "fail", "b": "fail", "q": "fail", "r": "fail"}
+
+    stamped = df.withColumn("ts", F.lit("2026-01-01").cast("timestamp")) \
+        .withColumn("_part", F.col("source"))
+    windowed = windowed_verdicts(plan, stamped, "ts", window="1 day",
+                                 partition_col="_part")
+    assert {r["_part"]: (r["n_rows"], r["n_violations"], r["n_bad_rows"],
+                         r["verdict"])
+            for r in windowed.collect()} == want
+
+    ResumableValidation(plan, part_col="source",
+                        manifest_path=str(tmp_path / "m"),
+                        violations_path=str(tmp_path / "v")) \
+        .run(spark, df, id_cols=["doc_id"])
+    assert _manifest_rows(spark, str(tmp_path / "m")) == want
+
+    dim = spark.createDataFrame([("a",), ("b",)], "source string")
+    agg1 = build_report_queries(df, dim, vocab=8, maxlen=4,
+                                sources=["a", "b"])["agg1"]
+    assert {r["_src_raw"]: (r["n_rows"], r["n_row_violations"],
+                            r["n_bad_rows"])
+            for r in agg1.collect()} == \
+        {p: v[:3] for p, v in want.items()}
+
+
 _RETRY_CHILD = '''
 import json
 import sys

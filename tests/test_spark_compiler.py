@@ -335,10 +335,21 @@ def test_verdicts(spark):
     assert verd["p2"]["verdict"] == "pass"
 
 
+def _lambdas(df):
+    """Lambda functions in the optimized plan of ``df``."""
+    return (df._jdf.queryExecution().optimizedPlan().toString().lower()
+            .count("lambdafunction"))
+
+
 def test_result_views_one_python_pass(spark):
     """violations / clean / bad_rows each run the pandas UDFs once per
     row, and return the rows of their unguarded forms, which filter
-    below the projection and so run the UDFs a second time."""
+    below the projection and so run the UDFs a second time.  The
+    violations array is compacted without a lambda on the per-row path
+    of both gated workloads: the pandas-UDF schema's ``violations()``
+    and the sequences report's ``apply``/``flag`` of ``rowlevel_schema``.
+    """
+    from validr_spark.operators.sequences import rowlevel_schema
     from validr_spark.testing import physical_plan, python_passes
 
     rows = [(0, 0, "a@example.com", "2016-07-09T00:00:00.123Z"),
@@ -371,6 +382,13 @@ def test_result_views_one_python_pass(spark):
         got_rows = sorted(got.collect(), key=str)
         assert got_rows and got_rows == sorted(want.collect(), key=str)
         assert got.columns == want.columns
+    assert _lambdas(res.violations()) == 0
+    seqs = spark.createDataFrame(
+        [("d0", [1, 2], 2, "a"), ("d1", None, 9, "z")],
+        "doc_id string, tokens array<int>, n_tok int, source string")
+    rowlevel = SparkCompiler().compile(rowlevel_schema(16, 4, ["a", "b"]))
+    assert _lambdas(rowlevel.apply(seqs, id_cols=["doc_id"]).df) == 0
+    assert _lambdas(rowlevel.flag(seqs)) == 0
     # pipeline.py's validate stage filters plan.flag unguarded, yet plans
     # one pass: the filter keeps no other use of the projected column,
     # so ColumnPruning drops it and the UDFs run only under the filter
@@ -380,6 +398,107 @@ def test_result_views_one_python_pass(spark):
     assert python_passes(kept) == 1, physical_plan(kept)
     assert sorted(r["rid"] for r in kept.collect()) == \
         sorted(r["rid"] for r in res.clean().collect())
+
+
+def _filter_oracle(cols, elem_type):
+    """The compaction ``nonnull_array`` replaced: an interpreted
+    ``filter(array(cols), x -> x IS NOT NULL)``, empty over no cols."""
+    from pyspark.sql import types as st
+
+    if not cols:
+        return F.array().cast(st.ArrayType(elem_type))
+    return F.filter(F.array(*cols), lambda x: x.isNotNull())
+
+
+def _oracle_violations(plan, df):
+    """``flag``'s violations array built with the filter oracle from the
+    same compiled per-field errors."""
+    from pyspark.sql import types as st
+
+    from validr_spark.rules import VIOLATION_TYPE
+
+    in_types = {f.name: f.dataType for f in df.schema.fields}
+    errs = []
+    for name, sub in plan.schema.items.items():
+        node = plan.compiler.compile_node(
+            sub, in_types.get(name, st.NullType()), name)
+        col = F.col(name) if name in in_types else F.lit(None)
+        errs.append(node.error(col, F.lit(name)))
+    return _filter_oracle(errs, VIOLATION_TYPE)
+
+
+@pytest.mark.parametrize("case", ["fields", "dotted_dup", "zero_fields"])
+def test_violations_array_matches_filter_oracle(spark, case):
+    """``apply`` and ``flag`` compact the per-field errors with
+    ``nonnull_array``: the same array, element for element and in schema
+    order, as the interpreted filter they replaced — duplicates kept."""
+    if case == "fields":
+        # `m` is missing from the input and reads NULL -> required
+        schema = T.dict(x=T.int.min(0), s=T.str.maxlen(3),
+                        arr=T.list(T.int.min(0)).maxlen(2), m=T.int)
+        ddl = "rid int, x int, s string, arr array<int>"
+        rows = [(0, None, None, None),            # every input NULL
+                (1, -1, "long", [1, 2, 3, 4, 5]),  # every field fails
+                (2, 1, "ok", [1]),
+                (3, 5, "abcd", [0, -1])]
+    elif case == "dotted_dup":
+        # the `a.b` field and `a`'s `b` field fail with equal structs
+        schema = T.dict(**{"a.b": T.int, "a": T.dict(b=T.int)})
+        ddl = "rid int, `a.b` string, a struct<b string>"
+        rows = [(0, "x", ("x",)), (1, "1", ("2",))]
+    else:
+        schema = T.dict()
+        ddl = "rid int, x int"
+        rows = [(0, None), (1, 1)]
+    df = spark.createDataFrame(rows, ddl)
+    plan = SparkCompiler().compile(schema)
+    want = {r["rid"]: r["v"] for r in
+            df.select("rid", _oracle_violations(plan, df).alias("v"))
+            .collect()}
+    applied = plan.apply(df, id_cols=["rid"]).df
+    flagged = plan.flag(df)
+    for got in (applied, flagged):
+        assert got.schema["_violations"].dataType == \
+            df.select(_oracle_violations(plan, df)).schema[0].dataType
+        assert {r["rid"]: r["_violations"] for r in got.collect()} == want
+    if case == "fields":
+        assert [v["rule_id"] for v in want[1]] == \
+            ["x.min", "s.maxlen", "arr.maxlen", "m.required"]
+        assert [v["rule_id"] for v in want[2]] == ["m.required"]
+    elif case == "dotted_dup":
+        assert len(want[0]) == 2 and want[0][0] == want[0][1]
+    else:
+        assert want == {0: [], 1: []}
+
+
+def test_nonnull_array_matches_filter_oracle(spark):
+    """On the helper directly: duplicates and order kept, all-NULL
+    inputs give an empty array, no inputs a typed empty array."""
+    from pyspark.sql import types as st
+
+    from validr_spark.operators._barrier import nonnull_array
+
+    df = spark.createDataFrame(
+        [(0, 1, 1), (1, None, None), (2, None, 3), (3, 4, None)],
+        "rid int, x int, y int")
+    x, y = F.col("x"), F.col("y")
+    cases = {"dup": [x, y, x, F.lit(None).cast("int"), y],
+             "nulls": [F.lit(None).cast("int"), F.lit(None).cast("int")],
+             "one": [y], "zero": []}
+    cols = []
+    for k, cs in cases.items():
+        cols += [nonnull_array(cs, st.IntegerType()).alias(f"n_{k}"),
+                 _filter_oracle(cs, st.IntegerType()).alias(f"o_{k}")]
+    out = df.select("rid", *cols)
+    assert _lambdas(out.select(*[f"n_{k}" for k in cases])) == 0
+    got = out.collect()
+    for k in cases:
+        assert out.schema[f"n_{k}"].dataType.elementType == \
+            st.IntegerType()
+        for r in got:
+            assert r[f"n_{k}"] == r[f"o_{k}"], (k, r)
+    assert {r["rid"]: r["n_dup"] for r in got} == \
+        {0: [1, 1, 1, 1], 1: [], 2: [3, 3], 3: [4, 4]}
 
 
 def test_int_list_over_boolean_array(spark):

@@ -700,6 +700,23 @@ class ValidationPlan:
         return json.dumps(self.schema.to_primitive(), sort_keys=True,
                           ensure_ascii=False)
 
+    def _checks(self, df: DataFrame, prefix: str = ""):
+        """``(name, node, col)`` per schema field, compiled for its type
+        in ``df`` and reading ``prefix + name`` (NULL if ``df`` lacks
+        it), and the violations array of their errors."""
+        from .operators._barrier import nonnull_array
+
+        in_types = {f.name: f.dataType for f in df.schema.fields}
+        checks = []
+        for name, sub in self.schema.items.items():
+            node = self.compiler.compile_node(
+                sub, in_types.get(name, st.NullType()), name)
+            col = F.col(prefix + name) if name in in_types else F.lit(None)
+            checks.append((name, node, col))
+        viol = nonnull_array([node.error(col, F.lit(name))
+                              for name, node, col in checks], VIOLATION_TYPE)
+        return checks, viol
+
     def apply(self, df: DataFrame, id_cols: list[str] | None = None,
               violation_col: str = "_violations") -> "ValidationResult":
         """One projection: coerced schema columns + violations array.
@@ -707,25 +724,16 @@ class ValidationPlan:
         Extra input columns are dropped (reference pyx:577-584: extra keys
         silently dropped); missing columns validate as null (→ required).
         """
-        in_types = {f.name: f.dataType for f in df.schema.fields}
         id_cols = list(id_cols or [])
-        # Rename inputs first: Spark 4 lateral column alias resolution would
-        # otherwise make the violations expression capture the coerced
-        # output column aliased to the same name as its input.
-        renames = {name: f"__vs_in_{name}" for name in self.schema.items
-                   if name in in_types}
-        src = df.withColumnsRenamed(renames) if renames else df
-        out_cols: list[Column] = [F.col(c) for c in id_cols
-                                  if c not in self.schema.items]
-        err_cols: list[Column] = []
-        for name, sub in self.schema.items.items():
-            node = self.compiler.compile_node(
-                sub, in_types.get(name, st.NullType()), name)
-            col = F.col(renames[name]) if name in in_types else F.lit(None)
-            out_cols.append(node.value(col).alias(name))
-            err_cols.append(node.error(col, F.lit(name)))
-        viol = F.filter(F.array(*err_cols), lambda e: e.isNotNull()) \
-            if err_cols else F.array().cast(st.ArrayType(VIOLATION_TYPE))
+        checks, viol = self._checks(df, "__vs_in_")
+        # Read the inputs renamed: Spark 4 lateral column alias resolution
+        # would otherwise make the violations expression capture the
+        # coerced output column aliased to the same name as its input.
+        src = df.withColumnsRenamed({name: f"__vs_in_{name}"
+                                     for name in self.schema.items
+                                     if name in df.columns})
+        out_cols = [F.col(c) for c in id_cols if c not in self.schema.items]
+        out_cols += [node.value(col).alias(name) for name, node, col in checks]
         annotated = src.select(*out_cols, viol.alias(violation_col))
         return ValidationResult(annotated, id_cols, violation_col)
 
@@ -741,16 +749,24 @@ class ValidationPlan:
         or duplicated ids can't collateral-drop innocent rows — and it is
         one map-side projection, zero shuffle at any scale.
         """
-        in_types = {f.name: f.dataType for f in df.schema.fields}
-        err_cols: list[Column] = []
-        for name, sub in self.schema.items.items():
-            node = self.compiler.compile_node(
-                sub, in_types.get(name, st.NullType()), name)
-            col = F.col(name) if name in in_types else F.lit(None)
-            err_cols.append(node.error(col, F.lit(name)))
-        viol = F.filter(F.array(*err_cols), lambda e: e.isNotNull()) \
-            if err_cols else F.array().cast(st.ArrayType(VIOLATION_TYPE))
-        return df.withColumn(violation_col, viol)
+        return df.withColumn(violation_col, self._checks(df)[1])
+
+
+def verdict_counts(violations: Column,
+                   where: Column | None = None) -> list[Column]:
+    """``n_rows``, ``n_violations`` (0 over no rows) and ``n_bad_rows``
+    of a violations array over the rows where ``where`` holds (all rows
+    if None), and ``verdict``: ``pass`` exactly when it has no violation.
+    """
+    n = F.size(violations)
+    if where is not None:
+        n = F.when(where, n)    # NULL elsewhere: no count sees the row
+    n_violations = F.coalesce(F.sum(n), F.lit(0))
+    return [F.count(n).alias("n_rows"),
+            n_violations.alias("n_violations"),
+            F.count_if(n > 0).alias("n_bad_rows"),
+            F.when(n_violations == 0, "pass").otherwise("fail")
+            .alias("verdict")]
 
 
 class ValidationResult:
@@ -807,10 +823,4 @@ class ValidationResult:
     def verdicts(self, partition_col: str) -> DataFrame:
         """Per-partition pass/fail + metrics (north-star verdict table)."""
         return (self.df.groupBy(partition_col)
-                .agg(F.count("*").alias("n_rows"),
-                     F.sum(F.size(F.col(self._vc))).alias("n_violations"),
-                     F.sum(F.when(F.size(F.col(self._vc)) > 0, 1)
-                           .otherwise(0)).alias("n_bad_rows"))
-                .withColumn("verdict",
-                            F.when(F.col("n_violations") == 0,
-                                   F.lit("pass")).otherwise(F.lit("fail"))))
+                .agg(*verdict_counts(F.col(self._vc))))

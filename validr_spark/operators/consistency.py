@@ -10,6 +10,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ._barrier import nonnull_array
+
 
 def check_invariants(df: DataFrame, invariants: dict[str, Column],
                      id_cols: list[str] | str = ()) -> DataFrame:
@@ -25,8 +27,7 @@ def check_invariants(df: DataFrame, invariants: dict[str, Column],
                 F.lit(field).alias("position"),
                 F.lit(f"invariant {rule_id} violated").alias("message"),
             )))
-    found = F.filter(F.array(*parts), lambda v: v.isNotNull())
-    return (df.select(*id_cols, F.explode(found).alias("v"))
+    return (df.select(*id_cols, F.explode(nonnull_array(parts)).alias("v"))
             .select(*id_cols, "v.rule_id", "v.position", "v.message"))
 
 

@@ -30,14 +30,23 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ._barrier import nonnull_array
+
 __all__ = ["dialog_violations", "dialog_stats", "render_dialogs",
            "preference_violations", "preference_stats", "loss_spans",
            "turn_stats"]
 
 
-def _viol(id_col, rule, position, message, value):
-    return [F.col(id_col), rule.alias("rule_id"), position.alias("position"),
-            message.alias("message"), value.alias("value")]
+def _rule_violations(df: DataFrame, id_col: str, rules) -> DataFrame:
+    """One row per rule that fires on a row of ``df``; ``rules`` holds
+    ``(condition, rule_id, position, message, value)`` columns."""
+    parts = [F.when(cond, F.struct(r.alias("rule_id"), p.alias("position"),
+                                   m.alias("message"), v.alias("value")))
+             for cond, r, p, m, v in rules]
+    return (df.select(F.col(id_col),
+                      F.explode(nonnull_array(parts)).alias("_v"))
+            .select(id_col, "_v.rule_id", "_v.position", "_v.message",
+                    "_v.value"))
 
 
 def dialog_violations(df: DataFrame, turns_col: str = "turns",
@@ -89,17 +98,7 @@ def dialog_violations(df: DataFrame, turns_col: str = "turns",
             F.lit("turns.last_role"), F.lit("turns"),
             F.lit(f"last turn must be {must_end_with}"),
             F.coalesce(last_role, F.lit("null"))))
-    row_parts = [
-        F.when(cond, F.struct(r.alias("rule_id"), p.alias("position"),
-                              m.alias("message"), v.alias("value")))
-        for cond, r, p, m, v in row_rules
-    ]
-    row_v = (df.select(
-                 F.col(id_col),
-                 F.explode(F.filter(F.array(*row_parts),
-                                    lambda x: x.isNotNull())).alias("_v"))
-             .select(id_col, "_v.rule_id", "_v.position", "_v.message",
-                     "_v.value"))
+    row_v = _rule_violations(df, id_col, row_rules)
 
     # --- per-turn rules: one posexplode, prev turn read from the carried
     # array (turns[i-1] — element_at is 1-based so element_at(t, i) is
@@ -136,18 +135,7 @@ def dialog_violations(df: DataFrame, turns_col: str = "turns",
             & role.eqNullSafe(prev_role),
             F.lit("turns.alternation"), pos_role,
             F.lit("consecutive turns share a role"), role))
-    turn_parts = [
-        F.when(cond, F.struct(r.alias("rule_id"), p.alias("position"),
-                              m.alias("message"), v.alias("value")))
-        for cond, r, p, m, v in turn_rules
-    ]
-    turn_v = (ex.select(
-                  F.col(id_col),
-                  F.explode(F.filter(F.array(*turn_parts),
-                                     lambda x: x.isNotNull())).alias("_v"))
-              .select(id_col, "_v.rule_id", "_v.position", "_v.message",
-                      "_v.value"))
-    return row_v.unionByName(turn_v)
+    return row_v.unionByName(_rule_violations(ex, id_col, turn_rules))
 
 
 def dialog_stats(df: DataFrame, turns_col: str = "turns",
@@ -236,18 +224,9 @@ def preference_violations(df: DataFrame, prompt_col: str = "prompt",
          F.lit("chosen and rejected differ only in case/whitespace"),
          short(c)),
     ]
-    parts = [
-        F.when(cond, F.struct(F.lit(rid).alias("rule_id"),
-                              F.lit(pos).alias("position"),
-                              msg.alias("message"), val.alias("value")))
-        for cond, rid, pos, msg, val in rules
-    ]
-    return (df.select(F.col(id_col),
-                      F.explode(F.filter(F.array(*parts),
-                                         lambda x: x.isNotNull()))
-                      .alias("_v"))
-            .select(id_col, "_v.rule_id", "_v.position", "_v.message",
-                    "_v.value"))
+    return _rule_violations(df, id_col, [
+        (cond, F.lit(rid), F.lit(pos), msg, val)
+        for cond, rid, pos, msg, val in rules])
 
 
 def preference_stats(df: DataFrame, prompt_col: str = "prompt",

@@ -22,6 +22,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as st
+
+from ._barrier import nonnull_array
 
 __all__ = ["table_diff", "diff_summary"]
 
@@ -60,8 +63,7 @@ def table_diff(a: DataFrame, b: DataFrame, key_cols: list[str],
         F.when(~F.col(f"_a_{c}").eqNullSafe(F.col(f"_b_{c}")), F.lit(c))
         for c in vals
     ]
-    changed_cols = (F.array_compact(F.array(*diff_flags)) if diff_flags
-                    else F.array().cast("array<string>"))
+    changed_cols = nonnull_array(diff_flags, st.StringType())
     status = (F.when(F.col("_in_a").isNull(), F.lit("added"))
               .when(F.col("_in_b").isNull(), F.lit("removed"))
               .when(F.size(changed_cols) > 0, F.lit("changed"))

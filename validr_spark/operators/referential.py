@@ -12,6 +12,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ._barrier import nonnull_array
+
 
 def orphans(fact: DataFrame, dim: DataFrame, on, broadcast: bool = True) -> DataFrame:
     """Rows of ``fact`` whose key has no match in ``dim`` (left anti join)."""
@@ -53,7 +55,7 @@ def _deletion_variants(col, max_len: int):
             F.when((n >= i) & (n <= max_len),
                    F.concat(F.substring(c, 1, i - 1),
                             F.substring(c, i + 1, max_len))))
-    return F.array_compact(F.array(*variants))
+    return nonnull_array(variants)
 
 
 def fuzzy_orphans(df: DataFrame, dim: DataFrame, col: str,

@@ -26,8 +26,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..compiler import SparkCompiler
+from ..compiler import SparkCompiler, verdict_counts
 from ..schema import T
+from ._barrier import nonnull_array
 
 
 def rowlevel_schema(vocab: int, maxlen: int, sources: list[str],
@@ -80,14 +81,13 @@ def build_report_queries(df: DataFrame, dim: DataFrame, *, vocab: int,
           .withColumn("_bad_tok_raw", n_bad_tok)
           .withColumn("_src_raw", F.col("source")),
         id_cols=["_n_tok_raw", "_size_raw", "_bad_tok_raw", "_src_raw"])
-    nviol = F.size("_violations")
+    n_rows, n_viol, n_bad, _ = verdict_counts(F.col("_violations"))
     agg1 = (res.df
             .join(dimj, res.df["source"] == dimj["source"], "left")
             .groupBy("_src_raw")
-            .agg(F.count(F.lit(1)).alias("n_rows"),
+            .agg(n_rows,
                  F.coalesce(F.sum("_size_raw"), F.lit(0)).alias("n_tokens"),
-                 F.sum(nviol).alias("n_row_violations"),
-                 F.sum(F.when(nviol > 0, 1).otherwise(0)).alias("n_bad_rows"),
+                 n_viol.alias("n_row_violations"), n_bad,
                  F.sum("_bad_tok_raw").alias("n_token_violations"),
                  F.sum(F.when(F.col("_in_dim").isNull(), 1).otherwise(0))
                   .alias("n_orphans"),
@@ -131,7 +131,7 @@ def sequence_report(df: DataFrame, dim: DataFrame, **kw) -> dict:
     rows, tokens, row-level violations, bad tokens, referential orphans,
     n_tok consistency — one codegen scan plus one uniqueness shuffle, in
     two jobs.  The only lambda is the bad-token filter, which runs on the
-    rows the native screen flags.
+    rows the native screen flags (``nonnull_array`` compacts natively).
 
     Returns {"per_source": [...rows...], "dup_keys": int, "n_keys": int}.
     """
@@ -271,7 +271,7 @@ def frame_violations(df: DataFrame, *, id_col: str = "doc_id",
         viol("tokens.content", F.lit(tokens_col),
              "sequence has no content tokens", F.size(t))))
 
-    vs = F.array_compact(F.array(*checks))
+    vs = nonnull_array(checks)
     return (df.filter(t.isNotNull())
             .select(F.col(id_col), vs.alias("_v"))
             .filter(F.size("_v") > 0)

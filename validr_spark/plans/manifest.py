@@ -29,9 +29,9 @@ this module is engine-original design, built for the 10^12-row case:
 * Driver memory: only distinct partition keys are ever collected
   (table-partition cardinality, thousands — never row-shaped data).
 
-Per-partition verdict metrics cost no job of their own: three counters
-per part (rows, violations, rows with a violation) are observed on the
-validation projection and filled in by the violations write's tasks.
+Per-partition verdict metrics cost no job of their own: each part's
+``compiler.verdict_counts`` are observed on the validation projection
+and filled in by the violations write's tasks.
 """
 
 from __future__ import annotations
@@ -44,7 +44,7 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as st
 
-from ..compiler import ValidationResult
+from ..compiler import ValidationResult, verdict_counts
 
 ENGINE_VERSION = "1"
 
@@ -312,17 +312,13 @@ class ResumableValidation:
         keyed = df.withColumn("_part", self._part_key())
         batch_df = keyed.filter(F.col("_part").isin(parts))
         res = self.plan.apply(batch_df, id_cols=["_part", *id_cols])
-        # Three counters per part, computed on the validation projection
+        # Each part's verdict counts, computed on the validation projection
         # by the violations write's own tasks: no job of their own, and
         # Spark merges only successful task attempts, so a retried task
         # counts once.  ``batch_parts`` bounds their number.
-        n_viol = F.size(F.col("_violations"))
-        counters = []
-        for i, p in enumerate(parts):
-            here = F.col("_part") == p
-            counters += [F.count_if(here).alias(f"n{i}"),
-                         F.sum(F.when(here, n_viol)).alias(f"v{i}"),
-                         F.count_if(here & (n_viol > 0)).alias(f"b{i}")]
+        counters = [F.struct(*verdict_counts(F.col("_violations"),
+                                             F.col("_part") == p))
+                    .alias(f"p{i}") for i, p in enumerate(parts)]
         obs = Observation()
         observed = ValidationResult(res.df.observe(obs, *counters),
                                     res.id_cols)
@@ -397,16 +393,9 @@ class ResumableValidation:
         # 2. verdict metrics: the counters the violations write filled in.
         m = obs.get
         now = time.time()
-        rows = []
-        for i, p in enumerate(parts):
-            n_viol = m[f"v{i}"] or 0       # sum over no rows is NULL
-            rows.append({
-                "lineage": self.lineage, "part": p, "status": "done",
-                "run_id": run_id, "n_rows": m[f"n{i}"],
-                "n_bad_rows": m[f"b{i}"], "n_violations": n_viol,
-                "verdict": "pass" if n_viol == 0 else "fail",
-                "finished_at": now,
-            })
+        rows = [{"lineage": self.lineage, "part": p, "status": "done",
+                 "run_id": run_id, **m[f"p{i}"].asDict(), "finished_at": now}
+                for i, p in enumerate(parts)]
         # 3. manifest append LAST — the commit point for this batch.
         t0 = time.time()
         store.append(rows)

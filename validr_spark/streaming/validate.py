@@ -28,6 +28,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..compiler import verdict_counts
+
 
 def validate_stream(plan, sdf: DataFrame, id_cols: list[str] | None = None):
     """Apply a compiled plan to a streaming DataFrame.
@@ -61,19 +63,10 @@ def windowed_verdicts(plan, sdf: DataFrame, ts_col: str,
     carry = [ts_col] + ([partition_col] if partition_col else [])
     res = validate_stream(plan, sdf.withWatermark(ts_col, watermark),
                           id_cols=carry)
-    annotated = res.df
     keys = [F.window(F.col(ts_col), window).alias("window")]
     if partition_col:
         keys.append(F.col(partition_col))
-    nviol = F.size(F.col("_violations"))
-    return (annotated.groupBy(*keys)
-            .agg(F.count(F.lit(1)).alias("n_rows"),
-                 F.sum(nviol).alias("n_violations"),
-                 F.sum(F.when(nviol > 0, 1).otherwise(0))
-                  .alias("n_bad_rows"))
-            .withColumn("verdict",
-                        F.when(F.col("n_violations") == 0, "pass")
-                        .otherwise("fail")))
+    return res.df.groupBy(*keys).agg(*verdict_counts(F.col("_violations")))
 
 
 def write_violations_stream(violations: DataFrame, path: str,
