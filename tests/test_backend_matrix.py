@@ -47,32 +47,31 @@ VALUES = [
     "2016-07-09", "12:00:59", "10s", "12h59s",
 ]
 
-# (output_type, string_output, accept_string) each swapped builder must
+# (output_type, accept_string) each swapped builder must
 # declare to match its expression twin's CoreRule contract — nstr is the
 # one validator where '' is NOT null-equivalent (reference pyx:907
 # registers it accept=object, so the wrapper's empty-string-as-missing
 # rule does not apply and nstr.optional('') returns '').
 _SWAP_CONTRACT = {
-    "int": (st.LongType(), False, True),
-    "float": (st.DoubleType(), False, True),
-    "bool": (st.BooleanType(), False, True),
-    "str": (st.StringType(), True, True),
-    "nstr": (st.StringType(), False, False),
-    "ipv4": (st.StringType(), True, True),
-    "uuid": (st.StringType(), True, True),
-    "fqdn": (st.StringType(), True, True),
-    "url": (st.StringType(), True, True),
-    "phone": (st.StringType(), True, True),
-    "idcard": (st.StringType(), True, True),
-    "slug": (st.StringType(), True, True),
+    "int": (st.LongType(), True),
+    "float": (st.DoubleType(), True),
+    "bool": (st.BooleanType(), True),
+    "str": (st.StringType(), True),
+    "nstr": (st.StringType(), False),
+    "ipv4": (st.StringType(), True),
+    "uuid": (st.StringType(), True),
+    "fqdn": (st.StringType(), True),
+    "url": (st.StringType(), True),
+    "phone": (st.StringType(), True),
+    "idcard": (st.StringType(), True),
+    "slug": (st.StringType(), True),
 }
 
 
-def _swapped_builder(out_t, string_out, accept_str):
+def _swapped_builder(out_t, accept_str):
     def build(sc, schema, input_type, path):
         return build_pyudf_rule(sc, schema, input_type, path,
                                 output_type=out_t,
-                                string_output=string_out,
                                 accept_string=accept_str)
     return build
 
@@ -145,8 +144,8 @@ def test_expression_and_pandas_backends_agree(spark):
     schema = _schema()
 
     expr_plan = SparkCompiler().compile(schema)
-    swap = {name: _swapped_builder(t, so, ac)
-            for name, (t, so, ac) in _SWAP_CONTRACT.items()}
+    swap = {name: _swapped_builder(t, ac)
+            for name, (t, ac) in _SWAP_CONTRACT.items()}
     pyudf_plan = SparkCompiler(validators=swap).compile(schema)
 
     expr_res = expr_plan.apply(df, id_cols=["rid"])

@@ -21,14 +21,10 @@ through the pure-Python backend before any Catalyst expression is built.
 
 Scale notes (100 TB design): row validation is embarrassingly parallel —
 a single projection over the scan, no shuffle, no driver collect.  Violations
-explode only rows that actually have violations (filter first, then explode),
-so the violations job shuffles ~violation-rate × data, not the full table.
+explode only rows that actually have violations (filter first, then explode).
 """
 
 from __future__ import annotations
-
-from dataclasses import dataclass
-from typing import Optional
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -49,32 +45,6 @@ from .rules import (
 from .schema import Schema, T
 
 __all__ = ["SparkCompiler", "ValidationPlan", "ValidationResult"]
-
-
-@dataclass
-class NodePlan:
-    """Compiled (value, error) expressions for one schema node."""
-
-    output_type: st.DataType
-    value: callable          # (col) -> Column  coerced output
-    error: callable          # (col, pos) -> Column  violation struct | null
-    # boolean predicate: true iff error() is non-null.  Containers scan
-    # elements with this (no per-element violation-struct construction).
-    invalid: callable = None
-    # whole-array fast paths (see CoreRule) — set only when the wrapper
-    # params don't change element semantics (no optional/default/invalid_to)
-    array_invalid: callable = None
-    array_value: callable = None
-
-
-_WRAPPER_PARAMS = ("optional", "default", "invalid_to", "invalid_to_default",
-                   "desc", "object")
-
-
-def _elem_type(input_type) -> st.DataType:
-    if isinstance(input_type, st.ArrayType):
-        return input_type.elementType
-    return st.NullType()
 
 
 class SparkCompiler:
@@ -114,7 +84,7 @@ class SparkCompiler:
 
     # ------------------------------------------------------------------
     def compile_node(self, schema: Schema, input_type: st.DataType,
-                     path: str) -> NodePlan:
+                     path: str) -> CoreRule:
         v = schema.validator
         if v == "dict":
             core = self._dict_core(schema, input_type, path)
@@ -139,7 +109,7 @@ class SparkCompiler:
     # the cross-cutting null/default/invalid_to wrapper (pyx:381-421)
     # ------------------------------------------------------------------
     def _wrap(self, core: CoreRule, schema: Schema,
-              input_type: st.DataType, path: str) -> NodePlan:
+              input_type: st.DataType, path: str) -> CoreRule:
         params = schema.params
         optional = bool(params.get("optional", False))
         default = params.get("default", None)
@@ -192,7 +162,7 @@ class SparkCompiler:
                 return core.invalid(col)
             return core.error(col, F.lit("")).isNotNull()
 
-        def value(col: Column) -> Column:
+        def coerce(col: Column) -> Column:
             coerced = core.coerce(col)
             ok_val = F.when(core_invalid(col) | post_null(coerced),
                             fallback_lit if suppress else
@@ -236,9 +206,10 @@ class SparkCompiler:
         # 'required' (core.array_invalid flags it) and the coerced element
         # must be the plain core coercion.
         plain = not (optional or has_default or suppress)
-        arr_inv = core.array_invalid if plain else None
-        arr_val = core.array_value if plain else None
-        return NodePlan(out_t, value, error, invalid, arr_inv, arr_val)
+        return CoreRule(out_t, coerce, error, accept_string=False,
+                        invalid=invalid,
+                        array_invalid=core.array_invalid if plain else None,
+                        array_value=core.array_value if plain else None)
 
     # ------------------------------------------------------------------
     # containers
@@ -282,7 +253,7 @@ class SparkCompiler:
             return F.lit(None)
 
         def coerce(col):
-            return F.struct(*[children[k].value(getf(col, k)).alias(k)
+            return F.struct(*[children[k].coerce(getf(col, k)).alias(k)
                               for k in children])
 
         def error(col, pos):
@@ -294,8 +265,7 @@ class SparkCompiler:
             first = F.coalesce(*errs, NULL_VIOLATION()) if errs else NULL_VIOLATION()
             return F.when(col.isNotNull(), first).otherwise(NULL_VIOLATION())
 
-        return CoreRule(out_t, coerce, error, accept_string=False,
-                        string_output=False)
+        return CoreRule(out_t, coerce, error, accept_string=False)
 
     def _map_core(self, schema: Schema, input_type: st.MapType,
                   path: str) -> CoreRule:
@@ -326,9 +296,9 @@ class SparkCompiler:
         def coerce(col):
             out = col
             if key_rule:
-                out = F.transform_keys(out, lambda k, v: key_rule.value(k))
+                out = F.transform_keys(out, lambda k, v: key_rule.coerce(k))
             if val_rule:
-                out = F.transform_values(out, lambda k, v: val_rule.value(v))
+                out = F.transform_values(out, lambda k, v: val_rule.coerce(v))
             if slim:
                 if isinstance(val_out, st.StringType):
                     out = F.map_filter(
@@ -369,8 +339,7 @@ class SparkCompiler:
             return F.when(col.isNull(), NULL_VIOLATION()).otherwise(
                 F.coalesce(length_viol, first_entry, NULL_VIOLATION()))
 
-        return CoreRule(out_t, coerce, error, accept_string=False,
-                        string_output=False)
+        return CoreRule(out_t, coerce, error, accept_string=False)
 
     def _list_core(self, schema: Schema, input_type, path: str) -> CoreRule:
         minlen = int(schema.params.get("minlen", 0))
@@ -382,7 +351,7 @@ class SparkCompiler:
                                             st.ArrayType(st.NullType()))
 
         et = input_type.elementType
-        inner: Optional[NodePlan] = None
+        inner: CoreRule | None = None
         if inner_schema is not None:
             inner = self.compile_node(inner_schema, et, f"{path}[]")
         out_t = st.ArrayType(inner.output_type if inner else et)
@@ -393,7 +362,7 @@ class SparkCompiler:
             if inner.array_value is not None:
                 # vectorized array cast — no per-element lambda
                 return inner.array_value(col)
-            return F.transform(col, lambda x: inner.value(x))
+            return F.transform(col, lambda x: inner.coerce(x))
 
         def error(col, pos):
             n = F.size(col)
@@ -469,7 +438,7 @@ class SparkCompiler:
             return F.coalesce(inv, F.lit(False))
 
         return CoreRule(out_t, coerce, error, accept_string=False,
-                        string_output=False, invalid=list_invalid)
+                        invalid=list_invalid)
 
     def _union_core(self, schema: Schema, input_type, path: str) -> CoreRule:
         """union: tagged (dict) form dispatches on the `by` field of a struct
@@ -535,8 +504,7 @@ class SparkCompiler:
                 out = F.when(tc.isNull() | (tc == ""), missing).otherwise(out)
                 return F.when(col.isNull(), NULL_VIOLATION()).otherwise(out)
 
-            return CoreRule(out_t, coerce, error, accept_string=False,
-                            string_output=False)
+            return CoreRule(out_t, coerce, error, accept_string=False)
 
         # list (shape) form: pick the branch whose shape matches input_type.
         # On a statically-typed column the reference's runtime shape
@@ -563,9 +531,7 @@ class SparkCompiler:
             pick, reject = branches["scalar"], "not allowed scalar value"
         if pick is None:
             return self._type_mismatch_core(input_type, path, reject)
-        sub_plan = self.compile_node(pick, input_type, path)
-        return CoreRule(sub_plan.output_type, sub_plan.value, sub_plan.error,
-                        accept_string=False, string_output=False)
+        return self.compile_node(pick, input_type, path)
 
     def _union_variant_core(self, branches: dict, path: str) -> CoreRule:
         """Runtime shape-dispatched union over a VariantType column —
@@ -628,7 +594,7 @@ class SparkCompiler:
             fields = []
             for shape, (in_t, plan) in subs.items():
                 val = F.when(_shape_cond(shape, is_arr, is_obj),
-                             plan.value(_ext(col, in_t))) \
+                             plan.coerce(_ext(col, in_t))) \
                     .otherwise(F.lit(None).cast(plan.output_type))
                 fields.append(val.alias(shape))
             return F.when(col.isNull() | F.is_variant_null(col),
@@ -654,8 +620,7 @@ class SparkCompiler:
             return F.when(col.isNull() | F.is_variant_null(col),
                           NULL_VIOLATION()).otherwise(out)
 
-        return CoreRule(out_t, coerce, error, accept_string=False,
-                        string_output=False)
+        return CoreRule(out_t, coerce, error, accept_string=False)
 
     def _type_mismatch_core(self, input_type, path, message,
                             out_t=None) -> CoreRule:
@@ -673,8 +638,7 @@ class SparkCompiler:
                                  value_repr(col, input_type))
                           ).otherwise(NULL_VIOLATION())
 
-        return CoreRule(out_t, coerce, error, accept_string=False,
-                        string_output=False)
+        return CoreRule(out_t, coerce, error, accept_string=False)
 
 
 class ValidationPlan:
@@ -733,7 +697,7 @@ class ValidationPlan:
                                      for name in self.schema.items
                                      if name in df.columns})
         out_cols = [F.col(c) for c in id_cols if c not in self.schema.items]
-        out_cols += [node.value(col).alias(name) for name, node, col in checks]
+        out_cols += [node.coerce(col).alias(name) for name, node, col in checks]
         annotated = src.select(*out_cols, viol.alias(violation_col))
         return ValidationResult(annotated, id_cols, violation_col)
 

@@ -436,16 +436,6 @@ def edit_distance_verify(df: DataFrame, candidates: DataFrame,
             .filter(F.col("edit_sim") >= threshold))
 
 
-def edit_near_dups(df: DataFrame, text_col: str = "text",
-                   id_col: str = "doc_id", threshold: float = 0.8,
-                   max_len: int = 2000, **lsh_kwargs) -> DataFrame:
-    """End-to-end order-sensitive near-dup detection: LSH candidates →
-    exact edit-distance verification."""
-    cand = minhash_candidates(df, text_col, id_col, **lsh_kwargs)
-    return edit_distance_verify(df, cand, text_col, id_col, threshold,
-                                max_len)
-
-
 def simhash(df: DataFrame, text_col: str = "text",
             id_col: str = "doc_id", nbits: int = 64) -> DataFrame:
     """64-bit SimHash per document, vectorized with numpy over Arrow batches

@@ -14,9 +14,6 @@ Implementation notes for 10^12-row scale:
   only splits rows of equal key, phase 2 re-aggregates per key).  With AQE
   skew-join/agg splitting enabled this is usually unnecessary; it exists for
   pathological single-key floods.
-* ``approx=True`` gives a cheap screen: compare ``count`` with
-  ``approx_count_distinct`` (HLL, mergeable, no row-level shuffle) — use it
-  to skip the exact pass on partitions that are certainly unique.
 """
 
 from __future__ import annotations
@@ -57,17 +54,4 @@ def duplication_report(df: DataFrame, keys: list[str] | str) -> DataFrame:
         F.count(F.lit(1)).alias("n_keys"),
         F.count_if(F.col("n") > 1).alias("n_dup_keys"),
         F.coalesce(F.sum(F.col("n") - 1), F.lit(0)).alias("n_surplus_rows"),
-    )
-
-
-def uniqueness_screen(df: DataFrame, key: str) -> DataFrame:
-    """Cheap HLL-based screen: exact count vs approx distinct — if
-    ``count ≈ approx_distinct`` within HLL error, the exact pass can be
-    skipped for this slice (no row-level shuffle at all)."""
-    return df.agg(
-        F.count(key).alias("n_rows"),
-        F.approx_count_distinct(key, 0.01).alias("approx_distinct"),
-    ).select(
-        "n_rows", "approx_distinct",
-        (F.col("n_rows") - F.col("approx_distinct")).alias("approx_surplus"),
     )

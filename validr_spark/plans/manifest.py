@@ -242,11 +242,6 @@ class ResumableValidation:
         rows = df.select(self._part_key().alias("p")).distinct().collect()
         return sorted(r["p"] for r in rows)
 
-    def pending_parts(self, spark: SparkSession, df: DataFrame) -> list[str]:
-        done = ManifestStore(spark, self.manifest_path).done_parts(
-            self.lineage)
-        return [p for p in self.all_parts(df) if p not in done]
-
     # -- the run ---------------------------------------------------------
 
     def run(self, spark: SparkSession, df: DataFrame,

@@ -23,8 +23,7 @@ a try_cast, array access uses `get`/`try_element_at`.
 
 from __future__ import annotations
 
-import math
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 from typing import Callable
 
 import pandas as pd
@@ -34,9 +33,8 @@ from pyspark.sql import types as st
 from pyspark.sql.functions import pandas_udf
 
 from .errors import VALUE_CLIP, SchemaError
-from .pyvalidate import FALSE_VALUES, TRUE_VALUES
+from .pyvalidate import FALSE_VALUES, TRUE_VALUES, _enum_repr
 from .pyvalidate import Compiler as PyCompiler
-from .schema import Schema
 
 # ---------------------------------------------------------------------------
 # violation struct helpers
@@ -54,7 +52,7 @@ def NULL_VIOLATION() -> Column:
     return F.lit(None).cast(VIOLATION_TYPE)
 
 
-def _as_col(x, caster="string") -> Column:
+def _as_col(x) -> Column:
     return x if isinstance(x, Column) else F.lit(x)
 
 
@@ -85,16 +83,16 @@ def value_repr(col: Column, input_type: st.DataType) -> Column:
 
 @dataclass
 class CoreRule:
-    """Compiled core of one schema node (before the null/default wrapper)."""
+    """Compiled rule of one schema node: a builder's core, or the whole
+    node once ``SparkCompiler.compile_node`` has wrapped that core in the
+    null/default/invalid_to semantics (a wrapped node has
+    ``accept_string=False``)."""
 
     output_type: st.DataType
-    coerce: Callable[[Column], Column]
+    coerce: Callable[[Column], Column]     # (col) -> coerced output
     # error(col, pos) -> violation struct | null. col is the RAW input.
     error: Callable[[Column, Column], Column]
     accept_string: bool = True    # '' counts as null for this rule
-    string_output: bool = True    # null-output is '' instead of None
-    # containers set this to re-wrap children at apply time
-    children: dict = field(default_factory=dict)
     # optional cheap boolean predicate: true iff error() would be non-null.
     # Containers use it to scan elements WITHOUT building a violation
     # struct per element (the struct is built once, for the first offender).
@@ -103,7 +101,8 @@ class CoreRule:
     # Catalyst lambda HOFs (transform/filter/exists) evaluate interpreted at
     # ~20µs/element; array_min/array_max/cast are tight JVM loops ~10×
     # faster, and the per-element HOF then runs only on flagged rows.
-    array_invalid: Callable[[Column], Column] | None = None   # any elem bad?
+    # array_invalid(a) equals exists(a, invalid): is any element bad?
+    array_invalid: Callable[[Column], Column] | None = None
     array_value: Callable[[Column], Column] | None = None     # coerce array
 
 
@@ -129,10 +128,6 @@ LONG_MIN, LONG_MAX = -(2 ** 63), 2 ** 63 - 1
 _INTEGRAL_SPAN = {t: (-(2 ** (b - 1)), 2 ** (b - 1) - 1) for t, b in (
     (st.ByteType, 8), (st.ShortType, 16), (st.IntegerType, 32),
     (st.LongType, 64))}
-
-
-def _num_lit(v):
-    return F.lit(v)
 
 
 def build_int(sc, schema, input_type, path):
@@ -239,8 +234,7 @@ def build_int(sc, schema, input_type, path):
         def array_value(arr):
             return arr.cast("array<long>")
 
-    return CoreRule(st.LongType(), coerce, error, accept_string=True,
-                    string_output=False, invalid=invalid,
+    return CoreRule(st.LongType(), coerce, error, invalid=invalid,
                     array_invalid=array_invalid, array_value=array_value)
 
 
@@ -272,7 +266,7 @@ def build_bool(sc, schema, input_type, path):
             return chain(col, pos, input_type,
                          [(~col.isin(0, 1), "type", "invalid bool")], path)
 
-    return CoreRule(st.BooleanType(), coerce, error, string_output=False)
+    return CoreRule(st.BooleanType(), coerce, error)
 
 
 def build_float(sc, schema, input_type, path):
@@ -311,7 +305,7 @@ def build_float(sc, schema, input_type, path):
             checks.append((v > hi, "max", "value must <= %d" % hi))
         return chain(col, pos, input_type, checks, path)
 
-    return CoreRule(st.DoubleType(), coerce, error, string_output=False)
+    return CoreRule(st.DoubleType(), coerce, error)
 
 
 _WS = r"[\s\u0085\u00a0\u1680\u2000-\u200a\u2028\u2029\u202f\u205f\u3000]"
@@ -376,7 +370,7 @@ def build_str(sc, schema, input_type, path, accept_any_object=False):
                            f"string not match regex {match}"))
         return chain(col, pos, input_type, checks, path)
 
-    return CoreRule(st.StringType(), coerce, error, string_output=True)
+    return CoreRule(st.StringType(), coerce, error)
 
 
 def build_nstr(sc, schema, input_type, path):
@@ -386,7 +380,6 @@ def build_nstr(sc, schema, input_type, path):
     # None stays None under optional.
     rule = build_str(sc, schema, input_type, path)
     rule.accept_string = False
-    rule.string_output = False
     return rule
 
 
@@ -414,20 +407,7 @@ def build_bytes(sc, schema, input_type, path):
                            f"bytes length must <= {maxlen}"))
         return chain(col, pos, input_type, checks, path)
 
-    return CoreRule(st.BinaryType(), coerce, error, accept_string=False,
-                    string_output=False)
-
-
-def _enum_repr(value):
-    if value is None:
-        return "null"
-    if value is False:
-        return "false"
-    if value is True:
-        return "true"
-    if isinstance(value, str):
-        return repr(value)
-    return str(value)
+    return CoreRule(st.BinaryType(), coerce, error, accept_string=False)
 
 
 def build_enum(sc, schema, input_type, path):
@@ -468,14 +448,12 @@ def build_enum(sc, schema, input_type, path):
                      [(~member(col), "enum", msg)], path)
 
     # reference enum uses default accept hints → '' counts as null
-    return CoreRule(input_type, coerce, error, accept_string=True,
-                    string_output=False)
+    return CoreRule(input_type, coerce, error)
 
 
 def build_any(sc, schema, input_type, path):
     return CoreRule(input_type, lambda col: col,
-                    lambda col, pos: NULL_VIOLATION(),
-                    accept_string=False, string_output=False)
+                    lambda col, pos: NULL_VIOLATION(), accept_string=False)
 
 
 # --- regex-factory validators (phone / idcard / slug) ----------------------
@@ -635,25 +613,8 @@ def build_url(sc, schema, input_type, path):
 # pandas-UDF backend (email / ipv6 / timedelta / date / time / datetime)
 # ---------------------------------------------------------------------------
 
-_UDF_OUTPUT_TYPES = {
-    "email": st.StringType(),
-    "ipv6": st.StringType(),
-    "date": st.StringType(),
-    "time": st.StringType(),
-    "datetime": st.StringType(),
-}
-
-
-def _leaf_schema_no_wrapper(schema: Schema) -> Schema:
-    bare = schema.copy()
-    for p in ("optional", "default", "invalid_to", "invalid_to_default",
-              "desc", "object"):
-        bare.params.pop(p, None)
-    return bare
-
-
-def build_pyudf_rule(sc, schema, input_type, path, output_type=None,
-                     string_output=True, accept_string=True):
+def build_pyudf_rule(sc, schema, input_type, path,
+                     output_type=st.StringType(), accept_string=True):
     """Vectorized Arrow-batch backend: exact reference parity for validators
     whose coercion Catalyst can't express (IDNA email, ipv6 compression,
     Go-duration strings, Python-strptime leniency).
@@ -662,9 +623,10 @@ def build_pyudf_rule(sc, schema, input_type, path, output_type=None,
     Spark-side wrapper still handles null/optional/default/invalid_to, so
     the UDF only sees the core check.
     """
-    if output_type is None:
-        output_type = _UDF_OUTPUT_TYPES.get(schema.validator, st.StringType())
-    bare = _leaf_schema_no_wrapper(schema)
+    bare = schema.copy()
+    for p in ("invalid_to", "invalid_to_default", "default", "desc",
+              "object"):
+        bare.params.pop(p, None)
     bare.params["optional"] = True  # wrapper handles required; keep core pure
     py_compiler = getattr(sc, "_py", None) or PyCompiler()
     py_validate = py_compiler.compile(bare)
@@ -712,8 +674,7 @@ def build_pyudf_rule(sc, schema, input_type, path, output_type=None,
                              value_repr(col, input_type))
                       ).otherwise(NULL_VIOLATION())
 
-    return CoreRule(output_type, coerce, error, accept_string=accept_string,
-                    string_output=string_output)
+    return CoreRule(output_type, coerce, error, accept_string=accept_string)
 
 
 def build_timedelta(sc, schema, input_type, path):
@@ -757,10 +718,9 @@ def build_timedelta(sc, schema, input_type, path):
                     _dt.timedelta(seconds=hi_s), extended=True)))
             return chain(col, pos, input_type, checks, path)
 
-        return CoreRule(st.DoubleType(), coerce, error, string_output=False)
+        return CoreRule(st.DoubleType(), coerce, error)
     out_t = st.StringType() if string_out else st.DoubleType()
-    return build_pyudf_rule(sc, schema, input_type, path, output_type=out_t,
-                            string_output=string_out)
+    return build_pyudf_rule(sc, schema, input_type, path, output_type=out_t)
 
 
 BUILDERS = {
