@@ -171,6 +171,26 @@ def test_sequence_report_empty_table(spark):
         "n_rows": 0, "n_keys": 0, "n_dup_keys": 0, "n_surplus_rows": 0}
 
 
+def test_single_key_flood(spark):
+    """Every row shares one doc_id: one key, duplicated, with all rows
+    but one surplus, in the report and in both duplicate_keys plans."""
+    from validr_spark.operators.uniqueness import (duplicate_keys,
+                                                   duplication_report)
+
+    n = 40
+    df = spark.createDataFrame([("d", [i % VOCAB], 1, "web")
+                                for i in range(n)], SEQ_DDL)
+    assert duplication_report(df, "doc_id").first().asDict() == {
+        "n_rows": n, "n_keys": 1, "n_dup_keys": 1, "n_surplus_rows": n - 1}
+    rep = seqops.sequence_report(df, make_sources_dim(spark), **REPORT_KW)
+    assert (rep["n_keys"], rep["dup_keys"]) == (1, 1)
+    assert [(r["source"], r["n_rows"]) for r in rep["per_source"]] == \
+        [("web", n)]
+    for two_phase in (False, True):
+        got = duplicate_keys(df, "doc_id", two_phase=two_phase).collect()
+        assert [tuple(r) for r in got] == [("d", n)]
+
+
 def test_sequence_report_all_null_tokens(spark):
     rows = [("a", None, 1, "web"), ("b", None, 2, "web"),
             ("c", [1], 1, "code")]

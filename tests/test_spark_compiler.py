@@ -178,6 +178,85 @@ def test_pandas_udf_backends(spark):
     differential(spark, T.timedelta, [10.0, 9.9, None], "double")
 
 
+def test_native_screen_edges(spark):
+    """The values at the edge of the native screens in front of the
+    email and date/time/datetime UDFs: those pyvalidate rewrites or
+    rejects must still get its answer, the canonical ones their input.
+    Run under a zone with DST, so the gap time 02:30 of 2021-03-14 is
+    checked where it does not exist."""
+    ts = "2016-07-09T00:00:00.000000Z"
+    lbl63, lbl64 = "b" * 63, "b" * 64
+    differential(spark, T.email, [
+        "a@example.com", "Bob.O'Neil+x@sub-1.example.org",
+        "a@EXAMPLE.COM", "a@Example.com", "c@xn--fsqu00a.xn--3lr804guic",
+        "a@例え.テスト", "a@ab--cd.com", "a@a--b.com", "a@xn--.com",
+        "l" * 64 + "@e.io", "l" * 65 + "@e.io",
+        f"a@{lbl63}.com", f"a@{lbl64}.com", "a@b.c1", "a@b.com1", "a@1.2",
+        '"a b"@b.com', ".a@b.com", "a.@b.com", "a..b@b.com",
+        " a@b.com ", "a@b.com\n", "a@b", "a@-b.com", "a@b-.com",
+        "a@b.com.", "a@@b.com", "a@b..com", "", None], "string")
+    old_tz = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", "America/Los_Angeles")
+    try:
+        differential(spark, T.datetime, [
+            ts, "1000-01-01T00:00:00.000000Z", "9999-12-31T23:59:59.999999Z",
+            "2016-7-9T1:2:3.000000Z", "2016-07-09T00:00:00.1Z",
+            "2016-07-09T00:00:00.12Z", "2016-07-09T00:00:00.123Z",
+            "2016-07-09T00:00:00.1234Z", "2016-07-09T00:00:00.12345Z",
+            "2016-07-09t00:00:00.000000Z", "2016-07-09T00:00:00.000000z",
+            "２０１６-07-09T00:00:00.000000Z", "2016-07-09T00:00:0０.000000Z",
+            "0000-01-01T00:00:00.000000Z", "0001-01-01T00:00:00.000000Z",
+            "0999-12-31T00:00:00.000000Z", "2016-13-09T00:00:00.000000Z",
+            "2016-04-31T00:00:00.000000Z", "2019-02-29T00:00:00.000000Z",
+            "2020-02-29T00:00:00.000000Z", "2016-07-09T24:00:00.000000Z",
+            "2016-07-09T23:59:60.000000Z", "2016-07-09T23:59:61.000000Z",
+            ts + "\n", " " + ts, ts + " ", "2021-03-14T02:30:00.000000Z",
+            "", None], "string")
+        differential(spark, T.date, [
+            "2016-07-09", "2016-7-9", "２０１６-07-09", "0001-01-01",
+            "0999-01-01", "2016-13-09", "2016-04-31", "2019-02-29",
+            "2020-02-29", "2016-07-09\n", " 2016-07-09", "2021-03-14"],
+            "string")
+        differential(spark, T.time, [
+            "12:00:59", "1:2:3", "00:00:0０", "24:00:00", "23:59:60",
+            "23:59:61", "12:00:00\n", " 12:00:00", "02:30:00"], "string")
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", old_tz)
+
+
+def test_native_screen_plan_shape(spark):
+    """The perfbench ``pyudf`` schema's ``violations()`` plans one
+    Python pass, and each screen once per row: one ``rlike`` per
+    screened field.  Custom formats, custom Python validators and
+    non-string inputs keep the unscreened UDF."""
+    from validr_spark.pyvalidate import validator
+    from validr_spark.testing import plan_count, python_passes
+
+    df = spark.createDataFrame(
+        [(0, 0, "a@b.com", "2016-07-09T00:00:00.000000Z", None)],
+        "rid int, uid int, email string, ts string, d date")
+    schema = T.dict(uid=T.int.min(0), email=T.email, ts=T.datetime)
+    res = SparkCompiler().compile(schema).apply(df, id_cols=["rid"])
+    for got in (res.violations(), res.df):
+        assert python_passes(got) == 1
+        assert plan_count(got, "rlike") == 2
+
+    @validator(accept=str, output=str)
+    def lower_email(compiler):
+        return str.lower
+
+    unscreened = [
+        (SparkCompiler(py_validators={"email": lower_email}), "email",
+         T.email),
+        (SparkCompiler(), "ts", T.datetime.format("%Y-%m-%dT%H:%M:%S.%f")),
+        (SparkCompiler(), "d", T.date)]
+    for sc, col, sub in unscreened:
+        got = sc.compile(T.dict(**{col: sub})).apply(
+            df, id_cols=["rid"]).violations()
+        assert python_passes(got) == 1
+        assert plan_count(got, "rlike") == 0, (col, sub)
+
+
 def test_list_checks(spark):
     differential(spark, T.list(T.int.min(0).max(9)),
                  [[1, 2], [], [0, 9], [1, -1], [1, 10, -1], None],
@@ -335,12 +414,6 @@ def test_verdicts(spark):
     assert verd["p2"]["verdict"] == "pass"
 
 
-def _lambdas(df):
-    """Lambda functions in the optimized plan of ``df``."""
-    return (df._jdf.queryExecution().optimizedPlan().toString().lower()
-            .count("lambdafunction"))
-
-
 def test_result_views_one_python_pass(spark):
     """violations / clean / bad_rows each run the pandas UDFs once per
     row, and return the rows of their unguarded forms, which filter
@@ -350,7 +423,8 @@ def test_result_views_one_python_pass(spark):
     and the sequences report's ``apply``/``flag`` of ``rowlevel_schema``.
     """
     from validr_spark.operators.sequences import rowlevel_schema
-    from validr_spark.testing import physical_plan, python_passes
+    from validr_spark.testing import (physical_plan, plan_count,
+                                      python_passes)
 
     rows = [(0, 0, "a@example.com", "2016-07-09T00:00:00.123Z"),
             (1, 1, "Bob@EXAMPLE.ORG", "2016-07-09T00:00:00.000000Z"),
@@ -382,13 +456,14 @@ def test_result_views_one_python_pass(spark):
         got_rows = sorted(got.collect(), key=str)
         assert got_rows and got_rows == sorted(want.collect(), key=str)
         assert got.columns == want.columns
-    assert _lambdas(res.violations()) == 0
+    assert plan_count(res.violations(), "lambdafunction") == 0
     seqs = spark.createDataFrame(
         [("d0", [1, 2], 2, "a"), ("d1", None, 9, "z")],
         "doc_id string, tokens array<int>, n_tok int, source string")
     rowlevel = SparkCompiler().compile(rowlevel_schema(16, 4, ["a", "b"]))
-    assert _lambdas(rowlevel.apply(seqs, id_cols=["doc_id"]).df) == 0
-    assert _lambdas(rowlevel.flag(seqs)) == 0
+    for got in (rowlevel.apply(seqs, id_cols=["doc_id"]).df,
+                rowlevel.flag(seqs)):
+        assert plan_count(got, "lambdafunction") == 0
     # pipeline.py's validate stage filters plan.flag unguarded, yet plans
     # one pass: the filter keeps no other use of the projected column,
     # so ColumnPruning drops it and the UDFs run only under the filter
@@ -477,6 +552,7 @@ def test_nonnull_array_matches_filter_oracle(spark):
     from pyspark.sql import types as st
 
     from validr_spark.operators._barrier import nonnull_array
+    from validr_spark.testing import plan_count
 
     df = spark.createDataFrame(
         [(0, 1, 1), (1, None, None), (2, None, 3), (3, 4, None)],
@@ -490,7 +566,8 @@ def test_nonnull_array_matches_filter_oracle(spark):
         cols += [nonnull_array(cs, st.IntegerType()).alias(f"n_{k}"),
                  _filter_oracle(cs, st.IntegerType()).alias(f"o_{k}")]
     out = df.select("rid", *cols)
-    assert _lambdas(out.select(*[f"n_{k}" for k in cases])) == 0
+    assert plan_count(out.select(*[f"n_{k}" for k in cases]),
+                      "lambdafunction") == 0
     got = out.collect()
     for k in cases:
         assert out.schema[f"n_{k}"].dataType.elementType == \
@@ -670,6 +747,8 @@ def _screen_cases(t_lo, t_hi):
 def test_array_screen_probe_equals_compact(spark):
     import random
 
+    from validr_spark.testing import plan_count
+
     rnd = random.Random(7)
     for ddl in ("tinyint", "smallint", "int", "bigint", "boolean"):
         t_lo, t_hi = _SPANS.get(ddl, (0, 1))
@@ -699,12 +778,12 @@ def test_array_screen_probe_equals_compact(spark):
             new = node.array_invalid(F.col("a"))
             old = _compact_screen(F.col("a"), ddl == "boolean", lo, hi)
             cols += [new.alias(f"n{k}"), old.alias(f"o{k}")]
-            plan = (df.select(new)._jdf.queryExecution().optimizedPlan()
-                    .toString().lower())
             has_probe = ddl != "boolean" and (t_lo < lo or hi < t_hi)
-            assert ("lambdafunction" in plan) != has_probe, (ddl, lo, hi)
+            lambdas = plan_count(df.select(new), "lambdafunction")
+            assert (lambdas > 0) != has_probe, (ddl, lo, hi)
             # the probe literal takes the element type: no per-row array cast
-            assert not has_probe or "cast(a#" not in plan, (ddl, lo, hi)
+            assert not has_probe or \
+                plan_count(df.select(new), "cast(a#") == 0, (ddl, lo, hi)
         for r in df.select("rid", "a", *cols).collect():
             for k, (lo, hi) in enumerate(cases):
                 assert r[f"n{k}"] == r[f"o{k}"], (ddl, lo, hi, r["a"])

@@ -171,9 +171,17 @@ def save_merges(merges: list[tuple[str, str]], path: str) -> None:
 
 
 def load_merges(path: str) -> list[tuple[str, str]]:
-    """Read a GPT-2/huggingface-format ``merges.txt`` merge table —
-    the interop point for validating corpora against a REAL pretrained
-    tokenizer's merges (``apply_bpe(df, load_merges("merges.txt"))``).
+    """Read a merge table in the GPT-2/huggingface ``merges.txt`` text
+    format, as :func:`save_merges` writes it.
+
+    Only the file format is shared with pretrained tokenizers.
+    :func:`apply_bpe` cuts text into ``WORD_REGEX`` words and merges
+    their characters.  It has no byte-level alphabet (GPT-2's ``Ġ``
+    space marker), no pre-tokenizer split of punctuation or
+    contractions, and no end-of-word marker.  So a pretrained table
+    loaded here does not reproduce that tokenizer's pieces or ids in
+    general.  It does only for words the pretrained pipeline would leave
+    whole and unprefixed.
     A first-line ``#version`` header and blank lines are skipped; each
     remaining line must be exactly two space-separated symbols, so a
     merge whose left symbol is ``#`` is kept."""

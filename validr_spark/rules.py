@@ -15,7 +15,9 @@ The handful of validators whose coercion cannot be expressed in Catalyst with
 exact reference parity (email, ipv6, timedelta, date/time/datetime with
 Python strptime leniency) are built on a vectorized pandas UDF over the
 `validr_spark.pyvalidate` backend — one Arrow batch at a time, never
-row-at-a-time Python.
+row-at-a-time Python.  For email and default-format date/time/datetime
+strings a native screen keeps the canonical values, which pyvalidate would
+return unchanged, out of Python: only the rest cross the Arrow channel.
 
 All expressions are ANSI-mode-safe (Spark 4 default): every fallible cast is
 a try_cast, array access uses `get`/`try_element_at`.
@@ -35,6 +37,7 @@ from pyspark.sql.functions import pandas_udf
 from .errors import VALUE_CLIP, SchemaError
 from .pyvalidate import FALSE_VALUES, TRUE_VALUES, _enum_repr
 from .pyvalidate import Compiler as PyCompiler
+from .pyvalidate import builtin_validators
 
 # ---------------------------------------------------------------------------
 # violation struct helpers
@@ -613,6 +616,56 @@ def build_url(sc, schema, input_type, path):
 # pandas-UDF backend (email / ipv6 / timedelta / date / time / datetime)
 # ---------------------------------------------------------------------------
 
+# Native screens: true only for strings that pyvalidate accepts and returns
+# unchanged, so those rows need no Python.  Strict on purpose: a value the
+# screen rejects still gets the exact answer, from the UDF.
+#   email: ASCII dot-atom local part of at most 64 chars; a lower-case LDH
+#   domain of at least two labels, each 1-63 chars with no '--' (so no
+#   'xn--' A-label, which IDNA decodes) and no edge hyphen, at most 253
+#   chars, its TLD ending in a letter.  No whitespace: pyvalidate strips.
+_EM_SCREEN_ATEXT = r"[a-zA-Z0-9_!#$%\&'*+/=?^`{|}~-]"
+_EM_SCREEN_LABEL = r"(?=[a-z0-9-]{1,63}(?![a-z0-9-]))[a-z0-9]+(?:-[a-z0-9]+)*"
+_EMAIL_SCREEN = (rf"\A(?=[^@]{{1,64}}@[^@]{{1,253}}\z)"
+                 rf"{_EM_SCREEN_ATEXT}+(?:\.{_EM_SCREEN_ATEXT}+)*"
+                 rf"@{_EM_SCREEN_LABEL}(?:\.{_EM_SCREEN_LABEL})+(?<=[a-z])\z")
+#   date/time/datetime in their default formats: exactly the zero-padded
+#   ASCII digits strftime writes back.  strptime also takes single-digit
+#   fields, 1-5 digit %f, lower-case 't'/'z' and non-ASCII digits, and
+#   rewrites them; strftime('%Y') leaves years below 1000 unpadded.
+#   Day-of-month validity is left to Spark's strict string->date cast.
+_SCREEN_DATE = r"[1-9][0-9]{3}-(?:0[1-9]|1[0-2])-(?:0[1-9]|[12][0-9]|3[01])"
+_SCREEN_TIME = r"(?:[01][0-9]|2[0-3]):[0-5][0-9]:[0-5][0-9]"
+_DT_SCREENS = {   # validator -> (default format, pattern, has a date part)
+    "date": ("%Y-%m-%d", _SCREEN_DATE, True),
+    "time": ("%H:%M:%S", _SCREEN_TIME, False),
+    "datetime": ("%Y-%m-%dT%H:%M:%S.%fZ",
+                 rf"{_SCREEN_DATE}T{_SCREEN_TIME}\.[0-9]{{6}}Z", True),
+}
+
+
+def _native_screen(py_compiler, schema, input_type):
+    """``screen(col) -> Column`` for the builtin email and default-format
+    date/time/datetime validators over a string column, else None."""
+    name = schema.validator
+    if (not isinstance(input_type, st.StringType)
+            or py_compiler.validators.get(name)
+            is not builtin_validators.get(name)):
+        return None
+    if name == "email":
+        return lambda col: col.rlike(_EMAIL_SCREEN)
+    fmt, pattern, dated = _DT_SCREENS.get(name, (None, None, False))
+    if fmt is None or schema.params.get("format", fmt) != fmt:
+        return None
+
+    def screen(col):
+        ok = col.rlike(rf"\A{pattern}\z")
+        if dated:   # rejects Feb 29 of a common year, Apr 31, ...
+            ok = ok & col.substr(1, 10).try_cast("date").isNotNull()
+        return ok
+
+    return screen
+
+
 def build_pyudf_rule(sc, schema, input_type, path,
                      output_type=st.StringType(), accept_string=True):
     """Vectorized Arrow-batch backend: exact reference parity for validators
@@ -622,6 +675,15 @@ def build_pyudf_rule(sc, schema, input_type, path,
     One pandas UDF per schema node returning struct<value, message>; the
     Spark-side wrapper still handles null/optional/default/invalid_to, so
     the UDF only sees the core check.
+
+    Email and default-format date/time/datetime over a string column pass
+    through a native screen first (``_native_screen``): a value it accepts
+    is one pyvalidate returns unchanged, so it reaches Python as NULL and
+    keeps its input as its value.  The screen sits in the UDF's argument
+    and nowhere else: there it is evaluated once per row, while a CASE
+    around the UDF changes nothing Python computes (PERF.md Finding 13)
+    and a copy in each of the wrapper's CASE branches is evaluated once
+    per branch (PERF.md Finding 22).
     """
     bare = schema.copy()
     for p in ("invalid_to", "invalid_to_default", "default", "desc",
@@ -664,11 +726,20 @@ def build_pyudf_rule(sc, schema, input_type, path,
                 messages.append(ex.message or f"invalid {validator_name}")
         return pd.DataFrame({"value": values, "message": messages})
 
+    screen = _native_screen(py_compiler, schema, input_type)
+
+    def checked(col):
+        return _udf(col if screen is None else F.when(~screen(col), col))
+
     def coerce(col):
-        return _udf(col)["value"]
+        res = checked(col)
+        if screen is None:
+            return res["value"]
+        # a screened row comes back (NULL, NULL): its value is its input
+        return F.coalesce(res["value"], F.when(res["message"].isNull(), col))
 
     def error(col, pos):
-        msg = _udf(col)["message"]
+        msg = checked(col)["message"]
         return F.when(msg.isNotNull(),
                       mkviol(f"{path}.{validator_name}", pos, msg,
                              value_repr(col, input_type))

@@ -23,7 +23,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 __all__ = ["physical_plan", "assert_plan", "assert_no_python",
-           "assert_no_shuffle", "count_exchanges", "python_passes"]
+           "assert_no_shuffle", "count_exchanges", "plan_count",
+           "python_passes"]
 
 #: markers of Python evaluation nodes.  Spark grows new node kinds per
 #: release (ArrowAggregatePython appeared for grouped-agg pandas UDFs,
@@ -73,6 +74,15 @@ def python_passes(df: DataFrame) -> int:
         if words and any(m in words[0] for m in PYTHON_NODES):
             n += 1
     return n
+
+
+def plan_count(df: DataFrame, needle: str) -> int:
+    """Occurrences of ``needle`` in the OPTIMIZED logical plan, case
+    folded — how many times an expression is planned, e.g.
+    ``"lambdafunction"`` for interpreted lambdas or ``"rlike"`` for
+    regex screens."""
+    return (df._jdf.queryExecution().optimizedPlan().toString().lower()
+            .count(needle.lower()))
 
 
 def count_exchanges(df: DataFrame) -> int:
