@@ -224,6 +224,24 @@ def test_ivf_assignment_deterministic(spark, embs):
     assert len({r["c"] for r in a}) > 1      # cells actually partition
 
 
+def test_null_embedding_is_never_a_candidate(spark):
+    """A NULL embedding gets a NULL bucket flag and a NULL cell, so no
+    search returns it (and no batch holding it fails)."""
+    df = spark.createDataFrame(
+        [(1, [1.0, 0.0]), (2, None), (3, [0.0, 1.0])],
+        "vec_id long, embedding array<double>")
+    q = [1.0, 0.0]
+    # every bucket of a 2-bit signature is probed: all non-NULL rows
+    lsh = similarity.lsh_topk(df, q, k=3, nbits=2, multiprobe=2)
+    assert sorted(r["vec_id"] for r in lsh.collect()) == [1, 3]
+    cells = df.select("vec_id", similarity.ivf_assign_col(
+        F.col("embedding"), [[1.0, 0.0], [0.0, 1.0]]).alias("c"))
+    assert {r["vec_id"]: r["c"] for r in cells.collect()} == \
+        {1: 0, 2: None, 3: 1}
+    ivf = similarity.ivf_topk(df, q, k=3, n_centroids=2, nprobe=2)
+    assert sorted(r["vec_id"] for r in ivf.collect()) == [1, 3]
+
+
 # --- multimodal: byte-bounded repartition ----------------------------------
 
 def test_repartition_by_size_bounds_outlier(spark):

@@ -12,6 +12,7 @@ from validr_spark.operators.encoding import (ENCODING_PATTERNS,
                                              encoding_report, encoding_scan)
 from validr_spark.operators.stats import (MAD_CONSISTENCY, mad_outliers,
                                           robust_center_scale)
+from validr_spark.testing import physical_plan, python_passes
 
 # ---------------------------------------------------------------- encoding
 
@@ -469,8 +470,11 @@ def test_is_nfc_and_normalize(spark):
            for r in df.select("doc_id",
                               is_nfc("text").alias("ok")).collect()}
     assert got == {1: True, 2: True, 3: False, 4: None}
-    fixed = {r["doc_id"]: r["text"]
-             for r in nfc_normalize_text(df).collect()}
+    # one scan, one Python pass: the ASCII screen sits in the argument
+    normalized = nfc_normalize_text(df)
+    assert python_passes(normalized) == 1
+    assert "Union" not in physical_plan(normalized)
+    fixed = {r["doc_id"]: r["text"] for r in normalized.collect()}
     assert fixed[3] == "café"          # recomposed
     assert fixed[1] == "plain ascii" and fixed[4] is None
     # idempotent: normalizing the normalized corpus changes nothing
@@ -484,13 +488,19 @@ def test_nfc_audit_counts(spark):
     df = spark.createDataFrame(
         [("a", "x"), ("a", "é"), ("a", "é"), ("b", None)],
         "source string, text string")
-    rows = {r["source"]: r for r in nfc_audit(df).collect()}
+    audit = nfc_audit(df)
+    assert python_passes(audit) == 1            # one scan, one aggregate
+    assert "Join" not in physical_plan(audit)
+    rows = {r["source"]: r for r in audit.collect()}
     a = rows["a"]
     assert (a["n_docs"], a["n_non_ascii"], a["n_not_nfc"]) == (3, 2, 1)
     assert abs(a["not_nfc_frac"] - 1 / 3) < 1e-6
     b = rows["b"]
     assert (b["n_docs"], b["n_not_nfc"]) == (0, 0)
     assert b["not_nfc_frac"] is None
+    # an empty frame, no groups: one row of NULL sums
+    empty = nfc_audit(df.limit(0), by=None).collect()
+    assert [tuple(r) for r in empty] == [(None, None, 0, None)]
 
 
 def test_clean_text_repairs_and_idempotent(spark):

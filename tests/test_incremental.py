@@ -86,8 +86,8 @@ def test_plan_shape_bloom_bypass(spark, corpus):
     """Scale contract: exactly one anti-join (candidates only); the
     bloom-negative branch reaches the union join-free; and the membership
     UDF is NOT cloned onto the reference branch (InferFiltersFromConstraints
-    would make it an always-true full-corpus UDF pass — the
-    asNondeterministic guard stops that)."""
+    would make it an always-true full-corpus UDF pass — the ``once``
+    barrier around the UDF stops that)."""
     ref, new = corpus
     bloom = build_fingerprint_bloom(ref, expected=200)
     plan = (incremental_new_rows(new, ref, bloom=bloom)

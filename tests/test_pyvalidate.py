@@ -192,6 +192,15 @@ def test_network():
     assert _(T.email)(" 123@163.com ") == "123@163.com"
     with pytest.raises(Invalid):
         _(T.email)("123 @163.com")
+    # RFC 5322 atext has no line break, so a newline ending the local
+    # part is rejected (the expectation rests on the RFC: the reference
+    # checkout is not available to compare against)
+    for bad, chars in (("a\n@b.com", "\n"), ("a.b\n@c.com", "\n, .")):
+        with pytest.raises(Invalid) as ex:
+            _(T.email)(bad)
+        assert ex.value.message == (
+            "The email address contains invalid characters before the "
+            f"@-sign: {chars}.")
     assert _(T.url)("https://github.com") == "https://github.com"
     with pytest.raises(Invalid):
         _(T.url)("github.com")

@@ -193,8 +193,9 @@ def test_native_screen_edges(spark):
         "l" * 64 + "@e.io", "l" * 65 + "@e.io",
         f"a@{lbl63}.com", f"a@{lbl64}.com", "a@b.c1", "a@b.com1", "a@1.2",
         '"a b"@b.com', ".a@b.com", "a.@b.com", "a..b@b.com",
-        " a@b.com ", "a@b.com\n", "a@b", "a@-b.com", "a@b-.com",
-        "a@b.com.", "a@@b.com", "a@b..com", "", None], "string")
+        " a@b.com ", "a@b.com\n", "a\n@b.com", "a@b", "a@-b.com",
+        "a@b-.com", "a@b.com.", "a@@b.com", "a@b..com", "", None],
+        "string")
     old_tz = spark.conf.get("spark.sql.session.timeZone")
     spark.conf.set("spark.sql.session.timeZone", "America/Los_Angeles")
     try:

@@ -15,9 +15,10 @@ Subword Units"; application loop as in GPT-2's public ``bpe()``):
   vocab-sized, never corpus-sized).
 * :func:`apply_bpe` — word pre-segmentation as ONE codegen
   ``regexp_extract_all`` pass, then an Arrow-batched ``pandas_udf``
-  running the greedy merge loop per word with a per-executor word→ids
-  cache (natural-language word frequency is Zipfian: the cache turns
-  the per-row cost into a dict lookup for all but first-sightings).
+  running the greedy merge loop per word with a word→ids cache per
+  Arrow batch (natural-language word frequency is Zipfian: the cache
+  turns the per-row cost into a dict lookup for all but
+  first-sightings).
   The merge-rank and vocab dicts ship to executors via a Spark
   broadcast, not per-task closure pickling.
 * :func:`tokens_match_tokenizer` — the validation rule: recompute
@@ -57,7 +58,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as st
 
-from ._barrier import once
+from ._barrier import arrow_map, once
 
 __all__ = ["WORD_REGEX", "learn_bpe", "learn_bpe_from_counts",
            "bpe_vocab", "bpe_encode_word", "apply_bpe",
@@ -257,20 +258,18 @@ def _word_tokens_expr(spark, segment, table, text_col: str,
     pieces (array<string>) without ``ids``, ids (array<int>, unknown
     pieces → ``unk_id``) with them.  The encoder shared by BPE and
     :func:`unigram.apply_unigram`: ``table`` and ``ids`` are broadcast
-    once, and each Python worker caches pieces per distinct word."""
+    once, and each Arrow batch caches pieces per distinct word (the
+    cache lives for one batch)."""
     bc = spark.sparkContext.broadcast(
         (dict(table), dict(ids) if ids is not None else None))
     out_type = (st.ArrayType(st.IntegerType()) if ids is not None
                 else st.ArrayType(st.StringType()))
 
-    @F.pandas_udf(out_type)
     def _encode(words: pd.Series) -> pd.Series:
         tab, idmap = bc.value
         cache: dict[str, list] = {}
 
         def enc(ws):
-            if ws is None:
-                return None
             out = []
             for w in ws:
                 toks = cache.get(w)
@@ -288,8 +287,9 @@ def _word_tokens_expr(spark, segment, table, text_col: str,
 
         return words.map(enc)
 
-    return _encode(F.regexp_extract_all(F.col(text_col),
-                                        F.lit(WORD_REGEX), 0))
+    return arrow_map(_encode, out_type,
+                     F.regexp_extract_all(F.col(text_col),
+                                          F.lit(WORD_REGEX), 0))
 
 
 def apply_bpe(df: DataFrame, merges: list[tuple[str, str]],
@@ -302,9 +302,9 @@ def apply_bpe(df: DataFrame, merges: list[tuple[str, str]],
     strings (``array<string>``) otherwise.
 
     Scale shape: word segmentation is one codegen regex pass; the
-    merge loop is a single Arrow-batched ``pandas_udf`` (never per-row
+    merge loop is a single Arrow-batched pandas UDF (never per-row
     Python) with the rank/vocab tables broadcast once per executor and
-    a per-worker word cache riding the Zipfian word distribution.
+    a word cache per Arrow batch riding the Zipfian word distribution.
     Zero shuffle — a pure map-side projection, so it composes with any
     downstream agg without moving data.  NULL text → NULL tokens.
 

@@ -7,11 +7,12 @@ all (≳0.9).  Pipelines in the Gopher/RefinedWeb family gate on exactly
 this band.
 
 No Catalyst expression can run DEFLATE, so this is one of the few
-justified Python operators in the engine — an Arrow-batched pandas UDF
-(zlib releases the GIL while compressing, so executor-side worker
-parallelism is real).  Throughput is compression-bound at tens of
-MB/s/core: run it AFTER the cheap Catalyst filters (quality_filter,
-encoding_scan) have dropped the bulk, not as the first pass over 100 TB.
+justified Python operators in the engine — zlib over Arrow batches
+(``_barrier.arrow_map``; zlib releases the GIL while compressing, so
+executor-side worker parallelism is real).  Throughput is
+compression-bound at tens of MB/s/core: run it AFTER the cheap Catalyst
+filters (quality_filter, encoding_scan) have dropped the bulk, not as
+the first pass over 100 TB.
 
 No counterpart in guyskk/validr (no notion of document quality).
 """
@@ -20,9 +21,10 @@ from __future__ import annotations
 
 import zlib
 
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from ._barrier import arrow_map
 
 __all__ = ["compression_ratio", "compression_report"]
 
@@ -36,19 +38,11 @@ def compression_ratio(col, level: int = 6) -> Column:
     """
     col = F.col(col) if isinstance(col, str) else col
 
-    @F.pandas_udf("double")
-    def ratio(s: pd.Series) -> pd.Series:
-        def one(x):
-            if x is None:
-                return None
-            b = x.encode("utf-8", errors="surrogatepass")
-            if not b:
-                return None
-            return len(zlib.compress(b, level)) / len(b)
+    def ratio(x: str):
+        b = x.encode("utf-8", errors="surrogatepass")
+        return len(zlib.compress(b, level)) / len(b) if b else None
 
-        return s.map(one)
-
-    return ratio(col)
+    return arrow_map(lambda s: s.map(ratio), "double", col)
 
 
 def compression_report(df: DataFrame, text_col: str = "text",

@@ -15,13 +15,14 @@ Signatures are pure Catalyst exprs (xxhash64) — no Python in the hot path.
 
 from __future__ import annotations
 
+import hashlib
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
 
-from ._barrier import once
+from ._barrier import arrow_map, once
 
 
 def normalize_text(col):
@@ -439,19 +440,15 @@ def edit_distance_verify(df: DataFrame, candidates: DataFrame,
 def simhash(df: DataFrame, text_col: str = "text",
             id_col: str = "doc_id", nbits: int = 64) -> DataFrame:
     """64-bit SimHash per document, vectorized with numpy over Arrow batches
-    (bit-matrix accumulation has no reasonable Catalyst encoding)."""
-    @pandas_udf("long")
-    def _simhash(texts: pd.Series) -> pd.Series:
+    (bit-matrix accumulation has no reasonable Catalyst encoding).  NULL
+    or blank text hashes to 0."""
+    def _simhash(texts: pd.Series) -> np.ndarray:
         out = np.zeros(len(texts), dtype=np.int64)
         for row, t in enumerate(texts):
-            if not t:
-                continue
             words = t.lower().split()
             if not words:
                 continue
             # stable across processes (python's str hash is salted)
-            import hashlib
-
             hs = np.fromiter(
                 (int.from_bytes(hashlib.blake2b(
                     w.encode(), digest_size=8).digest(), "little")
@@ -463,9 +460,11 @@ def simhash(df: DataFrame, text_col: str = "text",
             for b in np.nonzero(weights > 0)[0]:
                 sh |= np.uint64(1) << np.uint64(b)
             out[row] = np.int64(sh)
-        return pd.Series(out)
+        return out
 
-    return df.select(F.col(id_col), _simhash(F.col(text_col)).alias("simhash"))
+    fp = arrow_map(_simhash, "long", F.col(text_col))
+    return df.select(F.col(id_col),
+                     F.coalesce(fp, F.lit(0)).alias("simhash"))
 
 
 def _simhash_pairs(df: DataFrame, text_col: str, id_col: str, fingerprint,

@@ -3,10 +3,11 @@ bytes, mojibake, zero-width characters.
 
 Web-scale corpora arrive through many decode paths (HTML scrapes, PDF
 extraction, double-decoded databases); a training pipeline has to find the
-rows where that went wrong before they poison the tokenizer.  Everything
-here is a pure Catalyst `regexp_count` projection — whole-stage codegen,
-zero Python per row, zero shuffle for the per-doc scan; the corpus report
-is one partial-aggregated pass whose shuffle carries |group| rows.
+rows where that went wrong before they poison the tokenizer.  Every
+encoding check is a pure Catalyst `regexp_count` projection — whole-stage
+codegen, zero Python per row, zero shuffle for the per-doc scan; the
+corpus report is one partial-aggregated pass whose shuffle carries |group|
+rows.  Only the NFC functions call Python, for the non-ASCII rows.
 
 Pattern dialect: the Java-regex ∩ RE2 subset (same policy as
 operators/pii.py) with `\\x{hhhh}` hex escapes, which both Java and RE2
@@ -34,9 +35,13 @@ adds on top.
 
 from __future__ import annotations
 
-import pandas as pd
+import unicodedata
+from functools import partial
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from ._barrier import arrow_map
 
 __all__ = ["ENCODING_PATTERNS", "encoding_counts", "encoding_scan",
            "encoding_report", "is_nfc", "nfc_normalize_text", "nfc_audit",
@@ -116,7 +121,10 @@ def encoding_report(df: DataFrame, text_col: str = "text",
 
 # --- Unicode normalization-form hygiene -------------------------------------
 
-_ASCII_ONLY = r"\A[\x00-\x7F]*\z"
+def _non_ascii(col: Column) -> Column:
+    """True where ``col`` holds a non-ASCII character, NULL for NULL.
+    ASCII text is NFC by definition, so only these rows need Python."""
+    return col.rlike(r"[^\x00-\x7F]")
 
 
 def is_nfc(col: Column | str) -> Column:
@@ -126,67 +134,32 @@ def is_nfc(col: Column | str) -> Column:
     differently (``é`` as U+00E9 vs ``e``+U+0301), splitting dedup
     fingerprints, enum/equality checks, and token statistics.
 
-    Catalyst has no normalization-form primitive, so this is an
-    Arrow-batched pandas UDF over ``unicodedata.is_normalized`` (a C
-    quick-check; batch-vectorized, never per-row Python dispatch).
-    NULL in → NULL out.
-
-    Scale note (PERF.md Finding 13): wrapping the UDF in an ASCII
-    ``when`` screen does NOT avoid the Python round-trip — Spark
-    extracts Python UDFs out of conditionals and evaluates them on
-    EVERY row (measured: identical wall time with and without the
-    screen).  To genuinely keep a mostly-ASCII corpus out of the Arrow
-    channel, FILTER non-ASCII rows first — :func:`nfc_audit` and
-    :func:`nfc_normalize_text` do exactly that.
+    Catalyst has no normalization-form primitive, so this is
+    ``unicodedata.is_normalized`` (a C quick-check) over Arrow batches
+    (:func:`~._barrier.arrow_map`).  NULL in → NULL out.  Every non-NULL
+    row crosses into Python; to keep the ASCII majority of a corpus out,
+    pass ``F.when(non_ascii, col)`` as the argument, as
+    :func:`nfc_audit` does (PERF.md Finding 22).
     """
     col = F.col(col) if isinstance(col, str) else col
-    return _is_nfc_udf()(col)
+    return arrow_map(
+        lambda s: s.map(partial(unicodedata.is_normalized, "NFC")),
+        "boolean", col)
 
 
-# pandas UDFs built lazily (the decorator needs an active SparkContext
-# to resolve the return type — same pattern as dedup.simhash)
-def _is_nfc_udf():
-    @F.pandas_udf("boolean")
-    def f(s: pd.Series) -> pd.Series:
-        import unicodedata
-        return s.map(lambda x: None if x is None
-                     else unicodedata.is_normalized("NFC", x))
-    return f
-
-
-def _nfc_udf():
-    @F.pandas_udf("string")
-    def f(s: pd.Series) -> pd.Series:
-        import unicodedata
-        return s.map(lambda x: None if x is None
-                     else unicodedata.normalize("NFC", x))
-    return f
-
-
-def nfc_normalize_text(df: DataFrame, text_col: str = "text",
-                       prefilter: bool = True) -> DataFrame:
+def nfc_normalize_text(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Rewrite ``text_col`` into NFC.
 
-    ``prefilter=True`` (default, the mostly-ASCII-corpus path): split the
-    scan — ASCII/NULL rows pass through entirely JVM-side, only the
-    non-ASCII minority is Arrow-shipped to the ``unicodedata.normalize``
-    UDF, then the two branches union.  This reads the source twice, but
-    two codegen scans (with pushdown) are far cheaper than one Arrow
-    round-trip of 100 TB of text; a ``when``-guarded single pass would
-    NOT help — Spark evaluates extracted Python UDFs on every row
-    (PERF.md Finding 13).  ``prefilter=False`` gives the single-scan
-    shape for already-materialized (cached) inputs.  Map-side only, no
-    shuffle; the union preserves no order (none is promised).
+    One projection: ``coalesce(nfc(when(non_ascii, text)), text)``.  The
+    ``when`` sits in the UDF's argument, so ASCII and NULL rows reach
+    Python as NULL and keep their text (PERF.md Finding 22); only the
+    non-ASCII minority is normalized.  One scan, one Python pass, no
+    shuffle, and row order is kept.
     """
     c = F.col(text_col)
-    if not prefilter:
-        fixed = (F.when(c.isNull() | c.rlike(_ASCII_ONLY), c)
-                 .otherwise(_nfc_udf()(c)))
-        return df.withColumn(text_col, fixed)
-    ascii_rows = df.filter(c.isNull() | c.rlike(_ASCII_ONLY))
-    rest = (df.filter(c.isNotNull() & ~c.rlike(_ASCII_ONLY))
-            .withColumn(text_col, _nfc_udf()(c)))
-    return ascii_rows.unionByName(rest)
+    nfc = arrow_map(lambda s: s.map(partial(unicodedata.normalize, "NFC")),
+                    "string", F.when(_non_ascii(c), c))
+    return df.withColumn(text_col, F.coalesce(nfc, c))
 
 
 def nfc_audit(df: DataFrame, text_col: str = "text",
@@ -194,35 +167,25 @@ def nfc_audit(df: DataFrame, text_col: str = "text",
     """Corpus normalization-form report, optionally per ``by`` group:
     docs scanned, non-ASCII docs, docs not in NFC, non-NFC fraction.
 
-    Two aggregates that join on the group key: corpus-wide counts come
-    from a pure-codegen scan; the NFC check runs only on rows FILTERED
-    to non-ASCII first (ASCII is NFC by definition), so the Arrow
-    channel carries the non-ASCII minority, not the corpus — the filter,
-    unlike a ``when`` screen, truly bounds what reaches Python (PERF.md
-    Finding 13).  Both shuffles carry |groups| rows.
+    One scan and one aggregate: the non-NULL and non-ASCII texts
+    summed, and ``count_if(is_nfc(when(non_ascii, text)) = false)``.
+    The ``when`` in :func:`is_nfc`'s argument keeps the ASCII majority
+    out of Python (PERF.md Finding 22).  The shuffle carries |groups|
+    rows.  An empty frame without ``by`` gives one row with NULL
+    ``n_docs``/``n_non_ascii`` (sums, not counts), 0 ``n_not_nfc`` and
+    NULL ``not_nfc_frac``.
     """
     c = F.col(text_col)
+    non_ascii = _non_ascii(c)
     keys = [by] if by else []
-    base = df.select(
-        *keys,
-        c.isNotNull().cast("long").alias("_n"),
-        (c.isNotNull() & ~c.rlike(_ASCII_ONLY)).cast("long").alias("_na"))
-    g = base.groupBy(*keys) if keys else base.groupBy()
-    totals = g.agg(F.sum("_n").alias("n_docs"),
-                   F.sum("_na").alias("n_non_ascii"))
-    nonascii = df.filter(c.isNotNull() & ~c.rlike(_ASCII_ONLY)).select(
-        *keys,
-        F.when(_is_nfc_udf()(c) == False, 1)  # noqa: E712
-        .otherwise(0).alias("_bad"))
-    gb = nonascii.groupBy(*keys) if keys else nonascii.groupBy()
-    bad = gb.agg(F.sum("_bad").alias("n_not_nfc"))
-    joined = (totals.join(bad, keys, "left") if keys
-              else totals.crossJoin(bad))
-    out = joined.select(
-        *keys, "n_docs", "n_non_ascii",
-        F.coalesce("n_not_nfc", F.lit(0)).alias("n_not_nfc"),
-        F.round(F.try_divide(F.coalesce("n_not_nfc", F.lit(0)), "n_docs"),
-                6).alias("not_nfc_frac"))
+    out = df.groupBy(*keys).agg(
+        F.sum(c.isNotNull().cast("long")).alias("n_docs"),
+        F.sum(non_ascii.cast("long")).alias("n_non_ascii"),
+        F.count_if(is_nfc(F.when(non_ascii, c)) == False)  # noqa: E712
+        .alias("n_not_nfc"))
+    out = out.withColumn(
+        "not_nfc_frac",
+        F.round(F.try_divide(F.col("n_not_nfc"), F.col("n_docs")), 6))
     return out.orderBy(*keys) if keys else out
 
 
@@ -243,8 +206,8 @@ def clean_text(df: DataFrame, text_col: str = "text",
     control char between two spaces collapses to ONE space), whitespace
     second, NFC last.  Idempotent: cleaning cleaned text is a no-op
     (asserted in tests).  Everything except the NFC step is codegen
-    `regexp_replace`; NFC routes only the non-ASCII minority through
-    Arrow (:func:`nfc_normalize_text` plan-structure gating).
+    `regexp_replace`; the NFC step sends only the non-ASCII minority to
+    Python (:func:`nfc_normalize_text`'s argument screen).
     """
     c = F.col(text_col)
     if strip_controls:

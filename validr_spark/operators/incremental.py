@@ -39,8 +39,8 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
 
+from validr_spark.operators._barrier import arrow_map, once
 from validr_spark.operators.dedup import normalize_text
 
 __all__ = ["BloomFilter", "bloom_from_keys", "build_fingerprint_bloom",
@@ -159,25 +159,24 @@ def build_fingerprint_bloom(ref: DataFrame, text_col: str = "text", *,
 
 
 def might_contain_udf(spark, bloom: BloomFilter):
-    """Broadcast ``bloom`` once and return a boolean pandas UDF over int64
-    keys: ``bloom.might_contain`` per Arrow batch (no false negatives).
+    """Broadcast ``bloom`` once and return ``col -> Column``: a boolean
+    column over int64 keys, ``bloom.might_contain`` per Arrow batch (no
+    false negatives).
 
-    Marked nondeterministic: InferFiltersFromConstraints would otherwise
-    copy a membership predicate through a join's key equality onto the
-    OTHER branch — where it is always-true by construction (the bloom was
-    built from that side) and would cost a wasted UDF pass over the whole
-    corpus.  The UDF is in fact deterministic; the flag only stops
-    Catalyst from cloning it (PERF.md Finding 7).
+    The column sits behind :func:`~._barrier.once`: without the barrier
+    InferFiltersFromConstraints copies a membership predicate through a
+    join's key equality onto the OTHER branch, where it is always true
+    by construction (the bloom was built from that side) and costs a
+    wasted UDF pass over the whole corpus (PERF.md Finding 7).
     """
     b = spark.sparkContext.broadcast((bloom.m_bits, bloom.k, bloom.bits))
 
-    @pandas_udf("boolean")
-    def _might_contain(keys: pd.Series) -> pd.Series:
+    def might_contain(keys: pd.Series) -> np.ndarray:
         m_bits, k, bits = b.value
         bf = BloomFilter(m_bits, k, bits)
-        return pd.Series(bf.might_contain(keys.to_numpy(dtype=np.int64)))
+        return bf.might_contain(keys.to_numpy(dtype=np.int64))
 
-    return _might_contain.asNondeterministic()
+    return lambda col: once(arrow_map(might_contain, "boolean", col))
 
 
 def incremental_new_rows(new: DataFrame, ref: DataFrame,

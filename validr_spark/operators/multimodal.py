@@ -19,6 +19,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as st
 
+from ._barrier import arrow_map
+
 MEDIA_SCHEMA = st.StructType([
     st.StructField("media_id", st.StringType(), False),
     st.StructField("kind", st.StringType()),       # image | audio | video
@@ -347,48 +349,46 @@ def jpeg_dimensions(df: DataFrame, content_col: str = "content",
     The marker chain has VARIABLE offsets (EXIF/ICC segments of
     arbitrary length precede the frame), so this is the one image format
     whose dimensions genuinely need imperative scanning — an
-    Arrow-batched pandas UDF over at most ``max_scan_bytes`` of each
-    blob (headers live in the first few KB; the cap keeps a 100 MB
-    motion-JPEG from shipping whole).  Feed it the JPEG-routed minority
-    AFTER :func:`image_dimensions` handled the fixed-offset formats
-    JVM-side — same plan-structure rule as PERF.md Finding 13.
+    Arrow-batched pandas UDF over at most ``max_scan_bytes`` of each blob
+    (headers live in the first few KB; the cap keeps a 100 MB
+    motion-JPEG from shipping whole).  The JPEG magic test sits in the
+    UDF's argument, so a non-JPEG blob reaches Python as NULL and comes
+    back ``(NULL, NULL)`` (PERF.md Finding 22); the fixed-offset formats
+    are :func:`image_dimensions`' job, JVM-side.
     """
     import struct as _struct
 
-    cap = max_scan_bytes
+    def sof(buf: bytes):
+        i, nb = 2, len(buf)
+        while i + 9 <= nb:
+            if buf[i] != 0xFF:
+                i += 1
+                continue
+            marker = buf[i + 1]
+            if marker == 0xFF:
+                i += 1          # 0xFF fill byte (T.81 B.1.1.2)
+                continue
+            if marker in (0xD8, 0x01) or 0xD0 <= marker <= 0xD7:
+                i += 2          # standalone markers, no length
+                continue
+            if marker in (0xDA, 0xD9):
+                break           # start-of-scan / end-of-image
+            if marker == 0x00:
+                i += 2          # byte-stuffed 0xFF00: literal data
+                continue
+            (seg_len,) = _struct.unpack(">H", buf[i + 2:i + 4])
+            # SOF0-15 except DHT(C4)/DAC(CC) carry dimensions
+            if 0xC0 <= marker <= 0xCF and marker not in (0xC4, 0xCC):
+                h, w = _struct.unpack(">HH", buf[i + 5:i + 9])
+                return w, h
+            i += 2 + seg_len
+        return None, None
 
-    @F.pandas_udf("struct<width:int, height:int>")
-    def _sof(series: pd.Series) -> pd.DataFrame:
-        ws, hs = [], []
-        for buf in series:
-            w = h = None
-            if buf is not None and buf[:3] == b"\xff\xd8\xff":
-                i, nb = 2, min(len(buf), cap)
-                while i + 9 <= nb:
-                    if buf[i] != 0xFF:
-                        i += 1
-                        continue
-                    marker = buf[i + 1]
-                    if marker == 0xFF:
-                        i += 1          # 0xFF fill byte (T.81 B.1.1.2)
-                        continue
-                    if marker in (0xD8, 0x01) or 0xD0 <= marker <= 0xD7:
-                        i += 2          # standalone markers, no length
-                        continue
-                    if marker in (0xDA, 0xD9):
-                        break           # start-of-scan / end-of-image
-                    if marker == 0x00:
-                        i += 2          # byte-stuffed 0xFF00: literal data
-                        continue
-                    (seg_len,) = _struct.unpack(">H", buf[i + 2:i + 4])
-                    # SOF0-15 except DHT(C4)/DAC(CC) carry dimensions
-                    if 0xC0 <= marker <= 0xCF and marker not in (0xC4, 0xCC):
-                        h, w = _struct.unpack(">HH", buf[i + 5:i + 9])
-                        break
-                    i += 2 + seg_len
-            ws.append(w)
-            hs.append(h)
-        return pd.DataFrame({"width": ws, "height": hs})
-
-    scan = F.substring(F.col(content_col), 1, cap)
-    return df.withColumn("jpeg_dims", _sof(scan))
+    c = F.col(content_col)
+    jpeg = F.hex(F.substring(c, 1, 3)) == "FFD8FF"
+    dims = arrow_map(
+        lambda s: pd.DataFrame([sof(b) for b in s],
+                               columns=["width", "height"]),
+        "struct<width:int, height:int>",
+        F.when(jpeg, F.substring(c, 1, max_scan_bytes)))
+    return df.withColumn("jpeg_dims", dims)

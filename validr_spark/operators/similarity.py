@@ -20,7 +20,8 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
+
+from ._barrier import arrow_map
 
 
 def _dot(a, b):
@@ -174,20 +175,18 @@ def lsh_topk(df: DataFrame, query: list[float], k: int = 10,
     # one Arrow pass computes every table's bucket via numpy matmul and
     # folds the OR; n_tables × nbits unrolled Catalyst dots would compile
     # a pathologically deep codegen expression (measured 16s vs ~2s).
-    @pandas_udf("boolean")
-    def _is_candidate(embs: pd.Series) -> pd.Series:
-        if len(embs) == 0:
-            return pd.Series([], dtype=bool)
+    # A NULL embedding gets a NULL flag: never a candidate.
+    def _is_candidate(embs: pd.Series) -> np.ndarray:
         x = np.stack([np.asarray(v, dtype=np.float64) for v in embs])
         mask = np.zeros(len(embs), dtype=bool)
         for planes_m, probes in tables:
             bits = (x @ planes_m.T) > 0                  # (batch, nbits)
             buckets = (bits * (1 << np.arange(bits.shape[1]))).sum(axis=1)
             mask |= np.isin(buckets, list(probes))
-        return pd.Series(mask)
+        return mask
 
-    return (with_cosine(df.filter(_is_candidate(F.col(emb_col))),
-                        query, emb_col)
+    candidate = arrow_map(_is_candidate, "boolean", F.col(emb_col))
+    return (with_cosine(df.filter(candidate), query, emb_col)
             .select(id_col, "cosine")
             .orderBy(F.col("cosine").desc(), F.col(id_col))
             .limit(k))
@@ -223,20 +222,18 @@ def ivf_centroids(df: DataFrame, n_centroids: int = 64,
 def ivf_assign_col(emb_col, centroids):
     """Cell id (nearest centroid by cosine) as a Column — Arrow-batched
     numpy matmul (k_c × dim dot products per row have no efficient
-    Catalyst encoding; a HOF chain would evaluate interpreted)."""
+    Catalyst encoding; a HOF chain would evaluate interpreted).  A NULL
+    embedding gets a NULL cell."""
     cents = np.ascontiguousarray(centroids, dtype=np.float64)  # (k, d) unit
 
-    @pandas_udf("int")
-    def _assign(embs: pd.Series) -> pd.Series:
-        if len(embs) == 0:
-            return pd.Series([], dtype="int32")
+    def _assign(embs: pd.Series) -> np.ndarray:
         x = np.stack([np.asarray(v, dtype=np.float64) for v in embs])
         n = np.linalg.norm(x, axis=1, keepdims=True)
         n[n == 0] = 1.0
         sims = (x / n) @ cents.T                       # (batch, k)
-        return pd.Series(np.argmax(sims, axis=1).astype("int32"))
+        return np.argmax(sims, axis=1).astype("int32")
 
-    return _assign(emb_col)
+    return arrow_map(_assign, "int", emb_col)
 
 
 def ivf_topk(df: DataFrame, query: list[float], k: int = 10,

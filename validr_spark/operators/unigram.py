@@ -12,8 +12,8 @@ Scale shape mirrors :func:`bpe.apply_bpe` exactly: training reduces
 the corpus to a word-count dict first (explode → hash-agg ≤ distinct
 words, bounded ``max_words`` collect) and runs EM driver-side over
 vocab-sized state; application is ONE codegen ``regexp_extract_all``
-word split + ONE Arrow-batched ``pandas_udf`` with the piece table
-broadcast and a per-executor word cache — zero shuffle, and the
+word split + ONE Arrow-batched pandas UDF with the piece table
+broadcast and a word cache per Arrow batch — zero shuffle, and the
 Finding-18 nondeterministic barrier ships inside the operator.
 
 Determinism: EM is pure arithmetic over sorted dicts (rerun-identical);

@@ -709,10 +709,10 @@ def ipv6_validator(compiler, output_object=False):
 # pyx:1100-1105).  The messages are part of the observable contract
 # (Invalid.message), so they are reproduced verbatim.
 _EM_ATEXT = r"a-zA-Z0-9_!#\$%&'\*\+\-/=\?\^`\{\|\}~"
-_EM_DOT_ATOM = re.compile("[" + _EM_ATEXT + r"]+(?:\.[" + _EM_ATEXT + r"]+)*$")
+_EM_DOT_ATOM = re.compile("[" + _EM_ATEXT + r"]+(?:\.[" + _EM_ATEXT + r"]+)*\Z")
 _EM_ATEXT_UTF8 = _EM_ATEXT + "\u0080-\U0010FFFF"
 _EM_DOT_ATOM_UTF8 = re.compile(
-    "[" + _EM_ATEXT_UTF8 + r"]+(?:\.[" + _EM_ATEXT_UTF8 + r"]+)*$")
+    "[" + _EM_ATEXT_UTF8 + r"]+(?:\.[" + _EM_ATEXT_UTF8 + r"]+)*\Z")
 _EM_ONE_ATEXT = re.compile("[" + _EM_ATEXT + "]")
 _EM_HOST_LABEL = r"(?:(?:[a-zA-Z0-9][a-zA-Z0-9\-]*)?[a-zA-Z0-9])"
 _EM_HOSTNAME = re.compile(_EM_HOST_LABEL + r"(?:\." + _EM_HOST_LABEL + r")*$")

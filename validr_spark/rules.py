@@ -32,9 +32,8 @@ import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql import types as st
-from pyspark.sql.functions import pandas_udf
 
-from .errors import VALUE_CLIP, SchemaError
+from .errors import VALUE_CLIP, Invalid, SchemaError
 from .pyvalidate import FALSE_VALUES, TRUE_VALUES, _enum_repr
 from .pyvalidate import Compiler as PyCompiler
 from .pyvalidate import builtin_validators
@@ -672,8 +671,9 @@ def build_pyudf_rule(sc, schema, input_type, path,
     whose coercion Catalyst can't express (IDNA email, ipv6 compression,
     Go-duration strings, Python-strptime leniency).
 
-    One pandas UDF per schema node returning struct<value, message>; the
-    Spark-side wrapper still handles null/optional/default/invalid_to, so
+    One Arrow-batched UDF per schema node (``_barrier.arrow_map`` over a
+    per-value ``py_validate`` -> ``(value, message)``); the Spark-side
+    wrapper still handles null/optional/default/invalid_to, so
     the UDF only sees the core check.
 
     Email and default-format date/time/datetime over a string column pass
@@ -685,6 +685,8 @@ def build_pyudf_rule(sc, schema, input_type, path,
     and a copy in each of the wrapper's CASE branches is evaluated once
     per branch (PERF.md Finding 22).
     """
+    from .operators._barrier import arrow_map
+
     bare = schema.copy()
     for p in ("invalid_to", "invalid_to_default", "default", "desc",
               "object"):
@@ -698,38 +700,29 @@ def build_pyudf_rule(sc, schema, input_type, path,
     ])
     validator_name = schema.validator
 
-    @pandas_udf(ret_type)
-    def _udf(series: pd.Series) -> pd.DataFrame:
-        from .errors import Invalid  # local import: runs on executors
+    def check(raw):
+        try:
+            v = py_validate(raw)
+        except Invalid as ex:
+            return None, ex.message or f"invalid {validator_name}"
+        # NaN-rejection mirror of the expression backend (see
+        # build_float's DOCUMENTED DIVERGENCE): pyvalidate keeps the
+        # reference's accept-NaN artifact, and Arrow's NaN→null
+        # conversion would silently turn it into a 'required' misreport
+        # here — reject it explicitly.
+        if isinstance(v, float) and v != v:
+            return None, f"invalid {validator_name}"
+        return v, None
 
-        values, messages = [], []
-        for raw in series:
-            if raw is None:
-                values.append(None)
-                messages.append(None)
-                continue
-            try:
-                v = py_validate(raw)
-                # NaN-rejection mirror of the expression backend (see
-                # build_float's DOCUMENTED DIVERGENCE): pyvalidate keeps
-                # the reference's accept-NaN artifact, and Arrow's
-                # NaN→null conversion would silently turn it into a
-                # 'required' misreport here — reject it explicitly.
-                if isinstance(v, float) and v != v:
-                    values.append(None)
-                    messages.append(f"invalid {validator_name}")
-                else:
-                    values.append(v)
-                    messages.append(None)
-            except Invalid as ex:
-                values.append(None)
-                messages.append(ex.message or f"invalid {validator_name}")
-        return pd.DataFrame({"value": values, "message": messages})
+    def check_batch(series: pd.Series) -> pd.DataFrame:
+        return pd.DataFrame([check(raw) for raw in series],
+                            columns=["value", "message"])
 
     screen = _native_screen(py_compiler, schema, input_type)
 
     def checked(col):
-        return _udf(col if screen is None else F.when(~screen(col), col))
+        return arrow_map(check_batch, ret_type,
+                         col if screen is None else F.when(~screen(col), col))
 
     def coerce(col):
         res = checked(col)
